@@ -229,8 +229,8 @@ class CheckpointManager:
             reader.close()
 
     def _append_lineage(self, rec: dict) -> None:
-        # lock: legacy concurrent channels note() from worker threads; the
-        # rewrite must serialize (atomic full rewrite, not append — append
+        # lock: a CheckpointManager may be shared by worker threads that
+        # note() concurrently; the rewrite must serialize (atomic full rewrite, not append — append
         # is unsupported on object stores, a small metadata rewrite is not)
         with self._lineage_lock:
             self._lineage_rows.append(rec)

@@ -10,8 +10,8 @@ reference implementation (see SURVEY.md §7):
                          independently against the index (rabin_dedup.c:1026-1036)
 - simhash_bits  = 64   : 64-bit similarity keys (rabin/global/index.c:500-505)
 - simhash_radius = 3   : hamming ball for "similar" blocks
-- tau_normal / tau_extra = 0.6 / 0.4 : DELTA_NORMAL / DELTA_EXTRA similarity
-                         thresholds (rabin/rabin_dedup.h:153-159, rabin_dedup.c:97-99)
+- tau_extra = 0.4      : DELTA_EXTRA similarity threshold
+                         (rabin/rabin_dedup.h:153-159, rabin_dedup.c:97-99)
 - substring_min_len = 2048 : 1 << RAB_BLK_MIN_BITS(11) (rabin/rabin_dedup.h:88)
 """
 
@@ -51,12 +51,8 @@ class PipelineConfig:
     simhash_bits: int = 64
     simhash_radius: int = 3          # max hamming distance
     simhash_blocks: int = 4          # pigeonhole blocks (radius+1)
-    tau_normal: float = 0.6          # DELTA_NORMAL verify threshold
     tau_extra: float = 0.4           # DELTA_EXTRA verify threshold
     substring_min_len: int = 2048    # min verbatim shared span (chars)
-    min_doc_len: int = 32            # docs shorter than this skip fuzzy dedup
-                                     # (analog of small-chunk filter,
-                                     # rabin_dedup.c:500-510)
     cjk_shingle_chars: int = 8       # CJK shingle width in CODEPOINTS (P6
                                      # adaptive config): 16 BYTES spans only
                                      # ~5 Han chars in UTF-8, so zh/ja/ko
@@ -97,29 +93,6 @@ class PipelineConfig:
                                      # is unaffected). Drops are logged,
                                      # never silent (A7 bounded index,
                                      # rabin/global/index.c:539-547 analog)
-    packed_bucket_keys: bool = True  # fused candidate path packs (ch, key)
-                                     # into one long (channel in the low 2
-                                     # bits) so every candidate-stage
-                                     # exchange ships/sorts 1 key column
-                                     # instead of 2; False = the unpacked
-                                     # r3 layout (A/B lever)
-    r_gt1_band_screen: bool = False  # library lever for DIRECT callers
-                                     # of verify.prefilter_candidates at
-                                     # r>1: keep pairs whose proven floor
-                                     # band_hits*r >= min_matches without
-                                     # shipping minhash arrays (kept set
-                                     # provably identical — parity test).
-                                     # The PIPELINE no longer runs the
-                                     # signature prefilter at r>1 at all:
-                                     # banding at r>1 is itself the
-                                     # precision screen (junk collides
-                                     # w.p. ~J^r per band) and the τ-gate
-                                     # verify catches the residue —
-                                     # measured r5 on 60k docs: screen-on
-                                     # 98-118s, screen-off-with-prefilter
-                                     # 78-102s, no-prefilter 48-50s for
-                                     # the b=10/r=2 leg, recall gate 1.00
-                                     # throughout.
     curation_gate: bool = False      # run the webtext keep/drop gate
                                      # (analysis/webtext.quality_gate)
                                      # ahead of signatures: rejected docs
@@ -128,35 +101,11 @@ class PipelineConfig:
                                      # checkpoint dir. Off by default —
                                      # dedup semantics (golden fixtures)
                                      # are defined over the full corpus.
-    fused_channels: bool = True      # generate all three candidate channels
-                                     # (minhash bands / simhash blocks /
-                                     # winnow anchors) through ONE fused
-                                     # bucket shuffle (operators/fused.py).
-                                     # False = legacy per-channel jobs,
-                                     # kept for A/B and fault isolation.
-    concurrent_channels: bool | str = "auto"
-                                     # legacy (fused_channels=False) path
-                                     # only: run the three channel jobs
-                                     # from worker threads. True = always
-                                     # concurrent (the right default on a
-                                     # multi-node cluster, where each
-                                     # executor brings its own memory
-                                     # bus); False = sequential; "auto" =
-                                     # concurrent only when
-                                     # defaultParallelism < 16 — a
-                                     # SINGLE-BOX heuristic: on one
-                                     # 16-physical-core SMT box, three
-                                     # concurrent pandas-UDF jobs at 32
-                                     # slots oversubscribe the memory bus
-                                     # (measured 2-3x slowdown). Set
-                                     # explicitly on real clusters.
     verify_degree_cap: int = 64      # max verified candidate neighbors per doc
                                      # (top-D by minhash overlap). A clique of m
                                      # boilerplate docs yields O(m*D) verified
                                      # edges instead of m^2/2 while staying one
                                      # connected cluster; drops are logged.
-    shuffle_partitions: int = 32
-    arrow_batch_rows: int = 2048     # arrow maxRecordsPerBatch for wide arrays
 
     # --- hashing seeds (deterministic, fixed) ---
     seed: int = 42
@@ -179,12 +128,7 @@ class PipelineConfig:
                                      # the confirm they save; see
                                      # verify.confirm_substring_pairs)
 
-    # --- verification ---
-    verify_tau: float = 0.4          # emit edges with exact jaccard >= this;
-                                     # `kind` column distinguishes >=0.6 vs >=0.4
-
     checkpoint_dir: str = "/tmp/pcompress_spark_ckpt"
-    checkpoint_format: str = "parquet"  # "iceberg" on a real cluster
 
     def __post_init__(self) -> None:
         assert self.lsh_bands * self.lsh_rows == self.minhash_k, (
@@ -195,9 +139,6 @@ class PipelineConfig:
         )
         assert self.substring_screen_mode in ("on", "off", "auto"), (
             "substring_screen_mode must be on/off/auto"
-        )
-        assert self.concurrent_channels in (True, False, "auto"), (
-            "concurrent_channels must be True/False/'auto'"
         )
 
     def use_substring_screen(self) -> bool:
@@ -212,7 +153,7 @@ class PipelineConfig:
 
     # size-typed fields that accept "8k"/"2M"-style CLI literals
     _SIZE_FIELDS = frozenset(
-        ("substring_min_len", "min_doc_len", "max_bucket_docs")
+        ("substring_min_len", "max_bucket_docs")
     )
 
     @classmethod
@@ -238,25 +179,11 @@ class PipelineConfig:
                     parsed[k] = float(v)
                 elif t in ("bool", bool):
                     parsed[k] = _parse_bool(k, v)
-                elif t == "bool | str":
-                    # union fields (concurrent_channels): bool literals
-                    # coerce, sentinels like "auto" pass through
-                    low = v.lower()
-                    parsed[k] = (
-                        _parse_bool(k, v)
-                        if low in _BOOL_WORDS
-                        else v
-                    )
                 else:
                     parsed[k] = v
             else:
                 parsed[k] = v
         return cls(**parsed)
-
-
-_BOOL_WORDS = frozenset(
-    ("1", "true", "yes", "on", "0", "false", "no", "off")
-)
 
 
 def _parse_bool(field: str, v: str) -> bool:

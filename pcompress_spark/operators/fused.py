@@ -21,6 +21,10 @@ the per-channel joins did.
 Round 4 shrank the post-aggregation fan-in (the remaining 2->8-core
 efficiency sink, BENCH_SCALING r3: candidates stage 0.68-0.79 on the
 degraded-memory VM class):
+  - (ch, key) is packed into ONE long bucket key, so every candidate-stage
+    exchange ships and sorts one 8-byte column instead of two (kept on
+    the r4 A/B: candidates_gen 33.6-34.3 s packed vs 37.4 s unpacked at
+    local[8], candidate rows byte-identical);
   - the per-pair groupBy carries TWO aggregation buffers (a count and a
     bit_or'd channel bitmask) instead of five boolean max's;
   - the hot-key correction joins broadcast the per-doc hot-key arrays
@@ -31,11 +35,14 @@ degraded-memory VM class):
   - the simhash hamming-confirm join runs ONLY over pairs some simhash
     bucket actually proposed — band-noise pairs (the ~99% majority at
     b=20/r=1) never reach it;
-  - `fused_prefiltered` additionally folds the signature prefilter
-    (operators/verify.py semantics, r==1 band-count mode) into the same
-    pass: junk pairs are dropped straight off the persisted count frame,
-    before ANY wide join, and the drop log is produced here so drops
-    stay non-silent.
+  - at r == 1 the signature prefilter (verify.prefilter_candidates
+    semantics) is folded into the same pass: junk pairs are dropped
+    straight off the persisted count frame, before ANY wide join, and the
+    drop log is produced here so drops stay non-silent.
+
+`candidates` is the ONE generator: the batch pipeline and the incremental
+index (add_batch probe, update_batch member relabel) both call it, so the
+per-pair semantics — and the r == 1 vs r > 1 rule — live in one place.
 
 Reference analog: the reference likewise keeps ONE global index probed by
 every key kind (exact checksum, KMV sketch values, similarity hash —
@@ -98,90 +105,69 @@ def fused_keyed_rows(reps: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return mh.unionByName(sh).unionByName(wn)
 
 
-def fused_candidates(
-    reps: DataFrame, cfg: PipelineConfig
-) -> tuple[DataFrame, DataFrame]:
-    """reps -> (candidates(id_a, id_b, channels, mh_overlap, is_star),
-    hot_log(ch, key, n_docs)).
+def _ch():
+    """Channel tag of the packed bucket key `k2` (its low 2 bits)."""
+    return F.col("k2").bitwiseAND(F.lit(3))
 
-    One bucket_pairs pass over the fused keyed frame; the per-pair groupBy
-    recovers each channel's verdict:
-      - minhash: band co-occurrence count == signature overlap when r == 1
-        (the reference's segmented-index hit count, rabin_dedup.c:1042-1058);
-        for r > 1 band counts are NOT signature overlap (a J=0.8 pair
-        expects ~1.3 matches at b=4/r=5), so mh_overlap is emitted null and
-        the prefilter falls back to the exact array-intersect path.
+
+def candidates(
+    rows: DataFrame,
+    sims: DataFrame,
+    cfg: PipelineConfig,
+    probe_ids: DataFrame | None = None,
+    min_matches: int = 3,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Keyed rows (doc_id, ch, key) -> (candidates(id_a, id_b, channels,
+    mh_overlap, is_star), hot_log(ch, key, n_docs),
+    prefilter_drop_log(doc_id, n_dropped)).
+
+    `sims` is a (doc_id, simhash) lookup covering every doc in `rows`.
+    Without `probe_ids` the pairs come from the `bucket_pairs` self-join
+    over all rows (batch pipeline). With a (doc_id) frame of probe docs
+    they come from a bucket join of those docs against every member of
+    the buckets they sit in — exactly the bucket_pairs pairs that have
+    >= 1 probe endpoint, at a cost ∝ probe keys x bucket width
+    (incremental add_batch / update_batch). Both shapes then run one
+    tail, which recovers each channel's verdict from one per-pair groupBy:
+
+      - minhash: band co-occurrence count. Exact under the star
+        downgrade: an over-cap bucket suppresses member-member emission,
+        so star rows are EXCLUDED from the count and every pair instead
+        adds |hot_keys(a) ∩ hot_keys(b)| — the over-cap band buckets both
+        docs sit in. Each co-occurring band is counted exactly once (r2
+        ADVICE), so the prefilter needs no star exemption.
       - simhash: bucket co-occurrence is only the pigeonhole screen — the
         exact hamming distance is confirmed here with codegen bit_count,
-        exactly as the standalone channel does (operators/simhash.py).
-      - winnow: anchor co-occurrence (byte-confirmation happens later in
-        verify_edges, as before).
-    Pairs whose only proposer was a simhash bucket that fails the hamming
-    ball are dropped (same as the standalone channel's post-join filter).
+        as the standalone channel does (operators/simhash.py); a pair
+        whose only proposer fails the hamming ball is dropped.
+      - winnow: anchor co-occurrence (byte-confirmed later in
+        verify_edges).
 
-    Exact counts under the star downgrade: an over-cap MINHASH bucket
-    suppresses member-member pair emission, so raw band co-occurrence
-    would UNDERCOUNT signature overlap for any pair sharing a hot bucket
-    (r2 ADVICE). Correction: star rows are EXCLUDED from the count and
-    every pair instead adds `|hot_keys(a) ∩ hot_keys(b)|` — the number of
-    over-cap band buckets both docs sit in. Each band where the pair
-    co-occurs is counted exactly once — via its pair row when the bucket
-    was emitted, via the hot-key intersect when it was star-downgraded —
-    so `mh_overlap` IS the signature overlap for every pair and the
-    prefilter needs no star exemption.
+    The r rule. r == 1: band hash == minhash value, so the count IS the
+    signature overlap (the reference's segmented-index hit count,
+    rabin_dedup.c:1042-1058); mh_overlap carries it and the signature
+    prefilter at `min_matches` is folded in (output-equivalent to
+    verify.prefilter_candidates over the unfiltered pairs — asserted by
+    tests/test_fused.py). r > 1: each co-occurring band certifies r
+    agreeing positions in a disjoint signature slice, so mh_overlap =
+    (co-occurring bands) * r is a PROVEN FLOOR on the overlap — the
+    degree cap's rank. Banding is itself the precision screen there (a junk pair
+    collides in a band w.p. ~J^r) and every kept pair is exact-Jaccard
+    verified, so no prefilter runs (measured r5: its exact array
+    intersect cost more than the sub-1% junk it removed) and the drop
+    log is empty. Reference analog: the -EE regime trusts verification
+    at a looser sketch threshold (rabin_dedup.h:153-159).
     """
-    out, hot, _ = _fused_impl(reps, cfg, min_matches=None)
-    return out, hot
-
-
-def fused_prefiltered(
-    reps: DataFrame, cfg: PipelineConfig, min_matches: int = 3
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """fused_candidates + the signature prefilter fused into one pass:
-    reps -> (kept, hot_log, prefilter_drop_log(doc_id, n_dropped)).
-
-    Output-equivalent to
-        verify.prefilter_candidates(fused_candidates(reps, cfg)[0], reps,
-                                    min_matches, overlap_from_bands=True)
-    (asserted by tests/test_fused.py) but drops band-noise pairs straight
-    off the narrow persisted count frame, BEFORE the hot-key / simhash /
-    prefilter joins ever see them: only pairs that could still pass —
-    proposed by a non-minhash channel, carrying >= min_matches band hits,
-    or hot-key-correctable (both endpoints in over-cap buckets) — continue
-    into the wide tail. Requires cfg.lsh_rows == 1 (band co-occurrence ==
-    signature overlap); r > 1 configs must verify overlap exactly via
-    verify.prefilter_candidates(overlap_from_bands=False)."""
-    if cfg.lsh_rows != 1:
-        raise ValueError(
-            "fused_prefiltered requires r == 1 banding; use "
-            "fused_candidates + prefilter_candidates(overlap_from_bands="
-            "False) for r > 1"
-        )
-    return _fused_impl(reps, cfg, min_matches=min_matches)
-
-
-def _fused_impl(
-    reps: DataFrame, cfg: PipelineConfig, min_matches: int | None
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
-    rows = fused_keyed_rows(reps, cfg)
-    if cfg.packed_bucket_keys:
-        # pack (ch, key) into ONE long: channel in the low 2 bits, key
-        # shifted up 2 (its top 2 bits drop — it is a hash, and the
-        # within-channel collision odds move from 2^-64 to 2^-62; the
-        # candidate superset is verified downstream either way). Every
-        # candidate-stage exchange then ships and sorts one 8-byte key
-        # instead of (tinyint, long) — measured as the 2->8-core
-        # efficiency sink on memory-bandwidth-limited boxes
-        # (BENCH_SCALING r4: candidates stage 0.67-0.69 vs >=0.93
-        # elsewhere). Cross-channel collisions stay impossible: the ch
-        # bits differ.
-        keyed = rows.select(
-            "doc_id",
-            F.shiftleft("key", 2)
-            .bitwiseOR(F.col("ch").cast("long"))
-            .alias("k2"),
-        )
-        pairs, hotp = bucket_pairs(
+    # pack (ch, key) into ONE long: channel in the low 2 bits, key shifted
+    # up 2 (its top 2 bits drop — it is a hash; within-channel collision
+    # odds move from 2^-64 to 2^-62 and the candidate superset is verified
+    # downstream either way). Cross-channel collisions stay impossible.
+    keyed = rows.select(
+        "doc_id",
+        F.shiftleft("key", 2).bitwiseOR(F.col("ch").cast("long")).alias("k2"),
+    )
+    if probe_ids is None:
+        pairs, hot = bucket_pairs(
             keyed,
             ["k2"],
             cap=cfg.max_bucket_docs,
@@ -189,79 +175,42 @@ def _fused_impl(
             salt_groups=cfg.salt_buckets,
             carry=["k2"],
         )
-        _ch2 = F.col("k2").bitwiseAND(F.lit(3)).cast("tinyint")
-        pairs = pairs.withColumn("ch", _ch2).drop("k2")
-        # unpack for the hot log's public (ch, key, n_docs) shape.
-        # CAVEAT (r4 ADVICE): under packed keys the logged `key` is the
-        # LOW-62-BIT REMNANT of the original bucket key (its top 2 bits
-        # were dropped by the shiftleft pack), i.e. an OPAQUE bucket id —
-        # stable within a run for dedup/counting, but NOT equal to any
-        # channel's actual band/block/anchor key and NOT comparable
-        # across the packed/unpacked A/B lever or to incremental-index
-        # keys. Consumers must treat it as an identifier only; `ch` and
-        # `n_docs` remain exact. (Recovering the original key would take
-        # an extra full pass over the exploded rows frame — not worth it
-        # for a drop-accounting log.)
-        hot = hotp.select(
-            _ch2.alias("ch"),
-            F.shiftrightunsigned("k2", 2).alias("key"),
-            "n_docs",
-        )
-        hot_mh_k2 = hotp.filter(
-            F.col("k2").bitwiseAND(F.lit(3)) == CH_MINHASH
-        ).select("k2")
-        hot_docs = tracked_persist(
-            keyed.filter(F.col("k2").bitwiseAND(F.lit(3)) == CH_MINHASH)
-            .join(hot_mh_k2, "k2", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set("k2").alias("_hk"))
-        )
     else:
-        pairs, hot = bucket_pairs(
-            rows,
-            ["ch", "key"],
-            cap=cfg.max_bucket_docs,
-            salt_min=cfg.salt_min,
-            salt_groups=cfg.salt_buckets,
-            carry=["ch"],
-        )
-        # rows was persisted inside bucket_pairs (same plan -> cache hit)
-        hot_mh = hot.filter(F.col("ch") == CH_MINHASH).select("key")
-        hot_docs = tracked_persist(
-            rows.filter(F.col("ch") == CH_MINHASH)
-            .join(hot_mh, "key", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.collect_set("key").alias("_hk"))
-        )
+        pairs, hot = _probe_pairs(keyed, probe_ids, cfg.max_bucket_docs)
+
+    # keyed was persisted by the pair shape (same plan -> cache hit)
+    hot_docs = tracked_persist(
+        keyed.filter(_ch() == CH_MINHASH)
+        .join(hot.filter(_ch() == CH_MINHASH).select("k2"), "k2", "left_semi")
+        .groupBy("doc_id")
+        .agg(F.collect_set("k2").alias("_hk"))
+    )
     # metadata-scale action (docs in over-cap buckets); gates the
     # broadcast so a boilerplate-degenerate corpus degrades to a shuffle
     # join instead of an oversized broadcast
     n_hot = hot_docs.count()
 
+    is_mh = _ch() == CH_MINHASH
     flag = (
         F.when(
-            F.col("ch") == CH_MINHASH,
+            is_mh,
             F.when(F.col("is_star"), F.lit(_FL_MH | _FL_STAR)).otherwise(
                 F.lit(_FL_MH)
             ),
         )
-        .when(F.col("ch") == CH_SIMHASH, F.lit(_FL_SH))
+        .when(_ch() == CH_SIMHASH, F.lit(_FL_SH))
         .otherwise(F.lit(_FL_WN))
     )
     agg = pairs.groupBy("id_a", "id_b").agg(
-        F.sum(
-            F.when((F.col("ch") == CH_MINHASH) & ~F.col("is_star"), 1).otherwise(0)
-        )
+        F.sum(F.when(is_mh & ~F.col("is_star"), 1).otherwise(0))
         .cast("int")
         .alias("_mh_cnt"),
         F.bit_or(flag).cast("int").alias("_fl"),
     )
     if n_hot == 0:
-        # no over-cap bucket anywhere (the common case away from
-        # boilerplate-degenerate corpora): the hot-key correction is
-        # identically zero — skip its two joins over the full pair
-        # frame rather than paying a no-op pass (r4 VERDICT task #4:
-        # candidate-stage fixed cost).
+        # no over-cap minhash bucket (the common case away from
+        # boilerplate-degenerate corpora): the correction is identically
+        # zero — skip its two joins over the full pair frame
         corrected = tracked_persist(agg)
     else:
         ha = hot_docs.select(
@@ -289,21 +238,24 @@ def _fused_impl(
     def _has(bit: int):
         return F.col("_fl").bitwiseAND(F.lit(bit)) != 0
 
-    dropped_early = None
-    surv = corrected
-    if min_matches is not None:
-        # a pair failing this was proposed ONLY by minhash bands (no sh/wn
-        # bit) with a final count below the gate — the prefilter drops it
-        # unconditionally, so drop it here, before any wide join
-        keep0 = (
-            _has(_FL_SH | _FL_WN) | (F.col("_mh_cnt") >= F.lit(min_matches))
-        )
-        dropped_early = corrected.filter(~keep0)
-        surv = corrected.filter(keep0)
+    if cfg.lsh_rows == 1:
+        overlap = F.col("_mh_cnt")
+        # a pair failing `early` was proposed ONLY by minhash bands with a
+        # count below the gate — drop it before any wide join; `late` is
+        # the residual gate for a pair whose simhash bucket then failed
+        # the hamming ball (it falls back to minhash-only)
+        early = _has(_FL_SH | _FL_WN) | (F.col("_mh_cnt") >= min_matches)
+        late = (
+            F.coalesce(F.col("mh_overlap"), F.lit(0)) >= min_matches
+        ) | (F.col("channels") != F.array(F.lit("minhash")))
+    else:
+        overlap = F.col("_mh_cnt") * cfg.lsh_rows
+        # constant gates: Catalyst prunes the drop log to an empty relation
+        early = late = F.lit(True)
+    surv = corrected.filter(early)
 
     # hamming confirm only where some simhash bucket proposed the pair —
     # band-noise pairs never join the simhash table
-    sims = reps.select("doc_id", "simhash")
     sa = sims.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("_sim_a"))
     sb = sims.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("_sim_b"))
     sh_rows = (
@@ -320,7 +272,6 @@ def _fused_impl(
     scored = sh_rows.unionByName(
         surv.filter(~_has(_FL_SH)).withColumn("_sh_ok", F.lit(False))
     )
-
     channels = F.array_compact(
         F.array(
             F.when(_has(_FL_MH), F.lit("minhash")),
@@ -328,51 +279,94 @@ def _fused_impl(
             F.when(_has(_FL_WN), F.lit("winnow")),
         )
     )
-    if cfg.lsh_rows == 1:
-        mh_overlap = F.when(_has(_FL_MH), F.col("_mh_cnt"))
-    else:
-        mh_overlap = F.lit(None)
-    sel = [
-        F.col("id_a"),
-        F.col("id_b"),
-        F.col("channels"),
-        mh_overlap.cast("int").alias("mh_overlap"),
-        _has(_FL_STAR).alias("is_star"),
-    ]
-    if cfg.lsh_rows != 1:
-        # r > 1: band co-occurrence is NOT signature overlap, so
-        # mh_overlap stays null — but the exact band-hit count is still
-        # a NECESSARY-condition floor (each co-occurring band certifies
-        # r agreeing signature positions), which the prefilter's screen
-        # uses to skip the array-shipping exact intersect for pairs that
-        # already provably pass (r4 VERDICT task #5).
-        sel.append(
-            F.when(_has(_FL_MH), F.col("_mh_cnt"))
-            .cast("int")
-            .alias("band_hits")
-        )
+    # pairs left with NO channel (hamming-failed, never minhash-proposed)
+    # are not candidates at all — dropped silently, as the standalone
+    # simhash channel's post-join filter does
     out = (
         scored.withColumn("channels", channels)
         .filter(F.size("channels") > 0)
-        .select(*sel)
+        .select(
+            "id_a",
+            "id_b",
+            "channels",
+            F.when(_has(_FL_MH), overlap).cast("int").alias("mh_overlap"),
+            _has(_FL_STAR).alias("is_star"),
+        )
     )
-    if min_matches is None:
-        return out, hot, None
-
-    # residual prefilter (verify.prefilter_candidates semantics): a
-    # survivor whose simhash bucket failed the hamming ball can fall back
-    # to minhash-only with a sub-gate count. Pairs left with NO channel
-    # (hamming-failed, never minhash-proposed) are silently dropped
-    # exactly as fused_candidates always did.
-    keep = (
-        F.coalesce(F.col("mh_overlap"), F.lit(0)) >= F.lit(min_matches)
-    ) | (F.col("channels") != F.array(F.lit("minhash")))
-    kept = out.filter(keep)
-    dropped_ids = (
-        dropped_early.select("id_a", "id_b")
-        .unionByName(out.filter(~keep).select("id_a", "id_b"))
+    dropped = (
+        corrected.filter(~early)
+        .select("id_a", "id_b")
+        .unionByName(out.filter(~late).select("id_a", "id_b"))
         .select(F.explode(F.array("id_a", "id_b")).alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_dropped"))
     )
-    return kept, hot, dropped_ids
+    # the hot log's `key` is the packed key's low-62-bit remnant: an
+    # opaque bucket id (exact `ch` and `n_docs`), not a channel's
+    # band/block/anchor key — never join it against index keys
+    hot_log = hot.select(
+        _ch().cast("tinyint").alias("ch"),
+        F.shiftrightunsigned("k2", 2).alias("key"),
+        "n_docs",
+    )
+    return out.filter(late), hot_log, dropped
+
+
+def _probe_pairs(
+    keyed: DataFrame, probe_ids: DataFrame, cap: int
+) -> tuple[DataFrame, DataFrame]:
+    """bucket_pairs restricted to pairs with >= 1 probe endpoint:
+    (pairs(id_a, id_b, k2, is_star), hot(k2, n_docs)).
+
+    In-cap buckets pair each probe doc with every other member, one row
+    per shared bucket; over-cap buckets keep the same star downgrade
+    (member <-> bucket min doc). Bucket widths are counted over ALL rows,
+    so a bucket's cap verdict matches the self-join's."""
+    probe_ids = probe_ids.select("doc_id")
+    keyed = tracked_persist(keyed)
+    stats = tracked_persist(
+        keyed.groupBy("k2").agg(
+            F.count(F.lit(1)).alias("_n"), F.min("doc_id").alias("_rep")
+        )
+    )
+    hot = stats.filter(F.col("_n") > cap).select(
+        "k2", F.col("_n").alias("n_docs")
+    )
+    joined = keyed.join(stats, "k2")
+    incap = joined.filter(F.col("_n") <= cap).select("k2", "doc_id")
+    probe = incap.join(probe_ids, "doc_id", "left_semi").select(
+        "k2", F.col("doc_id").alias("_p")
+    )
+    pairs = (
+        probe.join(incap.select("k2", F.col("doc_id").alias("_m")), "k2")
+        .filter(F.col("_p") != F.col("_m"))
+        .select(
+            F.least("_p", "_m").alias("id_a"),
+            F.greatest("_p", "_m").alias("id_b"),
+            "k2",
+        )
+        .distinct()  # probe-probe pairs arrive once from each side
+        .withColumn("is_star", F.lit(False))
+    )
+    # metadata-scale gate (1-row agg over the persisted stats): a
+    # batch-scale probe usually has NO over-cap bucket; skipping the star
+    # joins then removes their shuffles from the per-batch floor, and the
+    # empty hot log folds the caller's hot-key correction away
+    if hot.count() == 0:
+        return pairs, hot.filter(F.lit(False))
+    star_all = joined.filter(
+        (F.col("_n") > cap) & (F.col("doc_id") != F.col("_rep"))
+    ).select(F.col("_rep").alias("id_a"), F.col("doc_id").alias("id_b"), "k2")
+    star = (
+        star_all.join(
+            probe_ids.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi"
+        )
+        .unionByName(
+            star_all.join(
+                probe_ids.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi"
+            )
+        )
+        .distinct()
+        .withColumn("is_star", F.lit(True))
+    )
+    return pairs.unionByName(star), hot

@@ -37,12 +37,13 @@ Batch algorithm (`add_batch`):
  1. identity tier — batch texts whose sha already exists in `sigs` join
     their delegate's cluster (no fuzzy work, no index growth);
  2. probe — fresh delegates' fused keys join `keys` on (ch, key); the
-    distinct old doc_ids hit are the "touched slice";
- 3. re-run the UNCHANGED candidate/verify machinery
-    (fused_candidates -> prefilter -> degree cap -> verify_edges) over
-    fresh ∪ touched delegates only, then drop old-old pairs (already
-    clustered) — cost scales with the slice, semantics identical to the
-    full pipeline by construction;
+    stored rows of every bucket hit are the "touched slice";
+ 3. bipartite candidates — the pipeline's own generator
+    (fused.candidates, probe shape) pairs each fresh delegate with the
+    members of its buckets, so no old-old pair is ever generated; then
+    degree cap -> verify_edges over those pairs only. Cost scales with
+    the slice; per-pair semantics are the full pipeline's by
+    construction (one function computes both);
  4. connected components over (batch exact edges) ∪ (identity edges) ∪
     (verified fuzzy edges with old endpoints relabeled to their RESOLVED
     cluster ids): component min is then exactly the full-run min-doc_id
@@ -515,30 +516,15 @@ class IncrementalDedupIndex:
         bkeys: DataFrame,
         fresh: DataFrame,
         old_keys: DataFrame | None,
-        cfg: PipelineConfig,
     ) -> DataFrame:
         """candidates(id_a, id_b, channels, mh_overlap, is_star) for every
-        pair with >= 1 fresh endpoint — the incremental analog of
-        fused_candidates with identical per-pair semantics:
-
-        - in-cap buckets: all (fresh x member) pairs, one row per shared
-          (ch, key), so the minhash groupBy count IS band co-occurrence;
-        - over-cap buckets: member <-> bucket-rep star pairs only (the
-          same downgrade bucket_pairs applies), restricted to pairs
-          touching a fresh doc; star rows are excluded from the band
-          count and compensated by the shared hot-key intersect, exactly
-          as operators/fused.py does, so mh_overlap stays the EXACT
-          signature overlap;
-        - hamming confirmation for simhash-proposed pairs via the stored
-          simhash of both endpoints.
-
-        Cost ∝ |fresh keys| x in-cap bucket width (<= max_bucket_docs),
-        independent of corpus size; the corpus contributes only its
-        stored keyed rows for the probed keys. Old docs' signatures and
-        winnow anchors are read from the index, never recomputed.
-        """
-        from pcompress_spark.operators.fused import CH_MINHASH, CH_SIMHASH, CH_WINNOW
-
+        pair with >= 1 fresh endpoint: fused.candidates in its probe shape
+        (the same per-pair semantics as the batch pipeline) over the fresh
+        keys plus the STORED corpus keys of every bucket they hit. Old
+        docs' signatures and winnow anchors are read from the index, never
+        recomputed; cost ∝ |fresh keys| x bucket width, independent of
+        corpus size."""
+        rows = bkeys
         if old_keys is not None:
             probe = bkeys.select("ch", "key").distinct()
             matched_old = old_keys.join(probe, ["ch", "key"], "left_semi").select(
@@ -546,7 +532,7 @@ class IncrementalDedupIndex:
             )
             # crash-recovery docs are in BOTH sides (they stay in `fresh`,
             # so bkeys recomputes their keys, AND their stored keys sit in
-            # old_keys) — drop the stored copy or per-bucket _n counts
+            # old_keys) — drop the stored copy or per-bucket counts see
             # them twice, which can flip an in-cap bucket over
             # max_bucket_docs and alter pair generation vs a clean run
             matched_old = matched_old.join(
@@ -557,165 +543,16 @@ class IncrementalDedupIndex:
             # replays a doc's keys can never inflate bucket counts
             matched_old = matched_old.dropDuplicates(["doc_id", "ch", "key"])
             rows = bkeys.unionByName(matched_old)
-        else:
-            rows = bkeys
         rows = tracked_persist(rows)
-        stats = tracked_persist(
-            rows.groupBy("ch", "key").agg(
-                F.count(F.lit(1)).alias("_n"), F.min("doc_id").alias("_rep")
-            )
+        # stored simhashes pulled for probed docs only — never a
+        # full-corpus shuffle
+        sims = self._sim_lookup(fresh).join(
+            rows.select("doc_id").distinct(), "doc_id", "left_semi"
         )
-        # metadata-scale gate (1-row agg over the persisted stats frame,
-        # which downstream materializes anyway): batch-scale probes
-        # usually have NO over-cap bucket, and skipping the star/hot-key
-        # machinery then removes ~5 shuffles from the per-batch floor.
-        # The over-cap path itself is byte-identical when taken.
-        n_hot = stats.filter(
-            F.col("_n") > cfg.max_bucket_docs
-        ).count()
-        joined = rows.join(stats, ["ch", "key"])
-        incap = joined.filter(F.col("_n") <= cfg.max_bucket_docs).select(
-            "ch", "key", "doc_id"
+        cands, _hot, _pre = fused.candidates(
+            rows, sims, self.cfg, probe_ids=fresh.select("doc_id")
         )
-        fr = incap.join(fresh.select("doc_id"), "doc_id", "left_semi").select(
-            "ch", "key", F.col("doc_id").alias("fid")
-        )
-        pr = (
-            fr.join(
-                incap.select("ch", "key", F.col("doc_id").alias("oid")),
-                ["ch", "key"],
-            )
-            .filter(F.col("fid") != F.col("oid"))
-            .select(
-                "ch",
-                "key",
-                F.least("fid", "oid").alias("id_a"),
-                F.greatest("fid", "oid").alias("id_b"),
-            )
-            .distinct()  # fresh-fresh pairs arrive once from each side
-            .withColumn("is_star", F.lit(False))
-        )
-        if n_hot > 0:
-            hotj = joined.filter(F.col("_n") > cfg.max_bucket_docs)
-            star_all = hotj.filter(F.col("doc_id") != F.col("_rep")).select(
-                "ch",
-                "key",
-                F.least("doc_id", "_rep").alias("id_a"),
-                F.greatest("doc_id", "_rep").alias("id_b"),
-            )
-            fa = fresh.select(F.col("doc_id").alias("id_a"))
-            fb = fresh.select(F.col("doc_id").alias("id_b"))
-            star = (
-                star_all.join(fa, "id_a", "left_semi")
-                .unionByName(star_all.join(fb, "id_b", "left_semi"))
-                .distinct()
-                .withColumn("is_star", F.lit(True))
-            )
-            pr = pr.unionByName(star)
-        agg = pr.groupBy("id_a", "id_b").agg(
-            F.sum(
-                F.when(
-                    (F.col("ch") == CH_MINHASH) & ~F.col("is_star"), 1
-                ).otherwise(0)
-            )
-            .cast("int")
-            .alias("_mh_cnt"),
-            F.max(F.col("ch") == CH_MINHASH).alias("_mh_any"),
-            F.max(F.col("ch") == CH_SIMHASH).alias("_sh_bucket"),
-            F.max(F.col("ch") == CH_WINNOW).alias("_wn"),
-            F.max((F.col("ch") == CH_MINHASH) & F.col("is_star")).alias(
-                "is_star"
-            ),
-        )
-        # exact band count under the star downgrade: add the shared
-        # over-cap minhash bucket keys back (operators/fused.py:86-98).
-        # Skipped entirely when no bucket is over cap (n_hot gate) — the
-        # correction is then identically zero.
-        if n_hot > 0:
-            hot_mh = stats.filter(
-                (F.col("_n") > cfg.max_bucket_docs)
-                & (F.col("ch") == CH_MINHASH)
-            ).select("ch", "key")
-            hot_docs = (
-                rows.join(hot_mh, ["ch", "key"], "left_semi")
-                .groupBy("doc_id")
-                .agg(F.collect_set("key").alias("_hk"))
-            )
-            ha = hot_docs.select(
-                F.col("doc_id").alias("id_a"), F.col("_hk").alias("_hk_a")
-            )
-            hb = hot_docs.select(
-                F.col("doc_id").alias("id_b"), F.col("_hk").alias("_hk_b")
-            )
-            agg = (
-                agg.join(ha, "id_a", "left")
-                .join(hb, "id_b", "left")
-                .withColumn(
-                    "_mh_cnt",
-                    F.col("_mh_cnt")
-                    + F.when(
-                        F.col("_hk_a").isNotNull()
-                        & F.col("_hk_b").isNotNull(),
-                        F.size(F.array_intersect("_hk_a", "_hk_b")),
-                    ).otherwise(F.lit(0)),
-                )
-                .drop("_hk_a", "_hk_b")
-            )
-        # hamming confirm for simhash-proposed pairs (stored sketches,
-        # pulled for pair endpoints only — never a full-corpus shuffle)
-        agg = tracked_persist(agg)
-        eids = (
-            agg.select(F.col("id_a").alias("doc_id"))
-            .unionByName(agg.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-        )
-        sims = self._sim_lookup(fresh).join(eids, "doc_id", "left_semi")
-        sa = sims.select(F.col("doc_id").alias("id_a"), F.col("simhash").alias("_sa"))
-        sb = sims.select(F.col("doc_id").alias("id_b"), F.col("simhash").alias("_sb"))
-        scored = (
-            agg.join(sa, "id_a")
-            .join(sb, "id_b")
-            .withColumn(
-                "_sh_ok",
-                F.col("_sh_bucket")
-                & (
-                    F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-                    <= cfg.simhash_radius
-                ),
-            )
-        )
-        channels = F.array_compact(
-            F.array(
-                F.when(F.col("_mh_any"), F.lit("minhash")),
-                F.when(F.col("_sh_ok"), F.lit("simhash")),
-                F.when(F.col("_wn"), F.lit("winnow")),
-            )
-        )
-        mh_overlap = (
-            F.when(F.col("_mh_any"), F.col("_mh_cnt"))
-            if cfg.lsh_rows == 1
-            else F.lit(None)
-        )
-        sel = [
-            F.col("id_a"),
-            F.col("id_b"),
-            F.col("channels"),
-            mh_overlap.cast("int").alias("mh_overlap"),
-            F.col("is_star"),
-        ]
-        if cfg.lsh_rows != 1:
-            # exact band co-occurrence count — the prefilter's r>1
-            # necessary-condition floor (see fused.py / verify.py)
-            sel.append(
-                F.when(F.col("_mh_any"), F.col("_mh_cnt"))
-                .cast("int")
-                .alias("band_hits")
-            )
-        return (
-            scored.withColumn("channels", channels)
-            .filter(F.size("channels") > 0)
-            .select(*sel)
-        )
+        return cands
 
     def _sim_lookup(self, fresh: DataFrame) -> DataFrame:
         """(doc_id, simhash) for fresh delegates ∪ the stored corpus."""
@@ -749,43 +586,27 @@ class IncrementalDedupIndex:
         fresh: DataFrame,
         old_sigs: DataFrame | None,
     ) -> DataFrame:
-        """prefilter -> degree cap -> exact verification: the shared tail
-        of add_batch's probe and update_batch's member relabel. Returns
+        """degree cap -> exact verification: the shared tail of
+        add_batch's probe and update_batch's member relabel. Returns
         verified (src, dst) edges.
 
-        PLAN BARRIERS (capped/reps_act localCheckpoints): the batch runs
-        as ONE lazy tree (the full pipeline truncates lineage at durable
-        checkpoints; there are none here) — without a cut the CC rounds
-        re-plan the whole tree and AQE's per-update plan stringification
-        alone goes super-linear (measured: a 2-doc batch hung 10+ minutes
-        in explainString)."""
-        cfg = self.cfg
-        if cfg.lsh_rows == 1:
-            filtered, _pre = verify.prefilter_candidates(
-                cands, None, overlap_from_bands=True
-            )
-            capped, _cap = verify.cap_candidate_degree(
-                filtered, cfg.verify_degree_cap
-            )
-            capped = capped.localCheckpoint(eager=True)
-            # shallow subtrees from here on — persist, don't barrier
-            reps_act = tracked_persist(
-                self._endpoint_reps(capped, fresh, old_sigs)
-            )
-        else:
-            reps_act = self._endpoint_reps(
-                cands, fresh, old_sigs
-            ).localCheckpoint(eager=True)
-            # r>1: banding is the precision screen — skip the signature
-            # prefilter entirely (see pipeline._candidates r>1 comment);
-            # every surviving pair is exact-Jaccard-verified below.
-            if "band_hits" in cands.columns:
-                cands = cands.drop("band_hits")
-            capped, _cap = verify.cap_candidate_degree(
-                cands, cfg.verify_degree_cap
-            )
-            capped = capped.localCheckpoint(eager=True)
-        return verify.verify_edges(capped, reps_act, cfg).select("src", "dst")
+        PLAN BARRIER (capped localCheckpoint): the batch runs as ONE lazy
+        tree (the full pipeline truncates lineage at durable checkpoints;
+        there are none here) — without a cut the CC rounds re-plan the
+        whole tree and AQE's per-update plan stringification alone goes
+        super-linear (measured: a 2-doc batch hung 10+ minutes in
+        explainString)."""
+        capped, _cap = verify.cap_candidate_degree(
+            cands, self.cfg.verify_degree_cap
+        )
+        capped = capped.localCheckpoint(eager=True)
+        # shallow subtrees from here on — persist, don't barrier
+        reps_act = tracked_persist(
+            self._endpoint_reps(capped, fresh, old_sigs)
+        )
+        return verify.verify_edges(capped, reps_act, self.cfg).select(
+            "src", "dst"
+        )
 
     # ---------------------------------------------------------- add_batch
     def add_batch(self, pages: DataFrame) -> DataFrame:
@@ -981,11 +802,10 @@ class IncrementalDedupIndex:
                     "doc_id", "ch", "key"
                 )
             )
-            cands = self._bipartite_candidates(bkeys, fresh, old_keys, cfg)
-            # reps rows (with text) are pulled ONLY for candidate
-            # endpoints — prefilter (r==1 band-count mode) and the degree
-            # cap need no row data; for r>1 prefilter recomputes overlap
-            # from minhash arrays, so pull before filtering then
+            cands = self._bipartite_candidates(bkeys, fresh, old_keys)
+            # reps rows (with text) are pulled ONLY for capped candidate
+            # endpoints — the candidate generator and the degree cap need
+            # no row data
             self._phase("incr:verify")
             fuzzy = tracked_persist(
                 self._verified_fuzzy(cands, fresh, old_sigs)
@@ -1421,8 +1241,10 @@ class IncrementalDedupIndex:
                     F.col("parent_id").alias("dst"),
                 )
             if keysD is not None:
-                mcands = self._bipartite_candidates(
-                    keysD.localCheckpoint(eager=True), D, None, cfg
+                mcands, _hot, _pre = fused.candidates(
+                    keysD.localCheckpoint(eager=True),
+                    D.select("doc_id", "simhash"),
+                    cfg,
                 )
                 fuzzy_m = self._verified_fuzzy(mcands, D, None)
             else:

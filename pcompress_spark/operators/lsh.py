@@ -21,7 +21,7 @@ def band_explode(reps: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
     r == 1: band hash is the minhash value itself (reference semantics).
     r > 1: hash of the signature slice (generic banding).
-    Docs below min_doc_len (nshingles == 0) are excluded — the analog of
+    Docs shorter than one shingle (nshingles == 0) are excluded — the analog of
     the reference's small-chunk dedup skip (rabin_dedup.c:500-510).
     """
     base = reps.filter(F.col("nshingles") > 0)

@@ -62,99 +62,35 @@ def attach_texts(
 
 
 def prefilter_candidates(
-    candidates: DataFrame,
-    reps: DataFrame,
-    min_matches: int = 3,
-    overlap_from_bands: bool = True,
-    band_rows: int = 1,
+    candidates: DataFrame, min_matches: int = 3
 ) -> tuple[DataFrame, DataFrame]:
     """Signature-level pre-filter before exact verification — the
     distributed analog of the reference probing the full checksum before
-    memcmp (rabin_dedup.c:1132-1180).
+    memcmp (rabin_dedup.c:1132-1180). The production path folds this
+    into fused.candidates at r == 1; this standalone form is its parity
+    reference (tests/test_fused.py).
 
     b=20/r=1 banding (reference semantics) is noisy: an unrelated pair with
     background J≈0.02 still collides in ≥1 band with P≈0.33, so at corpus
     scale most candidates are junk. Keep a minhash-channel pair only when
-    >= min_matches of its K=20 signature values agree (signatures are
-    already shuffled with reps — no text movement). Recall cost at the
-    τ=0.4 boundary: P[Binomial(20, 0.4) < 3] ≈ 0.4%, and such pairs are
-    usually also proposed by the simhash/winnow channels, which bypass
-    this filter (their own verification is already strong).
+    its `mh_overlap` (signature overlap: the corrected band co-occurrence
+    count at r == 1) reaches min_matches of K=20. Recall cost at the τ=0.4
+    boundary: P[Binomial(20, 0.4) < 3] ≈ 0.4%, and such pairs are usually
+    also proposed by the simhash/winnow channels, which bypass this filter.
 
     Pairs proposed by any non-minhash channel (`channels` has more than
-    'minhash') are exempt from the min-matches gate: their own
-    verification (hamming ball / verbatim anchor match) is already strong.
-    Star-downgraded pairs need NO exemption: the channels compute exact
-    signature overlap even under the star downgrade (star rows excluded
-    from the count, shared over-cap buckets added back via hot-key
-    intersect — operators/fused.py / lsh.py). A blanket is_star exemption
-    was measured at 171k junk pairs (5x the verify set) on a 100k-doc
-    boilerplate corpus; gating on the exact value keeps a genuinely
-    similar pair (J >= 0.4) w.p. ~0.996 and cuts that junk.
-    `overlap_from_bands=False` (required when cfg.lsh_rows != 1, where
-    band co-occurrence is NOT signature overlap) recomputes overlap
-    exactly via array_intersect on the minhash signatures — but only for
-    the pairs whose fate the exact value can still change. When the
-    candidate frame carries `band_hits` (the exact band co-occurrence
-    count, emitted by the fused/bipartite channels for r > 1), each
-    co-occurring band certifies `band_rows` agreeing signature
-    positions in disjoint band slices, so band_hits * band_rows is a
-    PROVEN FLOOR on the exact overlap: pairs whose floor already meets
-    min_matches — and pairs any non-minhash channel proposed — keep
-    without shipping their signature arrays (their mh_overlap is the
-    floor, a conservative rank for the degree cap); only minhash-only
-    pairs below the floor pay the array join (r4 VERDICT task #5 — the
-    r>1 leg's array-intersect premium).
+    'minhash') are exempt: their own verification (hamming ball /
+    verbatim anchor match) is already strong. Star-downgraded pairs need
+    NO exemption: the overlap stays exact under the star downgrade (star
+    rows excluded from the count, shared over-cap buckets added back via
+    hot-key intersect — operators/fused.py / lsh.py). A blanket is_star
+    exemption was measured at 171k junk pairs (5x the verify set) on a
+    100k-doc boilerplate corpus.
 
     Returns (kept, drop_log(doc_id, n_dropped)) — like the bucket cap and
     degree cap, drops are logged, never silent.
     """
-    if "mh_overlap" in candidates.columns and overlap_from_bands:
-        # overlap measured upstream as (corrected) band co-occurrence
-        # (r == 1: band hash == minhash value, so the count == signature
-        # overlap). Null (non-minhash channels) stays null: the degree
-        # cap ranks those channel-aware.
-        scored = tracked_persist(candidates)
-        keep = (
-            (F.coalesce(F.col("mh_overlap"), F.lit(0)) >= min_matches)
-            | (F.col("channels") != F.array(F.lit("minhash")))
-        )
-        dropped = (
-            scored.filter(~keep)
-            .select(F.explode(F.array("id_a", "id_b")).alias("doc_id"))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_dropped"))
-        )
-        return scored.filter(keep), dropped
-    if "band_hits" in candidates.columns:
-        floor_ok = (
-            F.coalesce(F.col("band_hits"), F.lit(0)) * band_rows
-            >= min_matches
-        )
-        exempt = F.col("channels") != F.array(F.lit("minhash"))
-        cands = tracked_persist(candidates)
-        screened = cands.filter(floor_ok | exempt).withColumn(
-            "mh_overlap",
-            F.when(
-                F.col("band_hits").isNotNull(),
-                F.col("band_hits") * band_rows,
-            ).cast("int"),
-        )
-        need_exact = cands.filter(~(floor_ok | exempt))
-        exact = tracked_persist(
-            _true_signature_overlap(need_exact, reps)
-        )
-        kept = screened.unionByName(
-            exact.filter(F.col("mh_overlap") >= min_matches)
-        ).drop("band_hits")
-        dropped = (
-            exact.filter(F.col("mh_overlap") < min_matches)
-            .select(F.explode(F.array("id_a", "id_b")).alias("doc_id"))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_dropped"))
-        )
-        return kept, dropped
-    scored = tracked_persist(_true_signature_overlap(candidates, reps))
+    scored = tracked_persist(candidates)
     keep = (
         (F.coalesce(F.col("mh_overlap"), F.lit(0)) >= min_matches)
         | (F.col("channels") != F.array(F.lit("minhash")))
@@ -168,37 +104,12 @@ def prefilter_candidates(
     return scored.filter(keep), dropped
 
 
-def _true_signature_overlap(pairs: DataFrame, reps: DataFrame) -> DataFrame:
-    """Replace `mh_overlap` with the exact K-value signature overlap
-    (array_intersect on the minhash arrays). The sig table is semi-joined
-    down to just the docs appearing in `pairs` first, so the join moves
-    O(|pairs|) signatures, not O(corpus) — scale-safe even when `pairs`
-    is a small re-score subset of a 100-TB run."""
-    docs_in = (
-        pairs.select(F.col("id_a").alias("doc_id"))
-        .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    sig = reps.select("doc_id", "minhash").join(docs_in, "doc_id", "left_semi")
-    a = sig.select(F.col("doc_id").alias("id_a"), F.col("minhash").alias("mh_a"))
-    b = sig.select(F.col("doc_id").alias("id_b"), F.col("minhash").alias("mh_b"))
-    return (
-        pairs.drop("mh_overlap")
-        .join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn(
-            "mh_overlap",
-            F.size(F.array_intersect("mh_a", "mh_b")).cast("int"),
-        )
-        .drop("mh_a", "mh_b")
-    )
-
-
 def cap_candidate_degree(
     candidates: DataFrame, cap: int, null_rank: int = 3
 ) -> tuple[DataFrame, DataFrame]:
     """Keep a pair when EITHER endpoint ranks it among its own top-`cap`
-    candidates (by minhash overlap desc, then partner id) — the per-node
+    candidates (by minhash overlap desc — the exact overlap at r == 1,
+    the proven floor (co-occurring bands x r) at r > 1 — then partner id) — the per-node
     analog of the bucket cap. A boilerplate clique of m docs drops from
     m²/2 verified pairs to <= 2·cap·m while every doc retains its
     min(cap, degree) strongest links, so uniform cliques stay one

@@ -11,9 +11,8 @@ scaling bottleneck):
                 ▼      ONE fused bucket shuffle carries all three channels
             [candidates]  (minhash bands + simhash blocks + winnow anchors
                 │          → fused keyed frame → salted self-join → per-pair
-                │          agg → signature prefilter → degree cap);
-                │          cfg.fused_channels=False runs the legacy
-                │          per-channel jobs (optionally concurrent)
+                │          agg → hamming confirm → degree cap; the r=1
+                │          signature prefilter is folded into the agg)
                 ▼
              [edges]   exact ∪ verified fuzzy (jaccard / substring confirm)
                 │
@@ -35,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pcompress_spark.cache import CacheScope, tracked_persist
 from pcompress_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pcompress_spark.checkpoint import CheckpointManager
-from pcompress_spark.operators import exact, fused, lsh, simhash, substring, verify
+from pcompress_spark.operators import exact, fused, verify
 from pcompress_spark.operators.components import cluster_labels
 
 
@@ -108,8 +107,7 @@ class DedupPipeline:
             # delegates (one per distinct text, text included) feed all three
             # channels plus verification — persist once, in-session.
             # Materialized lazily and exactly ONCE (first builder that needs
-            # it): concurrent channel jobs racing to populate a cold cache
-            # each recompute the upstream join, tripling the work.
+            # it), so a resumed run that skips a stage never pays for it.
             reps = tracked_persist(exact.representatives(sigs, groups))
             reps_ready = False
 
@@ -178,70 +176,34 @@ class DedupPipeline:
 
     # ---------------------------------------------------------- candidates
     def _candidates(self, reps: DataFrame) -> DataFrame:
-        """Candidate generation + merge + prefilter + degree cap.
-
-        Default (cfg.fused_channels): ONE fused bucket shuffle carries all
-        three channels (operators/fused.py) — one persist, one stats
-        groupBy, one salted self-join, one per-pair aggregation. The
-        legacy path (fused_channels=False) runs the three channels as
-        separate Spark jobs, optionally concurrent."""
+        """Candidate generation + degree cap: ONE fused bucket shuffle
+        carries all three channels (operators/fused.py — the same
+        generator the incremental index probes with), then every doc
+        keeps its top-`verify_degree_cap` partners."""
         cfg = self.cfg
         t0 = time.time()
-        hot = None
-        if cfg.fused_channels and cfg.lsh_rows == 1:
-            # one fused explode -> bucket_pairs pass for all three
-            # channels WITH the signature prefilter folded in: band-noise
-            # junk (the ~99% majority) is dropped off the narrow persisted
-            # count frame before the hot-key/simhash/prefilter joins ever
-            # shuffle it, and the single junk-stream persist lives inside
-            # fused (persisting it twice — merge + prefilter — was a
-            # measured ~20% of the candidates barrier at 100k docs).
-            filtered, hot, pre_dropped = fused.fused_prefiltered(reps, cfg)
-        elif cfg.fused_channels:
-            # r > 1: the banding ITSELF is the precision screen — a junk
-            # pair (background J≈0.02) collides in a band w.p. ~J^r, so
-            # at r=2 the candidate stream is ~99.6% real vs ~67% junk at
-            # r=1. The signature prefilter was built for r=1's junk rate;
-            # at r>1 its exact array-intersect costs more than the junk
-            # it removes (measured r5: the r2 leg's candidates stage
-            # carried the intersect for a sub-1% junk fraction), and any
-            # pair it would drop fails the exact-Jaccard τ gate in
-            # verify anyway — skipping it is recall-safe (golden b=10/
-            # r=2 gate pins 1.00). cfg.r_gt1_band_screen remains the
-            # library-level lever for prefilter_candidates callers.
-            # Reference analog: the -EE regime trusts verification at a
-            # looser sketch threshold (rabin_dedup.h:153-159).
-            merged, hot = fused.fused_candidates(reps, cfg)
-            if "band_hits" in merged.columns:
-                merged = merged.drop("band_hits")
-            filtered = merged
-            pre_dropped = self.spark.createDataFrame(
-                [], "doc_id long, n_dropped bigint"
-            )
-        else:
-            merged = self._candidates_legacy(reps)
-            filtered, pre_dropped = verify.prefilter_candidates(
-                merged, reps, overlap_from_bands=(cfg.lsh_rows == 1)
-            )
+        filtered, hot, pre_dropped = fused.candidates(
+            fused.fused_keyed_rows(reps, cfg),
+            reps.select("doc_id", "simhash"),
+            cfg,
+        )
         capped, cap_dropped = verify.cap_candidate_degree(
             filtered, cfg.verify_degree_cap
         )
         # one sequential pass materializes the capped set AND the persisted
-        # scored/ranked frames it reads through; the drop logs, hot-bucket
+        # count/ranked frames it reads through; the drop logs, hot-bucket
         # logs (and the checkpoint write that follows) then scan warm
-        # caches instead of re-running the merge/prefilter joins once per
+        # caches instead of re-running the candidate joins once per
         # consumer
         capped = tracked_persist(capped)
         n = capped.count()
         self.ckpt.note("candidates_gen", int((time.time() - t0) * 1000), n)
-        logs = []
-        if hot is not None:
-            hot = tracked_persist(hot)
-            hot.count()  # materialize once before concurrent readers
-            logs += [
-                (name, hot.filter(F.col("ch") == ch_val).drop("ch"))
-                for ch_val, name in fused.CHANNEL_NAMES.items()
-            ]
+        hot = tracked_persist(hot)
+        hot.count()  # materialize once before concurrent readers
+        logs = [
+            (name, hot.filter(F.col("ch") == ch_val).drop("ch"))
+            for ch_val, name in fused.CHANNEL_NAMES.items()
+        ]
         logs += [("prefilter", pre_dropped), ("degree_cap", cap_dropped)]
         # each log is a tiny independent job reading warm caches; run them
         # concurrently (FAIR scheduler) — sequential submission was ~15s of
@@ -249,45 +211,6 @@ class DedupPipeline:
         with ThreadPoolExecutor(max_workers=len(logs)) as ex:
             list(ex.map(lambda nf: self._log_hot(*nf), logs))
         return capped
-
-    def _candidates_legacy(self, reps: DataFrame) -> DataFrame:
-        """Three per-channel Spark jobs, optionally concurrent (threads
-        share the SparkContext; with the FAIR scheduler their stages
-        interleave, so the cluster is busy even while any one channel sits
-        in a narrow phase)."""
-        cfg = self.cfg
-
-        def _run(name: str, fn):
-            t0 = time.time()
-            c, hot = fn()
-            c = tracked_persist(c)
-            n = c.count()  # materialize this channel's candidates in-thread
-            self._log_hot(name, hot)
-            self.ckpt.note(
-                f"channel_{name}", int((time.time() - t0) * 1000), n
-            )
-            return c
-
-        channels = [
-            ("lsh", lambda: lsh.lsh_candidates(reps, cfg)),
-            ("simhash", lambda: simhash.simhash_candidates(reps, cfg)),
-            ("winnow", lambda: substring.substring_candidates(reps, cfg)),
-        ]
-        # cfg.concurrent_channels: True on multi-node clusters (each
-        # executor brings its own memory bus); "auto" applies the
-        # single-box heuristic — three concurrent pandas-UDF jobs at >= 16
-        # local slots oversubscribe one socket's memory bus (measured
-        # 2-3x per-channel slowdown at local[32], 16 phys cores + SMT).
-        if cfg.concurrent_channels == "auto":
-            concurrent = self.spark.sparkContext.defaultParallelism < 16
-        else:
-            concurrent = bool(cfg.concurrent_channels)
-        workers = len(channels) if concurrent else 1
-        with ThreadPoolExecutor(max_workers=workers) as ex:
-            frames = list(
-                ex.map(lambda nf: _run(nf[0], nf[1]), channels)
-            )
-        return verify.merge_candidates(*frames)
 
     # ---------------------------------------------------------- assignments
     def _assignments(self, sigs: DataFrame, edges: DataFrame) -> DataFrame:
@@ -314,9 +237,8 @@ class DedupPipeline:
         Logs are tiny (bucket keys / per-doc counts): coalesce the write
         so it is a handful of tasks, not one per shuffle partition.
 
-        Schema note: for the fused channel under `packed_bucket_keys`
-        the `key` column is an OPAQUE low-62-bit bucket id (see
-        operators/fused.py packed-path comment), not the channel's
+        Schema note: a hot-bucket log's `key` column is an OPAQUE
+        low-62-bit bucket id (see fused.candidates), not the channel's
         actual band/block key — do not join it against index or
         per-channel bucket keys."""
         hot.coalesce(8).write.mode("overwrite").parquet(

@@ -60,7 +60,8 @@ def get_spark(
         builder
         .appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
-        # concurrent jobs (candidate channels run from worker threads)
+        # concurrent jobs (drop-log writers and index appends run from
+        # worker threads)
         # share cores fairly instead of convoying behind the first job
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -43,6 +43,9 @@ OUT_SCHEMA = (
 # open sessions per user: event-time micros + running aggregates.
 # `nn` counts non-null cents contributions so value_cents can emit null
 # when every value in the session was null — F.sum's semantics exactly.
+# State written by the earlier 4-field schema (no `nn`) does not decode
+# under this one: a stream restarted on this code needs a fresh
+# checkpoint location.
 STATE_SCHEMA = (
     "sessions array<struct<start:long,last:long,n:long,cents:long,"
     "nn:long>>"

@@ -5,8 +5,8 @@ pre-written corpus (scaling_bench.gen_input layout), printing per-stage
 lineage (wall + rows) and the candidate/edge row counts — the numbers
 needed to attribute a wall-time change to pair volume vs stage cost.
 
-Usage: python scripts/ab_leg.py --cores 8 --docs 100000 [--legacy]
-       [--input /tmp/scale_input_100000]
+Usage: python scripts/ab_leg.py --cores 8 --docs 100000
+       [--input /tmp/scale_input_100000] [--eventlog]
 """
 
 from __future__ import annotations
@@ -33,10 +33,7 @@ def main() -> None:
         if "--input" in sys.argv
         else f"/tmp/scale_input_{docs}"
     )
-    cfg = PipelineConfig(
-        fused_channels="--legacy" not in sys.argv,
-        packed_bucket_keys="--unpacked" not in sys.argv,
-    )
+    cfg = PipelineConfig()
     extra = {}
     if "--eventlog" in sys.argv:
         evdir = f"/tmp/spark-events-{cores}"
@@ -64,10 +61,7 @@ def main() -> None:
     pipe = DedupPipeline(spark, cfg, checkpoint_dir=ckpt, resume=False)
     rows = pipe.run(pages).count()
     wall = time.time() - t0
-    print(
-        f"== cores={cores} fused={cfg.fused_channels} "
-        f"packed={cfg.packed_bucket_keys} wall={wall:.1f}s rows={rows}"
-    )
+    print(f"== cores={cores} wall={wall:.1f}s rows={rows}")
     for rec in pipe.ckpt.lineage():
         print("  " + json.dumps(rec))
     # edge count from the checkpointed table (metadata-only)

@@ -33,11 +33,11 @@ def _api(base: str, path: str):
 
 
 def _parse_rest_ts(s: str):
-    """Tolerant parse of a Spark REST timestamp. The UI emits
-    `%Y-%m-%dT%H:%M:%S.%fGMT`; fall back to ISO-8601 variants rather
-    than silently zeroing the duration. Raises ValueError if no form
-    matches (counted by the caller)."""
-    from datetime import datetime
+    """Tolerant parse of a Spark REST timestamp to a NAIVE UTC datetime.
+    The UI emits `%Y-%m-%dT%H:%M:%S.%fGMT`; fall back to ISO-8601
+    variants rather than silently zeroing the duration. Raises
+    ValueError if no form matches (counted by the caller)."""
+    from datetime import datetime, timezone
 
     s = s.strip()
     for suffix in ("GMT", "UTC", "Z"):
@@ -49,8 +49,12 @@ def _parse_rest_ts(s: str):
             return datetime.strptime(s, fmt)
         except ValueError:
             continue
-    # last resort: fromisoformat handles offsets like +00:00
-    return datetime.fromisoformat(s)
+    # last resort: fromisoformat handles offsets like +00:00 — normalize
+    # an aware result to naive UTC so it subtracts from the naive forms
+    ts = datetime.fromisoformat(s)
+    if ts.tzinfo is not None:
+        ts = ts.astimezone(timezone.utc).replace(tzinfo=None)
+    return ts
 
 
 def main() -> int:

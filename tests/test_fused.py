@@ -1,5 +1,7 @@
-"""Fused candidate channel: equivalence with the legacy per-channel path,
-star-pair prefilter exemption, r>1 overlap guard, concurrency config."""
+"""The one candidate generator (fused.candidates): equivalence with the
+per-channel functions merged, exact overlap under the star downgrade,
+folded-prefilter parity, batch == probe shape, the r>1 overlap floor and
+its degree-cap ranking."""
 
 import os
 import sys
@@ -26,6 +28,17 @@ def _reps(spark, n=400, cfg=PipelineConfig()):
     return exact.representatives(sigs, exact.text_groups(sigs)).persist()
 
 
+def _cands(reps, cfg, min_matches=3, probe_ids=None):
+    """fused.candidates over the reps' fused keyed rows."""
+    return fused.candidates(
+        fused.fused_keyed_rows(reps, cfg),
+        reps.select("doc_id", "simhash"),
+        cfg,
+        probe_ids=probe_ids,
+        min_matches=min_matches,
+    )
+
+
 def _as_dict(df):
     out = {}
     for r in df.collect():
@@ -38,12 +51,12 @@ def _as_dict(df):
 
 
 def test_fused_equals_legacy_merge(spark):
-    """The fused one-shuffle path must produce exactly the candidate set,
-    channel tags, and band-co-occurrence counts of the three separate
-    channel jobs merged."""
+    """The fused one-shuffle path (prefilter gate at 0: every pair kept)
+    must produce exactly the candidate set, channel tags, and
+    band-co-occurrence counts of the three per-channel functions merged."""
     cfg = PipelineConfig()
     reps = _reps(spark, 400, cfg)
-    got_fused, _ = fused.fused_candidates(reps, cfg)
+    got_fused = _cands(reps, cfg, min_matches=0)[0]
     legacy = verify.merge_candidates(
         lsh.lsh_candidates(reps, cfg)[0],
         simhash.simhash_candidates(reps, cfg)[0],
@@ -100,7 +113,7 @@ def test_star_downgrade_counts_are_exact_overlap(spark):
     expect[(7, 8)] = 1
 
     for cands in (
-        fused.fused_candidates(reps, cfg)[0],
+        _cands(reps, cfg, min_matches=0)[0],
         lsh.lsh_candidates(reps, cfg)[0].withColumn(
             "channels", F.array(F.lit("minhash"))
         ),
@@ -118,59 +131,19 @@ def test_star_downgrade_counts_are_exact_overlap(spark):
 
     # prefilter gates on the exact value: junk (7,8) drops, the rest keep
     kept, dropped = verify.prefilter_candidates(
-        fused.fused_candidates(reps, cfg)[0], reps, min_matches=3
+        _cands(reps, cfg, min_matches=0)[0], min_matches=3
     )
     assert {(r.id_a, r.id_b) for r in kept.collect()} == set(expect) - {(7, 8)}
     assert dropped.count() > 0
     reps.unpersist()
 
 
-def test_r_gt_1_emits_null_overlap(spark):
-    """With r > 1 band co-occurrence is NOT signature overlap (ADVICE r2):
-    the channel must emit null so the prefilter recomputes exactly."""
-    cfg = PipelineConfig(lsh_bands=4, lsh_rows=5)
-    # plant near-identical pairs (J ~ 0.97) so full 5-row band slices match
-    rows = []
-    for i in range(8):
-        base = f"the quick brown fox number {i} jumps over the lazy dog " * 20
-        rows.append((f"u{i}a", base + "ending one", "en"))
-        rows.append((f"u{i}b", base + "ending two", "en"))
-    pages = spark.createDataFrame(rows, "url string, text string, lang string")
-    sigs = exact.build_sigs(pages, cfg)
-    reps = exact.representatives(sigs, exact.text_groups(sigs)).persist()
-    cands, _ = fused.fused_candidates(reps, cfg)
-    mh_rows = cands.filter(F.array_contains("channels", "minhash"))
-    assert mh_rows.count() > 0
-    assert mh_rows.filter(F.col("mh_overlap").isNotNull()).count() == 0
-    # the channel also emits the exact band-hit count for the optional
-    # r>1 floor screen (cfg.r_gt1_band_screen, default off)
-    assert "band_hits" in cands.columns
-    # prefilter default path (screen off): band_hits stripped, overlap
-    # recomputed exactly via intersect for every pair
-    kept, _ = verify.prefilter_candidates(
-        cands.drop("band_hits"), reps, min_matches=3,
-        overlap_from_bands=False,
-    )
-    assert kept.filter(F.col("mh_overlap").isNull()).count() == 0
-    # screen path (band_rows=r): identical kept PAIR SET — floor >= gate
-    # implies exact >= gate, and undecided pairs fall through to exact
-    kept_s, _ = verify.prefilter_candidates(
-        cands, reps, min_matches=3, overlap_from_bands=False,
-        band_rows=cfg.lsh_rows,
-    )
-    assert (
-        {(r.id_a, r.id_b) for r in kept_s.collect()}
-        == {(r.id_a, r.id_b) for r in kept.collect()}
-    )
-    reps.unpersist()
-
-
 def _prefilter_parity(spark, reps, cfg, min_matches=3):
-    """fused_prefiltered must equal prefilter_candidates over
-    fused_candidates — same kept pairs/columns AND same drop log."""
-    kept_f, _hot, drop_f = fused.fused_prefiltered(reps, cfg, min_matches)
+    """The folded prefilter must equal prefilter_candidates over the
+    unfiltered candidates — same kept pairs/columns AND same drop log."""
+    kept_f, _hot, drop_f = _cands(reps, cfg, min_matches)
     kept_l, drop_l = verify.prefilter_candidates(
-        fused.fused_candidates(reps, cfg)[0], reps, min_matches=min_matches
+        _cands(reps, cfg, min_matches=0)[0], min_matches=min_matches
     )
     assert _as_dict(kept_f) == _as_dict(kept_l)
     as_map = lambda df: {r.doc_id: r.n_dropped for r in df.collect()}  # noqa: E731
@@ -202,12 +175,91 @@ def test_fused_prefiltered_hot_paths(spark, monkeypatch):
     reps.unpersist()
 
 
-def test_fused_prefiltered_rejects_r_gt_1(spark):
-    import pytest
+def test_probe_shape_equals_batch_shape(spark):
+    """The incremental probe shape (pairs with >= 1 probe endpoint, no
+    member-member join) must yield exactly the batch self-join's rows for
+    those pairs — channels, overlap, star flag — through both the in-cap
+    and the over-cap star branch, at r=1 (folded prefilter) and r>1."""
+    for cfg, reps in (
+        (PipelineConfig(max_bucket_docs=4), _crafted_reps(spark)),
+        (PipelineConfig(), _reps(spark, 400)),
+        (PipelineConfig(lsh_bands=10, lsh_rows=2), _reps(spark, 800)),
+    ):
+        reps = reps.persist()
+        probe = reps.select("doc_id").filter(F.col("doc_id") % 3 == 0)
+        for gate in (0, 3):  # unfiltered, then the folded r=1 prefilter
+            want = {
+                k: v
+                for k, v in _as_dict(_cands(reps, cfg, gate)[0]).items()
+                if k[0] % 3 == 0 or k[1] % 3 == 0
+            }
+            got = _as_dict(_cands(reps, cfg, gate, probe_ids=probe)[0])
+            assert got == want
+            assert len(want) > 0 or gate
+        reps.unpersist()
 
+
+def test_r_gt_1_overlap_is_band_floor(spark):
+    """At r > 1 mh_overlap is the proven floor bands x r (each
+    co-occurring band certifies r agreeing signature positions), never
+    null for a minhash pair and never above the exact overlap; no
+    prefilter runs, so the drop log is empty."""
     cfg = PipelineConfig(lsh_bands=4, lsh_rows=5)
-    with pytest.raises(ValueError):
-        fused.fused_prefiltered(_crafted_reps(spark), cfg)
+    # plant near-identical pairs (J ~ 0.97) so full 5-row band slices match
+    rows = []
+    for i in range(8):
+        base = f"the quick brown fox number {i} jumps over the lazy dog " * 20
+        rows.append((f"u{i}a", base + "ending one", "en"))
+        rows.append((f"u{i}b", base + "ending two", "en"))
+    pages = spark.createDataFrame(rows, "url string, text string, lang string")
+    sigs = exact.build_sigs(pages, cfg)
+    reps = exact.representatives(sigs, exact.text_groups(sigs)).persist()
+    cands, _hot, dropped = _cands(reps, cfg)
+    sig = {r.doc_id: set(r.minhash) for r in reps.collect()}
+    mh_rows = cands.filter(F.array_contains("channels", "minhash")).collect()
+    assert mh_rows
+    for r in mh_rows:
+        assert r.mh_overlap is not None and r.mh_overlap % cfg.lsh_rows == 0
+        assert cfg.lsh_rows <= r.mh_overlap <= len(sig[r.id_a] & sig[r.id_b])
+    assert dropped.count() == 0
+    reps.unpersist()
+
+
+def test_r_gt_1_degree_cap_ranks_by_band_floor(spark, tmp_path):
+    """b=10/r=2, verify_degree_cap=2: the true pair (100, 200) shares 5
+    bands, and each endpoint's ranking window is saturated with two
+    single-band junk partners that sort before it by partner id. Ranked
+    by band floor the true pair (10) beats the junk (2) and survives;
+    a constant rank would keep the junk and drop it."""
+    from pcompress_spark.pipeline import DedupPipeline
+
+    cfg = PipelineConfig(lsh_bands=10, lsh_rows=2, verify_degree_cap=2)
+    # band i = signature positions (2i, 2i+1)
+    shared = {  # doc -> {band: value tag}, bands shared with a partner
+        100: {**{b: 1 for b in range(5)}, 5: 2, 6: 3},
+        200: {**{b: 1 for b in range(5)}, 7: 4, 8: 5},
+        101: {5: 2},
+        102: {6: 3},
+        50: {7: 4},
+        51: {8: 5},
+    }
+    rows = []
+    for d, bands in shared.items():
+        mh = []
+        for i in range(20):
+            tag = bands.get(i // 2)
+            mh.append(tag * 10_000 + i if tag else d * 1_000_000 + i)
+        rows.append((d, f"u{d}", "short text", mh, d * 0x0001_0001_0001_0001, 100))
+    reps = spark.createDataFrame(
+        rows,
+        "doc_id long, url string, text string, minhash array<long>,"
+        " simhash long, nshingles int",
+    ).persist()
+    pipe = DedupPipeline(spark, cfg, checkpoint_dir=str(tmp_path / "ck"))
+    kept = {(r.id_a, r.id_b): r.mh_overlap for r in pipe._candidates(reps).collect()}
+    assert kept[(100, 200)] == 10
+    assert (100, 101) in kept and (50, 200) in kept  # junk kept by the junk side
+    reps.unpersist()
 
 
 def test_null_overlap_ranks_at_floor(spark):
@@ -226,27 +278,3 @@ def test_null_overlap_ranks_at_floor(spark):
     kept, _ = verify.cap_candidate_degree(cands, cap=1, null_rank=3)
     got = {(r.id_a, r.id_b) for r in kept.collect()}
     assert (1, 4) in got
-
-
-def test_legacy_concurrency_config(spark, tmp_path):
-    """concurrent_channels True/False both produce a working legacy run."""
-    import pandas as pd
-
-    from pcompress_spark.pipeline import DedupPipeline
-
-    pdf = datagen.gen_pages_pandas(200)
-    pages = spark.createDataFrame(pdf)
-    outs = []
-    for i, conc in enumerate([True, False]):
-        cfg = PipelineConfig(fused_channels=False, concurrent_channels=conc)
-        pipe = DedupPipeline(
-            spark, cfg, checkpoint_dir=str(tmp_path / f"ck{i}"), resume=False
-        )
-        outs.append(
-            pipe.run(pages)
-            .select("url", "cluster_id")
-            .toPandas()
-            .sort_values("url")
-            .reset_index(drop=True)
-        )
-    pd.testing.assert_frame_equal(outs[0], outs[1])

@@ -55,27 +55,15 @@ def test_verified_jaccards_match_oracle(assignments_run, golden_pairs, golden_cl
     assert diffs.max() < 1e-12
 
 
-def test_pair_recall_r_gt_1_banding(spark, pages_df, golden_pairs, tmp_path):
+def test_pair_recall_r_gt_1_banding(assignments_run_r2, golden_pairs):
     """First-class r>1 banding (VERDICT r3 task #6): at b=10/r=2 band
-    co-occurrence is NOT signature overlap, so candidates flow through the
-    exact array-intersect prefilter path (operators/verify.py:122) — the
-    production higher-precision operating point. Dup-pair recall must
-    still clear the golden gate (simhash + winnow channels cover the
-    LSH-curve recall dip at the tau boundary)."""
-    from pcompress_spark.config import PipelineConfig
-    from pcompress_spark.pipeline import DedupPipeline
-
-    out = (
-        DedupPipeline(
-            spark,
-            PipelineConfig(lsh_bands=10, lsh_rows=2),
-            checkpoint_dir=str(tmp_path / "ck_r2"),
-            resume=False,
-        )
-        .run(pages_df)
-        .toPandas()
-    )
-    recall = metrics.pair_recall(out, golden_pairs)
+    co-occurrence is NOT signature overlap, so no signature prefilter
+    runs — banding is the precision screen, mh_overlap carries the proven
+    band floor (bands x r) into the degree cap, and every kept pair is
+    exact-Jaccard verified. Dup-pair recall must still clear the golden
+    gate (simhash + winnow channels cover the LSH-curve recall dip at the
+    tau boundary)."""
+    recall = metrics.pair_recall(assignments_run_r2, golden_pairs)
     assert recall >= 0.99, f"r>1 dup-pair recall {recall:.4f} < 0.99"
 
 

@@ -44,6 +44,25 @@ def test_incremental_matches_full_run(split_run, assignments_run):
     assert not diff, f"{len(diff)} label mismatches, e.g. {list(diff.items())[:5]}"
 
 
+def test_incremental_matches_full_run_r_gt_1(
+    spark, pages_df, assignments_run_r2, tmp_path
+):
+    """The same split at b=10/r=2: bootstrap on one xxhash half, add_batch
+    the other, labels identical to the monolithic r=2 run — the probe
+    shape of the shared candidate generator, its band-floor overlap and
+    the degree cap agree with the batch self-join."""
+    cfg = PipelineConfig(lsh_bands=10, lsh_rows=2)
+    half = F.pmod(F.xxhash64("url"), F.lit(2))
+    idx = IncrementalDedupIndex(spark, cfg, str(tmp_path / "idx"))
+    idx.bootstrap(pages_df.filter(half == 0))
+    idx.add_batch(pages_df.filter(half == 1))
+    full = dict(zip(assignments_run_r2["doc_id"], assignments_run_r2["cluster_id"]))
+    incr = _as_map(idx.assignments())
+    assert len(incr) == len(full)
+    diff = {d: (c, full[d]) for d, c in incr.items() if full[d] != c}
+    assert not diff, f"{len(diff)} label mismatches, e.g. {list(diff.items())[:5]}"
+
+
 def test_coalesced_queue_matches_full_run(
     spark, pages_df, assignments_run, tmp_path
 ):
@@ -102,6 +121,9 @@ def test_coalesced_queue_duplicate_url_resolves_by_sha(spark, tmp_path):
     idx2.bootstrap(pages(base))
     idx2.add_batches([pages([("u://dup", winner)])])
     assert idx2.add_batch(pages([("u://dup", t1)])).count() == 0
+
+
+def test_merge_bridges_existing_clusters(spark, tmp_path):
     """A batch doc near-duplicating two docs that bootstrapped into
     separate clusters must merge them — and the merged label must be the
     global min doc_id, exactly as one full run would label it."""
@@ -123,7 +145,7 @@ def test_coalesced_queue_duplicate_url_resolves_by_sha(spark, tmp_path):
             [(u, t, "en") for u, t in rows], "url string, text string, lang string"
         )
 
-    idx = IncrementalDedupIndex(spark, PipelineConfig(), str(tmp_path))
+    idx = IncrementalDedupIndex(spark, PipelineConfig(), str(tmp_path / "idx"))
     boot = _as_map(idx.bootstrap(pages([("u://a", a), ("u://c", c)])))
     assert len(set(boot.values())) == 2, "bootstrap must make 2 clusters"
 

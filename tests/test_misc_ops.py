@@ -29,12 +29,61 @@ def test_parse_size_suffixes():
 
 
 def test_config_from_args_routes_size_fields():
-    cfg = PipelineConfig.from_args(substring_min_len="2k", min_doc_len=64)
+    cfg = PipelineConfig.from_args(substring_min_len="2k", max_bucket_docs=64)
     assert cfg.substring_min_len == 2048
-    assert cfg.min_doc_len == 64
+    assert cfg.max_bucket_docs == 64
     # non-size fields pass through untouched
     cfg2 = PipelineConfig.from_args(tau_extra=0.5)
     assert cfg2.tau_extra == 0.5
+
+
+def test_every_config_field_is_read():
+    """A PipelineConfig field nothing reads is a silent no-op: a
+    --conf-override for it is accepted and ignored. Every field must be
+    read as an attribute in code (comments and docstrings do not count)
+    somewhere under pcompress_spark/ or jobs/ outside config.py —
+    directly, or through a public PipelineConfig method read there."""
+    import ast
+    import dataclasses
+    import inspect
+    import pathlib
+    import textwrap
+
+    def attrs(tree) -> set[str]:
+        return {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    config_py = root / "pcompress_spark" / "config.py"
+    read = set()
+    for d in ("pcompress_spark", "jobs"):
+        for p in (root / d).rglob("*.py"):
+            if p != config_py:
+                read |= attrs(ast.parse(p.read_text()))
+    for name, fn in vars(PipelineConfig).items():
+        if inspect.isfunction(fn) and not name.startswith("_") and name in read:
+            read |= attrs(ast.parse(textwrap.dedent(inspect.getsource(fn))))
+    unread = [
+        f.name for f in dataclasses.fields(PipelineConfig) if f.name not in read
+    ]
+    assert not unread, f"PipelineConfig fields nothing reads: {unread}"
+
+
+def test_rest_timestamps_parse_to_naive_utc():
+    """scripts/incr_profile.py: an offset-carrying ISO timestamp must come
+    back naive UTC, so it subtracts from the UI's GMT form instead of
+    raising TypeError (aware minus naive)."""
+    import importlib.util
+    import pathlib
+    from datetime import datetime
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "incr_profile.py"
+    spec = importlib.util.spec_from_file_location("incr_profile", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    aware = mod._parse_rest_ts("2026-01-01T02:00:00.500+02:00")
+    gmt = mod._parse_rest_ts("2026-01-01T00:00:01.500GMT")
+    assert aware == datetime(2026, 1, 1, 0, 0, 0, 500_000)
+    assert (gmt - aware).total_seconds() == 1.0
 
 
 def test_crc32_matches_zlib(spark):

@@ -60,68 +60,23 @@ def test_degree_cap_noop_below_cap(spark):
 
 
 def test_prefilter_respects_other_channels(spark):
-    reps = spark.createDataFrame(
-        [(1, [10, 11, 12]), (2, [10, 99, 98]), (3, [50, 51, 52])],
-        "doc_id long, minhash array<long>",
-    )
     cands = spark.createDataFrame(
-        [(1, 2, ["minhash"]), (1, 3, ["minhash"]), (2, 3, ["winnow"])],
-        "id_a long, id_b long, channels array<string>",
+        [
+            (1, 2, ["minhash"], 1),
+            (1, 3, ["minhash"], 0),
+            (2, 3, ["winnow"], None),
+            (3, 4, ["minhash"], 2),
+        ],
+        "id_a long, id_b long, channels array<string>, mh_overlap int",
     )
-    out, dropped = verify.prefilter_candidates(cands, reps, min_matches=2)
+    out, dropped = verify.prefilter_candidates(cands, min_matches=2)
     got = {(r.id_a, r.id_b) for r in out.collect()}
     # drops are logged, never silent
     assert dropped.count() > 0
     # (1,2) has only 1 matching value -> dropped; (1,3) zero -> dropped;
-    # (2,3) proposed by winnow -> bypasses the signature filter
-    assert got == {(2, 3)}
-
-
-def test_prefilter_band_floor_screen_matches_exact(spark):
-    """r>1 screen: band_hits*r >= min_matches is a PROVEN floor, so the
-    kept PAIR SET must equal the exact-intersect path's on any frame
-    whose band_hits are consistent (each co-occurring band = r agreeing
-    positions). Screened-in pairs carry the floor as mh_overlap; pairs
-    below the floor still get the exact value."""
-    r = 2
-    # signatures built so band slices [0:2],[2:4],[4:6] co-occur exactly
-    # as band_hits claims: (1,2) share bands 0,1 (floor 4); (1,3) share
-    # band 0 only (floor 2) but ALSO values 4,5 individually (exact 4);
-    # (1,4) share band 0 only, exact overlap 2 -> drops at min_matches 3
-    reps = spark.createDataFrame(
-        [
-            (1, [10, 11, 20, 21, 30, 31]),
-            (2, [10, 11, 20, 21, 99, 98]),
-            (3, [10, 11, 77, 30, 31, 76]),
-            (4, [10, 11, 55, 56, 57, 58]),
-        ],
-        "doc_id long, minhash array<long>",
-    )
-    cands = spark.createDataFrame(
-        [
-            (1, 2, ["minhash"], True, 2),
-            (1, 3, ["minhash"], True, 1),
-            (1, 4, ["minhash"], True, 1),
-        ],
-        "id_a long, id_b long, channels array<string>, is_star boolean, "
-        "band_hits int",
-    )
-    kept, dropped = verify.prefilter_candidates(
-        cands, reps, min_matches=3, overlap_from_bands=False, band_rows=r
-    )
-    got = {(x.id_a, x.id_b): x.mh_overlap for x in kept.collect()}
-    # exact path on the same pairs (band_hits stripped)
-    kept_exact, _ = verify.prefilter_candidates(
-        cands.drop("band_hits"), reps, min_matches=3,
-        overlap_from_bands=False,
-    )
-    want_pairs = {(x.id_a, x.id_b) for x in kept_exact.collect()}
-    assert set(got) == want_pairs == {(1, 2), (1, 3)}
-    assert "band_hits" not in kept.columns
-    # (1,2) screened in on its floor 2*2=4; (1,3) paid the exact
-    # intersect (floor 2 < 3) and carries the true overlap 4
-    assert got[(1, 2)] == 4 and got[(1, 3)] == 4
-    assert dropped.count() > 0
+    # (2,3) proposed by winnow -> bypasses the signature filter; (3,4)
+    # meets the gate
+    assert got == {(2, 3), (3, 4)}
 
 
 def test_pair_jaccard_matches_numpy(spark):
