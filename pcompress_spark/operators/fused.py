@@ -41,7 +41,7 @@ degraded-memory VM class):
     drop log is produced here so drops stay non-silent.
 
 `candidates` is the ONE generator: the batch pipeline and the incremental
-index (add_batch probe, update_batch member relabel) both call it, so the
+index's probe (add_batch, and update_batch through it) both call it, so the
 per-pair semantics — and the r == 1 vs r > 1 rule — live in one place.
 
 Reference analog: the reference likewise keeps ONE global index probed by
@@ -127,7 +127,7 @@ def candidates(
     they come from a bucket join of those docs against every member of
     the buckets they sit in — exactly the bucket_pairs pairs that have
     >= 1 probe endpoint, at a cost ∝ probe keys x bucket width
-    (incremental add_batch / update_batch). Both shapes then run one
+    (the incremental add_batch probe). Both shapes then run one
     tail, which recovers each channel's verdict from one per-pair groupBy:
 
       - minhash: band co-occurrence count. Exact under the star

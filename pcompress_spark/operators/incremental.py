@@ -23,11 +23,13 @@ writes the same tables as Iceberg, giving atomic batch commits):
                   pmod(xxhash64(doc_id), N_SHARDS) so redelivery checks
                   and point lookups prune
     merges/       (old_cluster, new_cluster) — appended when a batch doc
-                  bridges existing clusters; resolved at read time
+                  bridges existing clusters; resolved at read time;
+                  versioned by old_cluster (the doc whose id labels the
+                  retired cluster)
     links/        (doc_id, parent_id) — identity membership: every
                   non-delegate doc points at the delegate whose text it
-                  equals (update_batch rebuilds exact edges from these
-                  when a delegate's content changes)
+                  equals (update_batch re-ingests an affected cluster's
+                  identity children from these, with their parent's text)
     tombstones/   (tbl, doc_id, ver) — per-table row versions; a row is
                   live iff its ver equals the doc's current version (see
                   the versioned-reads section below). Only created once
@@ -86,15 +88,25 @@ _MERGE_SCHEMA = "old_cluster long, new_cluster long"
 _TOMB_SCHEMA = "tbl int, doc_id long, ver int"
 _LINK_SCHEMA = "doc_id long, parent_id long"
 
-# tombstone table codes (tombstones are per (table, doc): an upsert kills
-# a doc's sig/key rows but not its identity children's link rows, etc.)
-_TBL = {"sigs": 0, "keys": 1, "assignments": 2, "links": 3}
+# tombstone table codes (a doc's version is recorded per (table, doc))
+_TBL = {"sigs": 0, "keys": 1, "assignments": 2, "links": 3, "merges": 4}
+# the column holding the doc a table's rows are versioned by: a merge row
+# belongs to the doc whose id labels the cluster it retires
+_KEY = {"merges": "old_cluster"}
 
-# update_batch broadcasts the changed-doc / affected-cluster id frames
-# only below this measured-count gate (~8 MB of longs); a full re-crawl
-# batch degrades to shuffle semi-joins instead of an oversized broadcast
-# — same defense shape as fused.HOT_DOCS_BROADCAST_MAX.
+# update_batch broadcasts its id frames (changed docs, affected clusters,
+# pending versions) only below this measured-count gate (~8 MB of longs);
+# a full re-crawl batch degrades to shuffle joins instead of an oversized
+# broadcast — same defense shape as fused.HOT_DOCS_BROADCAST_MAX.
 _UPDATE_BROADCAST_MAX = 1_000_000
+
+
+def _id_frame(df: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize an update_batch id frame and count it; the frame is
+    broadcast-hinted only below _UPDATE_BROADCAST_MAX."""
+    df = df.localCheckpoint(eager=True)
+    n = df.count()
+    return (F.broadcast(df) if n <= _UPDATE_BROADCAST_MAX else df), n
 
 
 class IncrementalDedupIndex:
@@ -114,21 +126,9 @@ class IncrementalDedupIndex:
         self.spark = spark
         self.cfg = cfg
         self.index_dir = index_dir.rstrip("/")
-        # update_batch-window state (all None outside an update):
-        # _pending_vers: broadcast (doc_id, _pv) — uncommitted next
-        #   versions for the docs the update rewrites (_with_ver);
-        # _sigs_overlay/_keys_overlay: the post-update pre-classification
-        #   view of the corpus (changed delegates removed, promoted
-        #   delegates added) that the inner classification must probe;
-        # _assign_overlay: relabeled member assignments the inner
-        #   classification must resolve old endpoints against;
-        # _known_exclude: docs the redelivery guard must NOT skip (their
-        #   content changed — they are being reclassified).
+        # (doc_id, _pv): the uncommitted next version of every doc an
+        # update_batch re-ingests; None outside an update window
         self._pending_vers: DataFrame | None = None
-        self._sigs_overlay: DataFrame | None = None
-        self._keys_overlay: DataFrame | None = None
-        self._assign_overlay: DataFrame | None = None
-        self._known_exclude: DataFrame | None = None
 
     # ------------------------------------------------------------ storage
     def _p(self, name: str) -> str:
@@ -158,7 +158,9 @@ class IncrementalDedupIndex:
     # commit atomic: new rows are appended at version+1 first (invisible
     # — their ver exceeds the current version), then ONE tombstone append
     # flips every touched doc's version, killing the old rows and
-    # activating the new ones in the same commit. Readers go through
+    # activating the new ones in the same commit. While that update runs,
+    # reads hide every row of its pending docs, so the index reads as the
+    # corpus minus the clusters being re-ingested. Readers go through
     # _live(), which filters dead rows and hides `ver` from consumers;
     # indexes never touched by update_batch have no tombstones table and
     # pay nothing. On the production table format this mechanism is the
@@ -168,14 +170,15 @@ class IncrementalDedupIndex:
     # explicitly re-versioned, never silently dropped.
 
     def _kill_map(self, name: str) -> DataFrame | None:
-        """Broadcastable (doc_id, _kill = current version) for table
-        `name`, or None. Metadata-scale: one row per ever-updated doc."""
+        """Broadcastable (key, _kill = current version) for table `name`,
+        keyed by the table's version column (_KEY), or None.
+        Metadata-scale: one row per ever-updated doc."""
         t = self._read("tombstones")
         if t is None:
             return None
         km = (
             t.filter(F.col("tbl") == _TBL[name])
-            .groupBy("doc_id")
+            .groupBy(F.col("doc_id").alias(_KEY.get(name, "doc_id")))
             .agg(F.max("ver").alias("_kill"))
         )
         return F.broadcast(km)
@@ -183,28 +186,32 @@ class IncrementalDedupIndex:
     def _live(self, name: str) -> DataFrame | None:
         """Table `name` with dead/uncommitted rows filtered (ver == the
         doc's current version) and the `ver` bookkeeping column hidden —
-        what every consumer should read."""
+        what every consumer should read. Inside an update_batch window
+        every row of a pending doc is hidden as well."""
         df = self._read(name)
         if df is None:
             return None
+        key = _KEY.get(name, "doc_id")
         ver = (
             F.coalesce(F.col("ver"), F.lit(0))
             if "ver" in df.columns
             else F.lit(0)
         )
+        # no tombstones table: every committed row is version 0, and any
+        # ver>0 row is an uncommitted update-in-flight append
+        cur = F.lit(0)
         km = self._kill_map(name)
-        if km is None:
-            # no tombstones table: every committed row is version 0, and
-            # any ver>0 row is an uncommitted update-in-flight append
-            if "ver" in df.columns:
-                return df.filter(ver == 0).drop("ver")
-            return df
-        return (
-            df.withColumn("_v", ver)
-            .join(km, "doc_id", "left")
-            .filter(F.col("_v") == F.coalesce(F.col("_kill"), F.lit(0)))
-            .drop("_v", "_kill", "ver")
-        )
+        if km is not None:
+            df = df.join(km, key, "left")
+            cur = F.coalesce(F.col("_kill"), cur)
+        df = df.filter(ver == cur)
+        if self._pending_vers is not None:
+            df = df.join(
+                self._pending_vers.withColumnRenamed("doc_id", key),
+                key,
+                "left_anti",
+            )
+        return df.drop("_kill", "ver")
 
     def _with_ver(self, df: DataFrame, name: str) -> DataFrame:
         """Attach the `ver` column for an append to table `name`: a doc's
@@ -213,36 +220,20 @@ class IncrementalDedupIndex:
         update_batch, `_pending_vers` overrides this with the update's
         NOT-YET-COMMITTED next version, making those rows invisible until
         the closing tombstone append flips the version."""
+        key = _KEY.get(name, "doc_id")
+        ver = F.lit(0)
         km = self._kill_map(name)
-        cur = (
-            F.lit(0)
-            if km is None
-            else F.coalesce(F.col("_kill"), F.lit(0))
-        )
-        out = df if km is None else df.join(km, "doc_id", "left")
+        if km is not None:
+            df = df.join(km, key, "left")
+            ver = F.coalesce(F.col("_kill"), ver)
         if self._pending_vers is not None:
-            out = out.join(self._pending_vers, "doc_id", "left")
-            ver = F.coalesce(F.col("_pv"), cur)
-        else:
-            ver = cur
-        out = out.withColumn("ver", ver.cast("int"))
-        for c in ("_kill", "_pv"):
-            if c in out.columns:
-                out = out.drop(c)
-        return out
-
-    def _cur_sigs(self) -> DataFrame | None:
-        """The corpus delegate view classification must use: live sigs —
-        or, inside an update window, the overlay (the COMPLETE post-update
-        view: changed delegates removed, promoted delegates added)."""
-        if self._sigs_overlay is not None:
-            return self._sigs_overlay
-        return self._live("sigs")
-
-    def _cur_keys(self) -> DataFrame | None:
-        if self._keys_overlay is not None:
-            return self._keys_overlay
-        return self._live("keys")
+            df = df.join(
+                self._pending_vers.withColumnRenamed("doc_id", key),
+                key,
+                "left",
+            )
+            ver = F.coalesce(F.col("_pv"), ver)
+        return df.withColumn("ver", ver.cast("int")).drop("_kill", "_pv")
 
     def _append_tombstones(self, rows: DataFrame) -> None:
         rows.select("tbl", "doc_id", "ver").coalesce(1).write.mode(
@@ -252,8 +243,8 @@ class IncrementalDedupIndex:
     def _append_links(self, links: DataFrame) -> None:
         """(doc_id, parent_id): identity membership — every non-delegate
         doc points at the delegate whose text it equals. Batch-scale
-        appends; consumed by update_batch to rebuild exact edges when a
-        delegate's content changes."""
+        appends; update_batch reads them to re-ingest an affected
+        cluster's identity children with their parent's text."""
         self._with_ver(
             links.select("doc_id", "parent_id"), "links"
         ).write.mode("append").parquet(self._p("links"))
@@ -317,8 +308,8 @@ class IncrementalDedupIndex:
             self._p("sigs")
         )
         self._append_keys(fused.fused_keyed_rows(reps, self.cfg))
-        # identity membership of the bootstrap corpus (update_batch needs
-        # it to rebuild exact edges when a delegate's content changes)
+        # identity membership of the bootstrap corpus (update_batch
+        # re-ingests identity children from it)
         self._append_links(
             sigs.join(groups.select("text_sha", "rep_id"), "text_sha")
             .filter(F.col("doc_id") != F.col("rep_id"))
@@ -353,7 +344,7 @@ class IncrementalDedupIndex:
         not by rows): close the chains driver-side and apply as one
         broadcast map — an iterative join loop would run a Spark job per
         chain hop for a table of a few hundred rows."""
-        m = self._read("merges")
+        m = self._live("merges")
         if m is None:
             return None
         chain = {r["old_cluster"]: r["new_cluster"] for r in m.collect()}
@@ -431,23 +422,7 @@ class IncrementalDedupIndex:
             .select("doc_id", "cluster_id")
             .join(ids.select("doc_id").distinct(), "doc_id", "left_semi")
         )
-        out = self._apply_closure(a, mm)
-        if self._known_exclude is not None:
-            # update window: the docs being re-versioned are NOT old docs
-            # — their still-stored (pre-flip) assignment rows must not
-            # resolve, or a fresh-fresh edge between two changed docs
-            # collapses to a self-loop of their old cluster and vanishes
-            out = out.join(self._known_exclude, "doc_id", "left_anti")
-        if self._assign_overlay is not None:
-            # update window: relabeled members' NEW (post-split) labels
-            # take precedence over their still-stored old rows
-            ov = self._assign_overlay.join(
-                ids.select("doc_id").distinct(), "doc_id", "left_semi"
-            )
-            out = out.join(ov.select("doc_id"), "doc_id", "left_anti").unionByName(
-                ov.select("doc_id", "cluster_id")
-            )
-        return out
+        return self._apply_closure(a, mm)
 
     def _known_ids(self, shards: list[int]) -> DataFrame:
         """doc_ids already assigned, read from the given shard partitions
@@ -483,7 +458,7 @@ class IncrementalDedupIndex:
         fs = self._fs()
         fs.delete(self._p("_assignments_staged"))
         (
-            self.assignments()
+            self._with_ver(self.assignments(), "assignments")
             .withColumn(
                 "shard", F.pmod(F.xxhash64("doc_id"), F.lit(N_SHARDS)).cast("int")
             )
@@ -516,6 +491,7 @@ class IncrementalDedupIndex:
         bkeys: DataFrame,
         fresh: DataFrame,
         old_keys: DataFrame | None,
+        old_sigs: DataFrame | None,
     ) -> DataFrame:
         """candidates(id_a, id_b, channels, mh_overlap, is_star) for every
         pair with >= 1 fresh endpoint: fused.candidates in its probe shape
@@ -546,21 +522,16 @@ class IncrementalDedupIndex:
         rows = tracked_persist(rows)
         # stored simhashes pulled for probed docs only — never a
         # full-corpus shuffle
-        sims = self._sim_lookup(fresh).join(
+        sims = fresh.select("doc_id", "simhash")
+        if old_sigs is not None:
+            sims = sims.unionByName(old_sigs.select("doc_id", "simhash"))
+        sims = sims.join(
             rows.select("doc_id").distinct(), "doc_id", "left_semi"
         )
         cands, _hot, _pre = fused.candidates(
             rows, sims, self.cfg, probe_ids=fresh.select("doc_id")
         )
         return cands
-
-    def _sim_lookup(self, fresh: DataFrame) -> DataFrame:
-        """(doc_id, simhash) for fresh delegates ∪ the stored corpus."""
-        sims = fresh.select("doc_id", "simhash")
-        old_sigs = self._cur_sigs()
-        if old_sigs is not None:
-            sims = sims.unionByName(old_sigs.select("doc_id", "simhash"))
-        return sims
 
     def _endpoint_reps(
         self, pairs: DataFrame, fresh: DataFrame, old_sigs: DataFrame | None
@@ -586,9 +557,8 @@ class IncrementalDedupIndex:
         fresh: DataFrame,
         old_sigs: DataFrame | None,
     ) -> DataFrame:
-        """degree cap -> exact verification: the shared tail of
-        add_batch's probe and update_batch's member relabel. Returns
-        verified (src, dst) edges.
+        """degree cap -> exact verification of the probe candidates.
+        Returns verified (src, dst) edges.
 
         PLAN BARRIER (capped localCheckpoint): the batch runs as ONE lazy
         tree (the full pipeline truncates lineage at durable checkpoints;
@@ -622,13 +592,12 @@ class IncrementalDedupIndex:
         likewise skipped — upsert semantics belong to the table format,
         not this operator."""
         spark = self.spark
+        self._check_inflight()
         # size shuffles to the BATCH, not the session default: a 10k-doc
         # increment at the session's 128 partitions spends more wall in
         # task-scheduling latency than in work (measured: the candidate
         # phase alone 43.9s at 128 partitions vs 14.9s at 32 on the same
         # batch); restored on exit so co-resident jobs keep their sizing
-        if self._known_exclude is None:  # inside update_batch the marker is ours
-            self._check_inflight()
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
         # NOTE (measured, r4): disabling AQE for the batch window was
         # tried to cut the ~170-small-job driver overhead and made the
@@ -636,7 +605,7 @@ class IncrementalDedupIndex:
         # exchange reuse dedups the repeated subplan references that the
         # batch's single lazy tree creates. Keep AQE on.
         try:
-            return self._add_batch_inner(pages)
+            return self._add_batch_inner(exact.base_ids(pages))
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
@@ -678,7 +647,9 @@ class IncrementalDedupIndex:
         except Exception:
             pass
 
-    def _add_batch_inner(self, pages: DataFrame) -> DataFrame:
+    def _add_batch_inner(self, base: DataFrame) -> DataFrame:
+        """Classify a base_ids-shaped frame (url, doc_id, text_sha, lang,
+        text) against the index and append its state."""
         cfg, spark = self.cfg, self.spark
         with CacheScope():
             # PLAN BARRIERS (localCheckpoint, not just persist): in the
@@ -698,8 +669,8 @@ class IncrementalDedupIndex:
             # pre-CC cut; everything else is persist-backed and
             # materializes inside a job that was running anyway.
             self._phase("incr:read-index")
-            old_sigs = self._cur_sigs()
-            old_keys = self._cur_keys()
+            old_sigs = self._live("sigs")
+            old_keys = self._live("keys")
             mm = self._merge_closure()
 
             # ---- phase A: identity columns only (codegen — the sketch
@@ -712,7 +683,6 @@ class IncrementalDedupIndex:
             from pyspark.sql import Window
 
             self._phase("incr:identity")
-            base = exact.base_ids(pages)
             shard_counts = (
                 base.groupBy(
                     F.pmod(F.xxhash64("doc_id"), F.lit(N_SHARDS))
@@ -730,10 +700,6 @@ class IncrementalDedupIndex:
                 str(max(16, min(1024, n_raw // 400))),
             )
             known = self._known_ids([r["s"] for r in shard_counts])
-            if self._known_exclude is not None:
-                # update window: docs being re-versioned must NOT be
-                # skipped by the redelivery guard — they are the batch
-                known = known.join(self._known_exclude, "doc_id", "left_anti")
             w = Window.partitionBy("doc_id").orderBy("text_sha")
             sigs = exact.attach_sigs(
                 base.withColumn("_rn", F.row_number().over(w))
@@ -802,7 +768,7 @@ class IncrementalDedupIndex:
                     "doc_id", "ch", "key"
                 )
             )
-            cands = self._bipartite_candidates(bkeys, fresh, old_keys)
+            cands = self._bipartite_candidates(bkeys, fresh, old_keys, old_sigs)
             # reps rows (with text) are pulled ONLY for capped candidate
             # endpoints — the candidate generator and the degree cap need
             # no row data
@@ -902,9 +868,8 @@ class IncrementalDedupIndex:
             # the delegate whose text it equals (in-batch members follow
             # their batch rep; if that rep identity-matched an OLD
             # delegate, both it and its members link to the old one).
-            # update_batch reads these to rebuild exact edges when a
-            # delegate's content changes. Duplicate link rows from a
-            # redelivered crash window are tolerated by every consumer.
+            # Duplicate link rows from a redelivered crash window are
+            # tolerated by every consumer.
             members_l = (
                 sigs.join(groups.select("text_sha", "rep_id"), "text_sha")
                 .filter(F.col("doc_id") != F.col("rep_id"))
@@ -931,8 +896,9 @@ class IncrementalDedupIndex:
 
             def _w_merges() -> None:
                 if merge_rows:
-                    spark.createDataFrame(
-                        merge_rows, _MERGE_SCHEMA
+                    self._with_ver(
+                        spark.createDataFrame(merge_rows, _MERGE_SCHEMA),
+                        "merges",
                     ).write.mode("append").parquet(self._p("merges"))
 
             def _w_sigs() -> None:
@@ -961,37 +927,47 @@ class IncrementalDedupIndex:
     def update_batch(self, pages: DataFrame) -> DataFrame:
         """Re-crawl upsert: classify a batch in which some urls are
         ALREADY indexed but their content changed (the case add_batch
-        deliberately skips). For each changed doc the old membership is
-        tombstoned, its cluster's remaining members are relabeled — with
-        genuine SPLITS handled by re-verifying the member subgraph from
-        the stored sigs/keys — and the new content is classified exactly
-        like a fresh doc (it may rejoin the same cluster, join another,
-        or stand alone). Unknown urls ingest normally; known-unchanged
-        rows are no-ops. Returns the (re)classified batch docs'
+        deliberately skips). Unknown urls ingest normally; known-unchanged
+        rows are no-ops. Returns the changed and new batch docs'
         (doc_id, cluster_id).
 
-        Identity groups survive delegate updates by PROMOTION: when a
-        changed doc was the delegate of an exact-dup group, the smallest
-        remaining member is promoted to delegate, inheriting the old
-        content's sig/key rows (the content still exists in the corpus —
-        only the crawler's copy under that url changed).
+        The upsert is add_batch over the affected clusters: every cluster
+        holding a changed doc is hidden from the index, and its members
+        are re-ingested together with the batch through the one
+        classification path. Members the batch does not carry are rebuilt
+        from their current content — a delegate from its live `sigs` row,
+        an identity child from its `links` parent's text. Everything else
+        follows from ordinary batch classification: when a changed doc was
+        the delegate of an exact-dup group, the in-batch exact grouping
+        promotes the smallest remaining member to delegate of the old text
+        (the content still exists in the corpus — only the crawler's copy
+        under that url changed); a split or a new min label comes from the
+        in-batch exact/fuzzy edges plus connected components; members or
+        new content that touch untouched clusters are found by the probe.
 
         Commit protocol (the closest an append-only parquet store gets to
-        the table format's atomic snapshot): every new row is appended at
-        each doc's NEXT version — invisible, because a row is live only
-        when its ver EQUALS the doc's current version — and one final
-        tombstone append flips all touched versions at once. A crash
-        before the flip leaves only invisible orphans plus the inflight
-        marker; readers fail loudly on the marker (reference analog:
-        pcompress refuses mismatched archive updates, pcompress.c
-        metadata checks), and re-running update_batch with the same pages
-        heals — detection reads only committed state, and the re-run
-        writes at a version above the orphans'. Merge-log rows from the
-        classification step are the one pre-commit-visible write:
-        duplicates across a heal are idempotent in the closure, and a
-        dangling row is unreachable once the update commits.
+        the table format's atomic snapshot): every doc the update
+        re-ingests — affected-cluster members plus the batch's changed and
+        new docs — gets a pending version above any row it has in any
+        table. While it is set, reads hide every row of those docs, and
+        every row written for them lands at the pending version —
+        invisible, because a row is live only when its ver EQUALS the
+        doc's current version. One final tombstone append sets that
+        version for every table x every such doc at once: the old rows
+        (merge rows included, versioned by the cluster id they retire)
+        die and the new ones go live; a table that got no new row for a
+        doc has no live row for it after the flip. A crash before the
+        flip leaves only invisible orphans plus the inflight marker;
+        readers fail loudly on the marker (reference analog: pcompress
+        refuses mismatched archive updates, pcompress.c metadata checks),
+        and re-running update_batch with the same pages heals — detection
+        reads only committed state, and the re-run writes at a version
+        above the orphans'. Merge rows that fold an untouched cluster
+        into a re-ingested one are the one pre-commit-visible write: the
+        re-run derives the same rows, and duplicates are idempotent in
+        the closure.
 
-        Parity contract (tests/test_incremental.py): after update_batch,
+        Parity contract (tests/test_update.py): after update_batch,
         assignments() equals a monolithic pipeline run over the updated
         corpus, at default caps (the add_batch cap caveat in the module
         docstring applies here identically)."""
@@ -1002,314 +978,140 @@ class IncrementalDedupIndex:
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
             self._pending_vers = None
-            self._sigs_overlay = None
-            self._keys_overlay = None
-            self._assign_overlay = None
-            self._known_exclude = None
 
     def _update_batch_inner(self, pages: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
-        cfg, spark = self.cfg, self.spark
         fs = self._fs()
         with CacheScope():
+            live_sigs = self._live("sigs")
+            if live_sigs is None:
+                return self.add_batch(pages)
             # ---- detect: batch identity vs CURRENT content per doc.
-            # Delegates carry their own sha; identity-dup docs carry their
-            # parent delegate's (texts equal by construction).
-            base = exact.base_ids(pages)
+            # Delegates carry their own text; identity children carry
+            # their parent delegate's (texts equal by construction).
             w = Window.partitionBy("doc_id").orderBy("text_sha")
             base = (
-                base.withColumn("_rn", F.row_number().over(w))
+                exact.base_ids(pages)
+                .withColumn("_rn", F.row_number().over(w))
                 .filter(F.col("_rn") == 1)
                 .drop("_rn")
                 .localCheckpoint(eager=True)
             )
-            live_sigs = self._live("sigs")
-            if live_sigs is None:
-                return self.add_batch(pages)
+            current = live_sigs.select("url", "doc_id", "text_sha", "lang", "text")
             live_links = self._live("links")
-            cur = live_sigs.select("doc_id", F.col("text_sha").alias("_cur"))
-            links_dd = None
             if live_links is not None:
                 # crash-window duplicate link rows are expected; one row
-                # per doc is the contract for every consumer below
-                links_dd = live_links.dropDuplicates(["doc_id"]).localCheckpoint(
-                    eager=True
-                )
-                cur = cur.unionByName(
-                    links_dd.join(
+                # per doc is the contract
+                current = current.unionByName(
+                    live_links.dropDuplicates(["doc_id"])
+                    .join(
                         live_sigs.select(
                             F.col("doc_id").alias("parent_id"),
-                            F.col("text_sha").alias("_cur"),
+                            "text_sha",
+                            "lang",
+                            "text",
                         ),
                         "parent_id",
-                    ).select("doc_id", "_cur")
+                    )
+                    .select(
+                        F.lit(None).cast("string").alias("url"),
+                        "doc_id",
+                        "text_sha",
+                        "lang",
+                        "text",
+                    )
                 )
-            cls = base.join(cur, "doc_id", "left").localCheckpoint(eager=True)
-            changed = cls.filter(
-                F.col("_cur").isNotNull() & (F.col("_cur") != F.col("text_sha"))
+            cls = base.join(
+                current.select("doc_id", F.col("text_sha").alias("_cur")),
+                "doc_id",
+                "left",
+            ).localCheckpoint(eager=True)
+            # changed-doc set stays a DataFrame end-to-end — no collected
+            # id list, so a FULL re-crawl (every url changed) is a join
+            # problem, not an out-of-memory collect
+            chdf, n_changed = _id_frame(
+                cls.filter(F.col("_cur") != F.col("text_sha"))
+                .select("doc_id")
+                .distinct()
             )
-            # changed-doc set stays a DataFrame end-to-end — no driver-
-            # side id list, so a FULL re-crawl (every url changed) is a
-            # join problem, not a driver OOM (r4 VERDICT task #3). The
-            # count is a 1-row metadata-scale action gating both the
-            # empty fast-path and the broadcast hint.
-            chdf = (
-                changed.select("doc_id").distinct().localCheckpoint(eager=True)
-            )
-            n_changed = chdf.count()
             if n_changed == 0:
                 # nothing to upsert (or a healed re-run whose update
                 # already committed): clear any marker, ingest the rest
                 fs.delete(self._p("_update_inflight"))
                 return self.add_batch(pages)
-            if n_changed <= _UPDATE_BROADCAST_MAX:
-                chdf = F.broadcast(chdf)
-            to_classify = (
-                cls.filter(
-                    F.col("_cur").isNull()
-                    | (F.col("_cur") != F.col("text_sha"))
-                )
-                .select("url", "text", "lang")
-                .localCheckpoint(eager=True)
-            )
 
             # ---- loud gate: marker up before any index write
             fs.delete(self._p("_update_inflight"))
-            chdf.select("doc_id").coalesce(
+            chdf.coalesce(
                 max(1, min(64, n_changed // 1_000_000 + 1))
             ).write.mode("overwrite").parquet(self._p("_update_inflight"))
 
-            # ---- plan: affected clusters + members (committed state).
-            # Affected-cluster ids likewise stay distributed: a semi-join
-            # selects the members instead of an isin over a Python list.
+            # ---- the docs to re-ingest: every member of an affected
+            # cluster (committed state) plus the batch's changed and new
+            # docs
             mm = self._merge_closure()
-            aff_df = (
-                self._resolved_for(chdf, mm)
-                .select("cluster_id")
-                .distinct()
-                .localCheckpoint(eager=True)
+            aff, _ = _id_frame(
+                self._resolved_for(chdf, mm).select("cluster_id").distinct()
             )
-            if aff_df.count() <= _UPDATE_BROADCAST_MAX:
-                aff_df = F.broadcast(aff_df)
-            a_live = self._live("assignments")
-            members = (
-                self._apply_closure(
-                    a_live.select("doc_id", "cluster_id"), mm
-                )
-                .join(aff_df, "cluster_id", "left_semi")
+            upserted = cls.filter(
+                ~F.col("_cur").eqNullSafe(F.col("text_sha"))
+            ).select("doc_id")
+            touched = (
+                self._apply_closure(self._live("assignments"), mm)
+                .join(aff, "cluster_id", "left_semi")
                 .select("doc_id")
+                .unionByName(upserted)
                 .distinct()
                 .localCheckpoint(eager=True)
             )
-            members_minus = members.join(
-                chdf, "doc_id", "left_anti"
-            ).localCheckpoint(eager=True)
-
-            # ---- promotion plan: changed delegates with surviving
-            # identity children hand the old content's delegate role (and
-            # sig/key rows) to the smallest child
-            live_keys = self._live("keys")
-            ch_deleg = live_sigs.join(chdf, "doc_id", "left_semi")
-            promo_sigs = promo_keys = promo_links = None
-            children = None
-            if links_dd is not None:
-                children = links_dd.join(
-                    chdf.select(F.col("doc_id").alias("parent_id")),
-                    "parent_id",
-                    "left_semi",
-                ).join(chdf, "doc_id", "left_anti")
-                promo = children.groupBy("parent_id").agg(
-                    F.min("doc_id").alias("new_rep")
+            # the batch, plus the members it does not carry at their
+            # current content; url stays NULL where the index has none
+            reingest = base.unionByName(
+                current.join(touched, "doc_id", "left_semi").join(
+                    base, "doc_id", "left_anti"
                 )
-                promo_sigs = (
-                    ch_deleg.join(
-                        promo, ch_deleg["doc_id"] == promo["parent_id"]
-                    )
-                    .select(
-                        F.col("new_rep").alias("doc_id"),
-                        F.lit(None).cast("string").alias("url"),
-                        "text_sha",
-                        "lang",
-                        "text",
-                        "nshingles",
-                        "minhash",
-                        "simhash",
-                    )
-                    .localCheckpoint(eager=True)
-                )
-                promo_keys = (
-                    live_keys.select("doc_id", "ch", "key")
-                    .join(promo, live_keys["doc_id"] == promo["parent_id"])
-                    .select(F.col("new_rep").alias("doc_id"), "ch", "key")
-                    .dropDuplicates(["doc_id", "ch", "key"])
-                    .localCheckpoint(eager=True)
-                    if live_keys is not None
-                    else None
-                )
-                promo_links = (
-                    children.join(promo, "parent_id")
-                    .filter(F.col("doc_id") != F.col("new_rep"))
-                    .select("doc_id", F.col("new_rep").alias("parent_id"))
-                    .localCheckpoint(eager=True)
-                )
-                children = children.localCheckpoint(eager=True)
-
-            # ---- uncommitted versions: everything this update writes
-            # goes at (per-doc raw max over every table) + 1, above both
-            # committed state and any crashed attempt's orphans
-            touched = chdf.select("doc_id").unionByName(
-                members.select("doc_id")
             )
-            if children is not None:
-                touched = touched.unionByName(children.select("doc_id"))
-            touched = touched.unionByName(
-                base.join(cur, "doc_id", "left_anti").select("doc_id")
-            )
-            touched = touched.distinct().localCheckpoint(eager=True)
-            maxes = []
-            for name in ("sigs", "keys", "assignments", "links", "tombstones"):
+
+            # ---- pending versions: (per-doc raw max over every table)
+            # + 1, above both committed state and any crashed attempt's
+            # orphans
+            vers = self.spark.createDataFrame([], "doc_id long, ver int")
+            for name in (*_TBL, "tombstones"):
                 df = self._read(name)
                 if df is not None and "ver" in df.columns:
-                    maxes.append(
-                        df.join(touched, "doc_id", "left_semi")
-                        .groupBy("doc_id")
-                        .agg(F.max("ver").alias("_mv"))
+                    vers = vers.unionByName(
+                        df.select(
+                            F.col(_KEY.get(name, "doc_id")).alias("doc_id"),
+                            "ver",
+                        )
                     )
-            mv = None
-            for m in maxes:
-                mv = m if mv is None else mv.unionByName(m)
-            if mv is not None:
-                mv = mv.groupBy("doc_id").agg(F.max("_mv").alias("_mv"))
-                vnext = touched.join(mv, "doc_id", "left").select(
+            mv = (
+                vers.join(touched, "doc_id", "left_semi")
+                .groupBy("doc_id")
+                .agg(F.max("ver").alias("_mv"))
+            )
+            self._pending_vers, _ = _id_frame(
+                touched.join(mv, "doc_id", "left").select(
                     "doc_id",
-                    (F.coalesce(F.col("_mv"), F.lit(0)) + 1).alias("_pv"),
+                    (F.coalesce(F.col("_mv"), F.lit(0)) + 1)
+                    .cast("int")
+                    .alias("_pv"),
                 )
-            else:
-                vnext = touched.select(
-                    "doc_id", F.lit(1).alias("_pv")
-                )
-            vnext = vnext.localCheckpoint(eager=True)
-            self._pending_vers = F.broadcast(vnext)
+            )
 
-            # ---- overlays: the post-update pre-classification corpus
-            sigs_overlay = live_sigs.join(chdf, "doc_id", "left_anti")
-            if promo_sigs is not None:
-                sigs_overlay = sigs_overlay.unionByName(promo_sigs)
-            keys_overlay = (
-                live_keys.select("doc_id", "ch", "key").join(
-                    chdf, "doc_id", "left_anti"
-                )
-                if live_keys is not None
-                else None
-            )
-            if promo_keys is not None and keys_overlay is not None:
-                keys_overlay = keys_overlay.unionByName(promo_keys)
-            self._sigs_overlay = sigs_overlay
-            self._keys_overlay = keys_overlay
-            self._known_exclude = chdf
+            out = self._add_batch_inner(reingest)
 
-            # ---- relabel the remaining members of affected clusters:
-            # re-verify their subgraph from stored sigs/keys (identity
-            # edges from links, fuzzy edges re-verified) — a removed doc
-            # can only SPLIT a component or change its min label, so the
-            # member set is closed and the pass needs no corpus scan
-            # beyond the members' own rows.
-            D = tracked_persist(
-                sigs_overlay.join(members_minus, "doc_id", "left_semi")
-            )
-            keysD = (
-                keys_overlay.join(members_minus, "doc_id", "left_semi")
-                .dropDuplicates(["doc_id", "ch", "key"])
-                if keys_overlay is not None
-                else None
-            )
-            id_edges = spark.createDataFrame([], "src long, dst long")
-            if links_dd is not None:
-                keep_links = links_dd.join(
-                    members_minus, "doc_id", "left_semi"
-                ).join(
-                    chdf.select(F.col("doc_id").alias("parent_id")),
-                    "parent_id",
-                    "left_anti",
-                )
-                all_links = keep_links
-                if promo_links is not None:
-                    all_links = keep_links.unionByName(promo_links)
-                id_edges = all_links.select(
-                    F.col("doc_id").alias("src"),
-                    F.col("parent_id").alias("dst"),
-                )
-            if keysD is not None:
-                mcands, _hot, _pre = fused.candidates(
-                    keysD.localCheckpoint(eager=True),
-                    D.select("doc_id", "simhash"),
-                    cfg,
-                )
-                fuzzy_m = self._verified_fuzzy(mcands, D, None)
-            else:
-                fuzzy_m = spark.createDataFrame([], "src long, dst long")
-            edges_m = fuzzy_m.unionByName(id_edges).localCheckpoint(
-                eager=False
-            )
-            labels_m = cluster_labels(edges_m)
-            relabeled = tracked_persist(
-                members_minus.join(labels_m, "doc_id", "left").withColumn(
-                    "cluster_id", F.coalesce("cluster_id", "doc_id")
-                )
-            )
-            relabeled.count()
-            self._assign_overlay = relabeled
-
-            # ---- invisible appends: promotion rows, member relabels,
-            # then the fresh classification of changed/new content (its
-            # own appends also land at the uncommitted versions)
-            if promo_sigs is not None:
-                self._with_ver(promo_sigs, "sigs").write.mode(
-                    "append"
-                ).parquet(self._p("sigs"))
-            if promo_keys is not None:
-                self._append_keys(promo_keys)
-            if promo_links is not None:
-                self._append_links(promo_links)
-            self._write_assignments(relabeled, mode="append")
-            out = self._add_batch_inner(to_classify)
-
-            # ---- COMMIT: one tombstone append flips every touched doc's
-            # version — exactly the (tbl, doc) pairs that either received
-            # new rows (self-describing: raw rows found at the pending
-            # version) or lost their content with no replacement
-            flips = []
-            for name in ("sigs", "keys", "assignments", "links"):
-                df = self._read(name)
-                if df is None or "ver" not in df.columns:
-                    continue
-                flips.append(
-                    df.join(vnext, "doc_id")
-                    .filter(F.col("ver") == F.col("_pv"))
-                    .select(
-                        F.lit(_TBL[name]).alias("tbl"), "doc_id", "_pv"
-                    )
-                    .distinct()
-                )
-            kills = chdf.select(
-                F.lit(_TBL["sigs"]).alias("tbl"), "doc_id"
-            ).unionByName(
-                chdf.select(F.lit(_TBL["keys"]).alias("tbl"), "doc_id")
-            ).unionByName(
-                chdf.select(F.lit(_TBL["links"]).alias("tbl"), "doc_id")
-            )
-            if children is not None:
-                kills = kills.unionByName(
-                    children.select(
-                        F.lit(_TBL["links"]).alias("tbl"), "doc_id"
-                    )
-                )
-            tomb = kills.join(vnext, "doc_id").select("tbl", "doc_id", "_pv")
-            for f in flips:
-                tomb = tomb.unionByName(f)
+            # ---- COMMIT: one tombstone append flips every table's
+            # version of every re-ingested doc
             self._append_tombstones(
-                tomb.distinct().withColumnRenamed("_pv", "ver")
+                self._pending_vers.select(
+                    F.explode(
+                        F.array(*[F.lit(c) for c in _TBL.values()])
+                    ).alias("tbl"),
+                    "doc_id",
+                    F.col("_pv").alias("ver"),
+                )
             )
             fs.delete(self._p("_update_inflight"))
-            return out
+            return out.join(upserted, "doc_id", "left_semi")

@@ -2,7 +2,9 @@
 
 Bootstraps a corpus, then re-delivers a batch in which a fraction of
 already-indexed urls carry CHANGED content (plus fresh urls), and times
-  update_batch   — tombstone + relabel + reclassify (the upsert path)
+  update_batch   — hide the affected clusters, re-ingest them with the
+                   batch through add_batch's classification, one
+                   tombstone flip (the upsert path)
   add_batch      — the same-size all-fresh batch (the append path)
   monolithic     — full pipeline rerun over the post-update corpus
 Reports wall seconds (min of --reps) for each plus the ratios a daily

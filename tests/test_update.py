@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pcompress_spark.config import PipelineConfig  # noqa: E402
+from pcompress_spark.operators import incremental  # noqa: E402
 from pcompress_spark.operators.incremental import (  # noqa: E402
     IncrementalDedupIndex,
 )
@@ -66,11 +67,21 @@ GARBAGE = (
 )
 
 
-def test_update_splits_bridge_and_reclassifies(spark, tmp_path):
+@pytest.mark.parametrize(
+    "broadcast_max", [None, 0], ids=["broadcast", "shuffle"]
+)
+def test_update_splits_bridge_and_reclassifies(
+    spark, tmp_path, monkeypatch, broadcast_max
+):
     """Updating the bridge doc's content must SPLIT the merged cluster
     back into {a} and {c} (labels = their own ids) and classify the new
     content standalone — exactly what a fresh run over the updated corpus
-    produces."""
+    produces. The "shuffle" case closes the broadcast gate so the
+    update's id frames take the shuffle-join side."""
+    if broadcast_max is not None:
+        monkeypatch.setattr(
+            incremental, "_UPDATE_BROADCAST_MAX", broadcast_max
+        )
     a, c, bridge = _chain_texts()
     idx = IncrementalDedupIndex(spark, PipelineConfig(), str(tmp_path))
     idx.bootstrap(
@@ -83,6 +94,47 @@ def test_update_splits_bridge_and_reclassifies(spark, tmp_path):
     res = _as_map(idx.assignments())
     ida, idc, idb = (_did(spark, u) for u in ("u://a", "u://c", "u://b"))
     assert res == {ida: ida, idc: idc, idb: idb}, res
+
+
+def test_update_splits_cluster_built_by_merge(spark, tmp_path):
+    """A cluster bridged by add_batch is held together by a merges/ row.
+    Updating the bridge must retire that row with the re-ingested docs,
+    or the larger of a/c keeps resolving to the smaller's id. compact()
+    then folds the versioned state without losing a re-ingested doc."""
+    a, c, bridge = _chain_texts()
+    idx = IncrementalDedupIndex(spark, PipelineConfig(), str(tmp_path))
+    idx.bootstrap(_pages(spark, [("u://a", a), ("u://c", c)]))
+    idx.add_batch(_pages(spark, [("u://b", bridge)]))
+    before = _as_map(idx.assignments())
+    assert len(set(before.values())) == 1, "precondition: one merged cluster"
+
+    idx.update_batch(_pages(spark, [("u://b", GARBAGE)]))
+    res = _as_map(idx.assignments())
+    ida, idc, idb = (_did(spark, u) for u in ("u://a", "u://c", "u://b"))
+    assert res == {ida: ida, idc: idc, idb: idb}, res
+    idx.compact()
+    assert _as_map(idx.assignments()) == res
+
+
+def test_update_to_text_of_existing_delegate(spark, tmp_path):
+    """New content that exactly equals another delegate's text joins it
+    through the identity tier: the updated doc keeps no live sig/key row
+    (its old ones are flipped dead with no replacement) and its live link
+    points at that delegate."""
+    a, c, _bridge = _chain_texts()
+    idx = IncrementalDedupIndex(spark, PipelineConfig(), str(tmp_path))
+    idx.bootstrap(_pages(spark, [("u://a", a), ("u://c", c)]))
+    ida, idc = _did(spark, "u://a"), _did(spark, "u://c")
+
+    idx.update_batch(_pages(spark, [("u://a", c)]))
+    low = min(ida, idc)
+    assert _as_map(idx.assignments()) == {ida: low, idc: low}
+    for name in ("sigs", "keys"):
+        assert idx._live(name).filter(F.col("doc_id") == ida).count() == 0
+    links = {
+        r["doc_id"]: r["parent_id"] for r in idx._live("links").collect()
+    }
+    assert links == {ida: idc}
 
 
 def test_update_promotes_delegate_of_identity_group(spark, tmp_path):
@@ -137,18 +189,13 @@ def test_update_reassigns_min_label(spark, tmp_path):
     assert res[min(ida, ida2)] == min(ida, ida2)
 
 
-def test_update_mixed_batch_matches_monolithic(
-    spark, pages_df, tmp_path_factory
-):
-    """The VERDICT-bar test: ingest the golden corpus, mutate ~5% of urls'
-    content, update with a batch mixing changed + unchanged + brand-new
-    rows, and compare assignments() against a fresh monolithic run over
-    the updated corpus."""
+@pytest.fixture(scope="module")
+def mixed_update(spark, pages_df, tmp_path_factory):
+    """The golden corpus with ~5% of urls' content mutated: the update
+    batch (changed + unchanged + brand-new rows), the number of rows it
+    should classify, and a fresh monolithic run's labels over the
+    updated corpus."""
     from pcompress_spark.pipeline import DedupPipeline
-
-    idx_dir = str(tmp_path_factory.mktemp("upd_idx"))
-    idx = IncrementalDedupIndex(spark, PipelineConfig(), idx_dir)
-    idx.bootstrap(pages_df)
 
     base_cols = pages_df.select("url", "text", "lang")
     sel = F.pmod(F.xxhash64("url"), F.lit(20)) == 0  # ~5% of urls
@@ -173,9 +220,6 @@ def test_update_mixed_batch_matches_monolithic(
         fresh_rows, "url string, text string, lang string"
     )
     batch = mutated.unionByName(unchanged).unionByName(fresh)
-    out = idx.update_batch(batch)
-    # changed + new rows are classified; unchanged are no-ops
-    assert out.count() == mutated.count() + len(fresh_rows)
 
     updated_corpus = (
         base_cols.join(mutated.select("url"), "url", "left_anti")
@@ -188,6 +232,34 @@ def test_update_mixed_batch_matches_monolithic(
     ).run(updated_corpus)
     full = {r["doc_id"]: r["cluster_id"] for r in
             mono.select("doc_id", "cluster_id").collect()}
+    return batch, mutated.count() + len(fresh_rows), full
+
+
+@pytest.mark.parametrize("build", ["bootstrap", "bootstrap_add_batch"])
+def test_update_mixed_batch_matches_monolithic(
+    spark, pages_df, tmp_path_factory, mixed_update, build
+):
+    """The VERDICT-bar test: index the golden corpus, mutate ~5% of urls'
+    content, update with a batch mixing changed + unchanged + brand-new
+    rows, and compare assignments() against a fresh monolithic run over
+    the updated corpus. The index is built either by one bootstrap or by
+    bootstrap(one xxhash half) + add_batch(the other), so that merges/
+    rows exist before the update."""
+    batch, n_classified, full = mixed_update
+    idx_dir = str(tmp_path_factory.mktemp("upd_idx"))
+    idx = IncrementalDedupIndex(spark, PipelineConfig(), idx_dir)
+    if build == "bootstrap":
+        idx.bootstrap(pages_df)
+    else:
+        half = F.pmod(F.xxhash64("url"), F.lit(2))
+        idx.bootstrap(pages_df.filter(half == 0))
+        idx.add_batch(pages_df.filter(half == 1))
+        assert idx._read("merges") is not None, "precondition: merges"
+
+    out = idx.update_batch(batch)
+    # changed + new rows are classified; unchanged are no-ops
+    assert out.count() == n_classified
+
     incr = _as_map(idx.assignments())
     assert len(incr) == len(full)
     diff = {d: (c, full[d]) for d, c in incr.items() if full[d] != c}
