@@ -117,16 +117,6 @@ class PipelineConfig:
                                      # guarantee: shared span >= window + stride - 1
                                      # in BOTH docs is caught; 64+992-1=1055 < 2048
                                      # with both-side anchor alignment (see substring.py)
-    substring_screen_mode: str = "auto"
-                                     # window-hash screen before the byte-
-                                     # confirming UDF: "on" | "off" |
-                                     # "auto" (screen only when
-                                     # substring_min_len >= the ~1 KB
-                                     # break-even — the screen arrays cost
-                                     # ~8 bytes/char through two joins, so
-                                     # for short-doc configs they exceed
-                                     # the confirm they save; see
-                                     # verify.confirm_substring_pairs)
 
     checkpoint_dir: str = "/tmp/pcompress_spark_ckpt"
 
@@ -137,19 +127,6 @@ class PipelineConfig:
         assert self.simhash_blocks >= self.simhash_radius + 1, (
             "pigeonhole needs radius+1 blocks"
         )
-        assert self.substring_screen_mode in ("on", "off", "auto"), (
-            "substring_screen_mode must be on/off/auto"
-        )
-
-    def use_substring_screen(self) -> bool:
-        """Resolve substring_screen_mode: screen iff it is cheaper than the
-        byte-confirm it avoids (break-even ~1 KB min span, see
-        verify.confirm_substring_pairs)."""
-        if self.substring_screen_mode == "on":
-            return True
-        if self.substring_screen_mode == "off":
-            return False
-        return self.substring_min_len >= 1024
 
     # size-typed fields that accept "8k"/"2M"-style CLI literals
     _SIZE_FIELDS = frozenset(

@@ -68,7 +68,7 @@ from pcompress_spark.analysis import multimodal as M
 from pcompress_spark.config import DEFAULT_CONFIG
 from pcompress_spark.functions import text as TX
 from pcompress_spark.functions.shingling import make_sig_udf
-from pcompress_spark.operators import lsh, simhash, substring
+from pcompress_spark.operators import fused
 from pcompress_spark.operators.components import cluster_labels
 
 W16 = 16          # char shingle width (== reference rolling window, SURVEY §7)
@@ -133,37 +133,20 @@ def _sizes(sh: DataFrame) -> DataFrame:
     return sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
 
 
-def _pair_jaccard(sh: DataFrame, pairs: DataFrame | None) -> DataFrame:
-    """Exact (inter_cnt, union_cnt, jaccard) per doc pair from shingle rows.
-
-    pairs=None → all co-occurring pairs (complete enumeration via the
-    inverted shingle index, i.e. self-join on g). pairs given → computed
-    only for those candidate pairs (the LSH-restricted path).
-    """
+def _pair_jaccard(sh: DataFrame) -> DataFrame:
+    """Exact (inter_cnt, union_cnt, jaccard) for every co-occurring pair:
+    complete enumeration via the inverted shingle index (self-join on g;
+    oracle-grade, O(sum bucket^2) — only for ground-truth computation).
+    Candidate-restricted verification is _pair_jaccard_arrays."""
     sizes = _sizes(sh)
-    if pairs is None:
-        # complete enumeration: inverted-index self-join (oracle-grade;
-        # O(sum bucket^2) — only for ground-truth computation)
-        a, b = sh.alias("a"), sh.alias("b")
-        joined = a.join(
-            b,
-            (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        inter = joined.groupBy("id_a", "id_b").agg(
-            F.count(F.lit(1)).alias("inter_cnt")
-        )
-    else:
-        # candidate-restricted: cost is O(|candidates| * shingles/doc) —
-        # the scale path; shingles join on composite (doc_id, g) keys
-        a = sh.select(F.col("doc_id").alias("id_a"), "g")
-        b = sh.select(F.col("doc_id").alias("id_b"), "g")
-        inter = (
-            pairs.join(a, "id_a")
-            .join(b, ["id_b", "g"])
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("inter_cnt"))
-        )
-        # (retained for reference; the hot queries use _pair_jaccard_arrays)
+    a, b = sh.alias("a"), sh.alias("b")
+    joined = a.join(
+        b,
+        (F.col("a.g") == F.col("b.g")) & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    inter = joined.groupBy("id_a", "id_b").agg(
+        F.count(F.lit(1)).alias("inter_cnt")
+    )
     sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
     return (
@@ -266,7 +249,29 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumeration via inverted shingle index; the correctness anchor every
     sketch channel is graded against."""
     sh = _shingle_rows(_docs(spark, sf_dir))
-    return _pair_jaccard(sh, None).filter(F.col("jaccard") >= TAU)
+    return _pair_jaccard(sh).filter(F.col("jaccard") >= TAU)
+
+
+def _channel_pairs(docs: DataFrame, ch: int) -> DataFrame:
+    """Distinct (id_a, id_b) that the production generator, fused.candidates,
+    proposes from channel `ch`'s bucket keys alone.
+
+    The channel is selected by filtering the fused keyed rows (input data,
+    the generator itself is unchanged). min_matches=0 keeps every proposed
+    pair, so the sketch's recall is what the oracle certifies."""
+    sig_udf = make_sig_udf(DOC_CFG)
+    reps = docs.select("doc_id", "text").withColumn("_s", sig_udf("text")).select(
+        "doc_id",
+        "text",
+        F.col("_s.nshingles").alias("nshingles"),
+        F.col("_s.minhash").alias("minhash"),
+        F.col("_s.simhash").alias("simhash"),
+    )
+    rows = fused.fused_keyed_rows(reps, DOC_CFG).filter(F.col("ch") == ch)
+    cands, _hot, _dropped = fused.candidates(
+        rows, reps.select("doc_id", "simhash"), DOC_CFG, min_matches=0
+    )
+    return cands.select("id_a", "id_b").distinct()
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -277,48 +282,28 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (P[miss] = (1-J)^20 <= 6e-5 at J=0.4).
     """
     docs = _docs(spark, sf_dir)
-    sig_udf = make_sig_udf(DOC_CFG)
-    sigs = docs.select("doc_id", "text").withColumn("_s", sig_udf("text")).select(
-        "doc_id",
-        F.col("_s.nshingles").alias("nshingles"),
-        F.col("_s.minhash").alias("minhash"),
-    )
-    # exact_overlap off: this query consumes only the pair SET (then
-    # exact-verifies), and the hot-key count correction never changes the
-    # set — skip its extra joins
-    cands, _hot = lsh.lsh_candidates(sigs, DOC_CFG, exact_overlap=False)
-    pairs = cands.select("id_a", "id_b").distinct()
+    pairs = _channel_pairs(docs, fused.CH_MINHASH)
     return _pair_jaccard_arrays(docs, pairs)
 
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash hamming<=3 candidates + exact-Jaccard verification [A2/J5]."""
+    """SimHash hamming-ball candidates + exact-Jaccard verification [A2/J5]."""
     docs = _docs(spark, sf_dir)
-    sig_udf = make_sig_udf(DOC_CFG)
-    sigs = docs.select("doc_id", "text").withColumn("_s", sig_udf("text")).select(
-        "doc_id",
-        F.col("_s.nshingles").alias("nshingles"),
-        F.col("_s.simhash").alias("simhash"),
-    )
-    cands, _hot = simhash.simhash_candidates(sigs, DOC_CFG)
-    pairs = cands.select("id_a", "id_b").distinct()
+    pairs = _channel_pairs(docs, fused.CH_SIMHASH)
     return _pair_jaccard_arrays(docs, pairs)
 
 
 def q_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairs sharing a >=96-char verbatim span: winnowing anchors (guarantee
-    79 chars) -> bucket join -> byte-confirm [F11/W1]. The window-hash
-    screen is mode-gated (cfg.use_substring_screen): at this table's
-    96-char spans the screen arrays cost more than the confirm they save
-    (the r2 regression), so `auto` confirms directly on text; the
-    production 2048-char config keeps the screen."""
+    79 chars) -> bucket join -> byte-confirm [F11/W1]. At this table's
+    96-char spans confirm_substring_pairs skips the window-hash screen
+    (its arrays would cost more than the confirm they save) and confirms
+    directly on text; the production 2048-char config keeps the screen."""
     from pcompress_spark.operators.verify import confirm_substring_pairs
 
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    cands, _hot = substring.substring_candidates(docs, DOC_CFG)
-    return confirm_substring_pairs(
-        cands.select("id_a", "id_b").distinct(), docs, DOC_CFG
-    ).select("id_a", "id_b")
+    pairs = _channel_pairs(docs, fused.CH_WINNOW)
+    return confirm_substring_pairs(pairs, docs, DOC_CFG).select("id_a", "id_b")
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -93,32 +93,6 @@ def make_sig_udf_lang(cfg: PipelineConfig):
     return sig_udf
 
 
-def make_shingle_hashes_lang_udf(cfg: PipelineConfig):
-    """Lang-aware twin of make_shingle_hashes_udf: (text, lang) ->
-    array<long>, same per-lang dispatch as make_sig_udf_lang so verify
-    Jaccard is computed over the same sets the signatures sketched."""
-    byte_width = cfg.shingle_width
-    cjk_chars = cfg.cjk_shingle_chars
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def shingles_udf(texts: pd.Series, langs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                H.to_signed(
-                    H.shingles_for(
-                        texts.iloc[i] or "",
-                        langs.iloc[i] or "",
-                        byte_width,
-                        cjk_chars,
-                    )
-                )
-                for i in range(len(texts))
-            ]
-        )
-
-    return shingles_udf
-
-
 def make_shingle_hashes_udf(cfg: PipelineConfig):
     """pandas UDF: text -> array<long> of distinct hashed byte-window
     shingles (the exact sets the golden oracle uses). Vectorized numpy
@@ -170,27 +144,6 @@ def make_jaccard_lang_udf(cfg: PipelineConfig):
         return pd.Series(out)
 
     return jaccard_lang_udf
-
-
-def make_jaccard_udf(cfg: PipelineConfig):
-    """pandas UDF: (text_a, text_b) -> exact Jaccard on shingle sets.
-
-    Recomputes shingles from text at verify time instead of persisting the
-    (large) shingle arrays through shuffles — shingling is a cheap
-    vectorized pass; shipping 8B/char arrays through a join is not.
-    """
-    width = cfg.shingle_width
-
-    @F.pandas_udf(T.DoubleType())
-    def jaccard_udf(text_a: pd.Series, text_b: pd.Series) -> pd.Series:
-        out = np.zeros(len(text_a), dtype=np.float64)
-        for i in range(len(text_a)):
-            sa = H.shingle_hashes(text_a.iloc[i] or "", width)
-            sb = H.shingle_hashes(text_b.iloc[i] or "", width)
-            out[i] = H.jaccard(sa, sb)
-        return pd.Series(out)
-
-    return jaccard_udf
 
 
 def make_lcs_udf(cfg: PipelineConfig):

@@ -136,10 +136,10 @@ def candidates(
         adds |hot_keys(a) ∩ hot_keys(b)| — the over-cap band buckets both
         docs sit in. Each co-occurring band is counted exactly once (r2
         ADVICE), so the prefilter needs no star exemption.
-      - simhash: bucket co-occurrence is only the pigeonhole screen — the
-        exact hamming distance is confirmed here with codegen bit_count,
-        as the standalone channel does (operators/simhash.py); a pair
-        whose only proposer fails the hamming ball is dropped.
+      - simhash: bucket co-occurrence is only the pigeonhole screen
+        (operators/simhash.py keys) — the exact hamming distance is
+        confirmed here with codegen bit_count; a pair whose only proposer
+        fails the hamming ball is dropped.
       - winnow: anchor co-occurrence (byte-confirmed later in
         verify_edges).
 
@@ -280,8 +280,8 @@ def candidates(
         )
     )
     # pairs left with NO channel (hamming-failed, never minhash-proposed)
-    # are not candidates at all — dropped silently, as the standalone
-    # simhash channel's post-join filter does
+    # are not candidates at all — dropped silently: outside the hamming
+    # ball a simhash bucket hit is no evidence
     out = (
         scored.withColumn("channels", channels)
         .filter(F.size("channels") > 0)

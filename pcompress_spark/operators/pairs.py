@@ -69,7 +69,7 @@ def bucket_pairs(
     count UNDERCOUNTS for any pair sharing such a bucket — callers that
     count co-occurrence must exclude star rows from the count and add
     back each pair's shared over-cap bucket keys instead (the hot-key
-    intersect in operators/fused.py / lsh.py makes the count exact)."""
+    intersect in operators/fused.py makes the count exact)."""
     carry = carry or []
     # bands must partition [0, inf): small <= salt_min < med <= cap < star
     salt_min = min(salt_min, cap)

@@ -1,4 +1,4 @@
-"""SimHash hamming-ball candidate generation (J5).
+"""SimHash hamming-ball keys: pigeonhole blocks (J5).
 
 Reference: similar (not identical) blocks match when their 64-bit
 `similarity_hash` values collide in the same index slot with compatible
@@ -7,8 +7,9 @@ lengths (rabin/rabin_dedup.c:1368-1395). Document-level generalization:
 
 The theta-join "hamming(a,b) <= 3" is reduced to equi-joins by table
 rotation (pigeonhole): split 64 bits into 4 x 16-bit blocks — any pair
-within distance 3 agrees exactly on >= 1 block. GroupBy (block_idx,
-block_value) -> bucket self-join -> exact JVM-side hamming filter
+within distance 3 agrees exactly on >= 1 block. This module only defines
+the (block_idx, block_value) keys; operators/fused.py buckets and pairs
+them, then confirms the exact hamming distance JVM-side
 (`bit_count(a ^ b)`, whole-stage codegen, no UDF).
 """
 
@@ -17,7 +18,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from pcompress_spark.config import PipelineConfig
-from pcompress_spark.operators.pairs import bucket_pairs
 
 
 def simhash_blocks(reps: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -39,33 +39,3 @@ def simhash_blocks(reps: DataFrame, cfg: PipelineConfig) -> DataFrame:
         .select("doc_id", F.explode(F.array(*blocks)).alias("b"))
         .select("doc_id", F.col("b.blk_idx"), F.col("b.blk_val"))
     )
-
-
-def simhash_candidates(
-    reps: DataFrame, cfg: PipelineConfig
-) -> tuple[DataFrame, DataFrame]:
-    """(candidates(id_a, id_b, channel='simhash'), hot_bucket_log)."""
-    blocks = simhash_blocks(reps, cfg)
-    pairs, hot = bucket_pairs(
-        blocks,
-        ["blk_idx", "blk_val"],
-        cap=cfg.max_bucket_docs,
-        salt_min=cfg.salt_min,
-        salt_groups=cfg.salt_buckets,
-    )
-    pairs = pairs.groupBy("id_a", "id_b").agg(F.max("is_star").alias("is_star"))
-    sims = reps.select("doc_id", "simhash")
-    a = sims.alias("sa")
-    b = sims.alias("sb")
-    joined = (
-        pairs.join(a, pairs["id_a"] == F.col("sa.doc_id"))
-        .join(b, pairs["id_b"] == F.col("sb.doc_id"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("sa.simhash").bitwiseXOR(F.col("sb.simhash"))),
-        )
-        .filter(F.col("hamming") <= cfg.simhash_radius)
-        .select("id_a", "id_b", "is_star")
-        .withColumn("channel", F.lit("simhash"))
-    )
-    return joined, hot

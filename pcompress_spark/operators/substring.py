@@ -1,4 +1,4 @@
-"""Long-verbatim-substring candidate generation (F11 channel).
+"""Long-verbatim-substring keys: winnowing anchors (F11 channel).
 
 Reference: bsdiff finds byte-level shared runs between sketch-matched
 similar blocks (bsdiff/bsdiff.c, suffix-sort qsufsort :~90-200). Document
@@ -7,8 +7,9 @@ rabin/rabin_dedup.h:88) verbatim span even when whole-doc Jaccard is low.
 
 Spark-first shape: winnowing anchors (content-defined fingerprint sampling,
 Schleimer et al. 2003 — the same content-defined-boundary idea as the Rabin
-cut rule, rabin_dedup.c:664-666) -> explode -> bucket self-join -> exact
-verify with a byte-confirming common-substring UDF.
+cut rule, rabin_dedup.c:664-666) -> explode. This module only defines the
+anchor keys; operators/fused.py buckets and pairs them, and
+verify.confirm_substring_pairs byte-confirms the shared span.
 """
 
 from __future__ import annotations
@@ -17,7 +18,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from pcompress_spark.config import PipelineConfig
 from pcompress_spark.functions.shingling import make_anchors_udf
-from pcompress_spark.operators.pairs import bucket_pairs
 
 
 def anchor_explode(
@@ -34,21 +34,3 @@ def anchor_explode(
         "doc_id",
         F.explode(F.array_distinct(anchors_udf("text"))).alias("anchor"),
     )
-
-
-def substring_candidates(
-    reps_with_text: DataFrame, cfg: PipelineConfig
-) -> tuple[DataFrame, DataFrame]:
-    """(candidates(id_a, id_b, is_star, channel='winnow'), hot_bucket_log)."""
-    anchors = anchor_explode(reps_with_text, cfg)
-    pairs, hot = bucket_pairs(
-        anchors,
-        ["anchor"],
-        cap=cfg.max_bucket_docs,
-        salt_min=cfg.salt_min,
-        salt_groups=cfg.salt_buckets,
-    )
-    deduped = pairs.groupBy("id_a", "id_b").agg(
-        F.max("is_star").alias("is_star")
-    )
-    return deduped.withColumn("channel", F.lit("winnow")), hot

@@ -31,23 +31,9 @@ from pcompress_spark.cache import tracked_persist
 from pcompress_spark.config import PipelineConfig
 from pcompress_spark.functions.shingling import make_lcs_udf
 
-
-def shingle_hash_rows(docs_text: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """(doc_id, h) — distinct hashed w-byte-window shingles per doc.
-
-    The hash set is produced by the vectorized numpy rolling-hash UDF (the
-    same function the golden oracle uses — identical sets by construction);
-    explode + the downstream joins stay JVM-side, and only (long, long)
-    rows enter the verify shuffle. Byte windows (not chars) so multi-byte
-    scripts hash identically to the byte-oriented oracle.
-    """
-    from pcompress_spark.functions.shingling import make_shingle_hashes_lang_udf
-
-    shingles_udf = make_shingle_hashes_lang_udf(cfg)
-    lang_col = F.col("lang") if "lang" in docs_text.columns else F.lit("")
-    return docs_text.select(
-        "doc_id", F.explode(shingles_udf(F.col("text"), lang_col)).alias("h")
-    )
+# min shared-span length at which the window-hash screen is cheaper than
+# the byte-confirm it saves (see confirm_substring_pairs)
+SUBSTRING_SCREEN_MIN_LEN = 1024
 
 
 def attach_texts(
@@ -83,7 +69,7 @@ def prefilter_candidates(
     verbatim anchor match) is already strong. Star-downgraded pairs need
     NO exemption: the overlap stays exact under the star downgrade (star
     rows excluded from the count, shared over-cap buckets added back via
-    hot-key intersect — operators/fused.py / lsh.py). A blanket is_star
+    hot-key intersect — operators/fused.py). A blanket is_star
     exemption was measured at 171k junk pairs (5x the verify set) on a
     100k-doc boilerplate corpus.
 
@@ -151,30 +137,6 @@ def cap_candidate_degree(
     return kept, dropped
 
 
-def merge_candidates(*channel_dfs: DataFrame) -> DataFrame:
-    """Union candidates from all channels, one row per pair with the set of
-    channels that proposed it (SO1 union + A6 distinct), the signature
-    overlap where a channel measured one (minhash band co-occurrence),
-    and the star-downgrade flag (any channel)."""
-
-    def _norm(df: DataFrame) -> DataFrame:
-        if "mh_overlap" not in df.columns:
-            df = df.withColumn("mh_overlap", F.lit(None).cast("int"))
-        if "is_star" not in df.columns:
-            df = df.withColumn("is_star", F.lit(False))
-        return df.select("id_a", "id_b", "channel", "mh_overlap", "is_star")
-
-    frames = [_norm(df) for df in channel_dfs]
-    unioned = frames[0]
-    for df in frames[1:]:
-        unioned = unioned.unionByName(df)
-    return unioned.groupBy("id_a", "id_b").agg(
-        F.collect_set("channel").alias("channels"),
-        F.max("mh_overlap").alias("mh_overlap"),
-        F.max("is_star").alias("is_star"),
-    )
-
-
 def pair_jaccard(
     candidates: DataFrame, reps_with_text: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
@@ -234,13 +196,17 @@ def verify_edges(
 ) -> DataFrame:
     """candidates(id_a, id_b, channels) -> edges(src, dst, jaccard, kind).
 
-    near      — exact Jaccard >= tau_extra (JVM shingle join, no Python)
+    near      — exact Jaccard >= tau_extra (pair_jaccard: texts joined onto
+                each pair, one Arrow-batched pandas UDF re-shingles both
+                sides and intersects)
     substring — winnow-proposed pairs below the bar sharing a verified
-                >= substring_min_len verbatim span. Screening is JVM-side:
+                >= substring_min_len verbatim span. At min_len >=
+                SUBSTRING_SCREEN_MIN_LEN they are screened JVM-side first:
                 per-doc window-hash arrays are computed ONCE (pandas UDF),
                 pairs are screened with `array_intersect`, and the
                 byte-confirming lcs UDF runs only on hash hits (true spans
-                + 2^-64 collisions) — never once-per-candidate-pair.
+                + 2^-64 collisions). Below it the lcs UDF confirms every
+                pair directly.
     """
     # persist: jac feeds both the near branch and the substring pre-filter.
     # eager_jaccard forces it NOW so a multi-branch downstream action reads
@@ -284,9 +250,9 @@ def confirm_substring_pairs(
     stay cheaper than what it screens. At the production min_len (2048,
     long docs) it does; at short-doc configs it costs more than the
     confirm (measured: dedup_substring 22.6 -> 37.9 s at sf0.1 when the
-    screen ran unconditionally — r2 verdict), so `auto` mode screens only
-    for min_len >= the break-even (cfg.use_substring_screen)."""
-    if cfg.use_substring_screen():
+    screen ran unconditionally — r2 verdict), so it screens only for
+    min_len >= the ~1 KB break-even, SUBSTRING_SCREEN_MIN_LEN."""
+    if cfg.substring_min_len >= SUBSTRING_SCREEN_MIN_LEN:
         sub_cand = substring_screen(sub_cand, reps_with_text, cfg)
     lcs_udf = make_lcs_udf(cfg)
     return (

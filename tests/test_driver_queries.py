@@ -2,8 +2,9 @@
 
 The full Spark-vs-DuckDB oracle comparison (driver's correctness gate)
 lives in scripts/check_oracles.py and runs at sf0.01; these tests keep the
-contract importable, the plans pushdown-clean, and the approximate channel
-measurably close to the exact baseline.
+contract importable, the plans pushdown-clean, the approximate channel
+measurably close to the exact baseline, and the three sketch pair queries
+equal to their DuckDB oracles at sf0.01.
 """
 
 import os
@@ -19,6 +20,7 @@ from pcompress_spark.analysis import embeddings as E  # noqa: E402
 from tests.conftest import TESTDATA  # noqa: E402
 
 SF = os.path.join(TESTDATA, "sf0.001")
+SF01 = os.path.join(TESTDATA, "sf0.01")
 
 pytestmark = pytest.mark.skipif(
     not os.path.exists(os.path.join(SF, "documents.parquet")),
@@ -50,6 +52,33 @@ def test_minhash_lsh_equals_exact_pairs(spark):
     }
     assert lsh == exact
     assert len(exact) > 0
+
+
+@pytest.mark.skipif(
+    not os.path.exists(os.path.join(SF01, "documents.parquet")),
+    reason="sf0.01 testdata not present",
+)
+@pytest.mark.parametrize(
+    "name", ["minhash_lsh_pairs", "simhash_pairs", "substring_pairs"]
+)
+def test_pair_query_equals_duckdb_oracle(spark, name):
+    """At the driver gate's scale (sf0.01) each sketch channel's verified
+    pair set, with candidates from fused.candidates, equals the DuckDB
+    oracle's exact pair set: recall 1 and no false pair."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM"
+        f" read_parquet('{SF01}/documents.parquet')"
+    )
+    want = {
+        (int(a), int(b))
+        for a, b in con.execute(DQ.ORACLES[name]).df()[["id_a", "id_b"]].values
+    }
+    got = {(r.id_a, r.id_b) for r in DQ.QUERIES[name](spark, SF01).collect()}
+    assert got == want
+    assert len(want) > 0
 
 
 def test_ann_lsh_recall_vs_brute_force(spark):

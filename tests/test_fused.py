@@ -1,7 +1,7 @@
-"""The one candidate generator (fused.candidates): equivalence with the
-per-channel functions merged, exact overlap under the star downgrade,
-folded-prefilter parity, batch == probe shape, the r>1 overlap floor and
-its degree-cap ranking."""
+"""The one candidate generator (fused.candidates): equivalence with a
+brute-force bucket enumeration in plain Python, exact overlap under the
+star downgrade, folded-prefilter parity, batch == probe shape, the r>1
+overlap floor and its degree-cap ranking."""
 
 import os
 import sys
@@ -12,14 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pcompress_spark import datagen  # noqa: E402
 from pcompress_spark.config import PipelineConfig  # noqa: E402
-from pcompress_spark.operators import (  # noqa: E402
-    exact,
-    fused,
-    lsh,
-    simhash,
-    substring,
-    verify,
-)
+from pcompress_spark.operators import exact, fused, verify  # noqa: E402
 
 
 def _reps(spark, n=400, cfg=PipelineConfig()):
@@ -50,22 +43,61 @@ def _as_dict(df):
     return out
 
 
-def test_fused_equals_legacy_merge(spark):
-    """The fused one-shuffle path (prefilter gate at 0: every pair kept)
-    must produce exactly the candidate set, channel tags, and
-    band-co-occurrence counts of the three per-channel functions merged."""
-    cfg = PipelineConfig()
-    reps = _reps(spark, 400, cfg)
-    got_fused = _cands(reps, cfg, min_matches=0)[0]
-    legacy = verify.merge_candidates(
-        lsh.lsh_candidates(reps, cfg)[0],
-        simhash.simhash_candidates(reps, cfg)[0],
-        substring.substring_candidates(reps, cfg)[0],
-    )
-    f, l = _as_dict(got_fused), _as_dict(legacy)
-    assert f == l
-    assert len(f) > 0
-    reps.unpersist()
+def _brute_force(reps, cfg):
+    """Every pair sharing a (ch, key) bucket of fused_keyed_rows, scored in
+    plain Python: minhash if they share a band key, simhash if they share
+    a block key AND lie within the hamming ball, winnow if they share an
+    anchor; mh_overlap = shared band keys x r. Valid only without over-cap
+    buckets (no star downgrade)."""
+    buckets = {}
+    for r in fused.fused_keyed_rows(reps, cfg).collect():
+        buckets.setdefault((r.ch, r.key), set()).add(r.doc_id)
+    shared = {}  # (id_a, id_b) -> {ch: number of shared keys}
+    for (ch, _key), docs in buckets.items():
+        docs = sorted(docs)
+        for i, a in enumerate(docs):
+            for b in docs[i + 1:]:
+                per_ch = shared.setdefault((a, b), {})
+                per_ch[ch] = per_ch.get(ch, 0) + 1
+    sim = {r.doc_id: r.simhash for r in reps.select("doc_id", "simhash").collect()}
+    out = {}
+    for (a, b), per_ch in shared.items():
+        channels = []
+        if fused.CH_MINHASH in per_ch:
+            channels.append("minhash")
+        hamming = bin((sim[a] ^ sim[b]) & (2**64 - 1)).count("1")
+        if fused.CH_SIMHASH in per_ch and hamming <= cfg.simhash_radius:
+            channels.append("simhash")
+        if fused.CH_WINNOW in per_ch:
+            channels.append("winnow")
+        if not channels:
+            continue
+        overlap = per_ch.get(fused.CH_MINHASH)
+        out[(a, b)] = (
+            tuple(sorted(channels)),
+            None if overlap is None else overlap * cfg.lsh_rows,
+            False,
+        )
+    return out
+
+
+def test_fused_equals_brute_force(spark):
+    """fused.candidates with the prefilter gate at 0 (every pair kept)
+    must produce exactly the brute-force candidate set, channel tags and
+    band-co-occurrence counts, at r=1 and at r=2. Neither corpus has an
+    over-cap bucket, so the star downgrade stays covered by the crafted
+    corpus tests below."""
+    for n, cfg in (
+        (400, PipelineConfig()),
+        (800, PipelineConfig(lsh_bands=10, lsh_rows=2)),
+    ):
+        reps = _reps(spark, n, cfg)
+        cands, hot, _dropped = _cands(reps, cfg, min_matches=0)
+        assert hot.count() == 0
+        got, want = _as_dict(cands), _brute_force(reps, cfg)
+        assert got == want
+        assert len(want) > 0
+        reps.unpersist()
 
 
 def _crafted_reps(spark):
@@ -112,22 +144,16 @@ def test_star_downgrade_counts_are_exact_overlap(spark):
     expect[(2, 3)] = 14
     expect[(7, 8)] = 1
 
-    for cands in (
-        _cands(reps, cfg, min_matches=0)[0],
-        lsh.lsh_candidates(reps, cfg)[0].withColumn(
-            "channels", F.array(F.lit("minhash"))
-        ),
-    ):
-        got = {
-            (r.id_a, r.id_b): (r.mh_overlap, bool(r.is_star))
-            for r in cands.collect()
-        }
-        assert {k: v[0] for k, v in got.items()} == expect
-        # star flag marks pairs EMITTED by the star branch (rep-member);
-        # member-member pairs get their hot-bucket counts via the
-        # intersect without the flag
-        assert got[(1, 2)][1]
-        assert not got[(2, 3)][1] and not got[(7, 8)][1]
+    got = {
+        (r.id_a, r.id_b): (r.mh_overlap, bool(r.is_star))
+        for r in _cands(reps, cfg, min_matches=0)[0].collect()
+    }
+    assert {k: v[0] for k, v in got.items()} == expect
+    # star flag marks pairs EMITTED by the star branch (rep-member);
+    # member-member pairs get their hot-bucket counts via the
+    # intersect without the flag
+    assert got[(1, 2)][1]
+    assert not got[(2, 3)][1] and not got[(7, 8)][1]
 
     # prefilter gates on the exact value: junk (7,8) drops, the rest keep
     kept, dropped = verify.prefilter_candidates(
