@@ -515,10 +515,10 @@ def ivf_recall_certify(
     )
 
 
-def _triangle_cells(q, g: int):
-    """Array of the g grid cells (ci, cj) covering block q — the same
-    triangle replication as operators/pairs.py: an unordered block pair
-    (p, q) owns exactly the cell (min, max)."""
+def _grid_cells(q, g: int):
+    """Array of the g grid cells (ci, cj) covering block q (triangle
+    replication): an unordered block pair (p, q) owns exactly the cell
+    (min, max)."""
     return F.array(
         *[
             F.struct(
@@ -556,13 +556,13 @@ def cosine_pairs_above(
     g = max(2, blocks)
     ar = (
         a.withColumn("_q", F.pmod(F.xxhash64("id_a"), F.lit(g)).cast("int"))
-        .withColumn("_cell", F.explode(_triangle_cells(F.col("_q"), g)))
+        .withColumn("_cell", F.explode(_grid_cells(F.col("_q"), g)))
         .select("id_a", "va", "na", "_q", "_cell.ci", "_cell.cj")
         .hint("shuffle_hash")
     )
     br = (
         b.withColumn("_r", F.pmod(F.xxhash64("id_b"), F.lit(g)).cast("int"))
-        .withColumn("_cell", F.explode(_triangle_cells(F.col("_r"), g)))
+        .withColumn("_cell", F.explode(_grid_cells(F.col("_r"), g)))
         .select("id_b", "vb", "nb", "_r", "_cell.ci", "_cell.cj")
         .hint("shuffle_hash")
     )

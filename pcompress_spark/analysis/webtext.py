@@ -204,9 +204,9 @@ GATE_TOP_NUM, GATE_TOP_DEN = 1, 6      # top_word_cnt/n_words > 1/6  -> top_word
 
 def curation_gate_pages(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Apply the keep/drop gate to a PAGES frame (url/text/... schema):
-    returns (kept_pages, drop_log(reason, n)). The dedup pipeline runs
-    this ahead of signatures when cfg.curation_gate is on — curating
-    before sketching is the order a training-data pipeline wants (no
+    returns (kept_pages, drop_log(reason, n)). `jobs/run_dedup.py --mode
+    curate` runs it as its own step ahead of dedup — curating before
+    sketching is the order a training-data pipeline wants (no
     sketch budget spent on rejected docs), and drops are logged by
     reason, never silent (the repo-wide cap/drop discipline).
 

@@ -96,12 +96,10 @@ class CheckpointManager:
         self,
         spark: SparkSession,
         base_dir: str,
-        fmt: str = "parquet",
         resume: bool = True,
     ) -> None:
         self.spark = spark
         self.base_dir = base_dir.rstrip("/")
-        self.fmt = fmt
         self.resume = resume
         self.fs = _HadoopFs(spark, self.base_dir)
         self.fs.mkdirs(self.base_dir)
@@ -133,7 +131,6 @@ class CheckpointManager:
         self,
         name: str,
         build,
-        extra_metrics: dict | None = None,
         distinct_col: str | None = None,
     ) -> DataFrame:
         """Run `build()` unless `name` is already checkpointed; always return
@@ -151,7 +148,7 @@ class CheckpointManager:
         df.write.mode("overwrite").parquet(self.path(name))
         wall_ms = int((time.time() - t0) * 1000)
         out = self.load(name)
-        self._record(name, out, wall_ms, extra_metrics or {}, distinct_col)
+        self._record(name, out, wall_ms, distinct_col)
         return out
 
     def note(self, stage: str, wall_ms: int, rows: int = -1, **extra) -> None:
@@ -168,7 +165,6 @@ class CheckpointManager:
         stage: str,
         df: DataFrame,
         wall_ms: int,
-        extra: dict,
         distinct_col: str | None = None,
     ) -> None:
         """Stage lineage row with PER-PARTITION detail (north rule): one
@@ -202,7 +198,6 @@ class CheckpointManager:
             "wall_ms": wall_ms,
             "n_partitions": len(partitions),
             "partitions": partitions,
-            **extra,
         }
         if distinct_col is not None:
             from pyspark.sql import functions as F

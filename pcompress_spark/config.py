@@ -62,45 +62,19 @@ class PipelineConfig:
                                      # per-content algorithm selection)
 
     # --- scale/skew knobs ---
-    salt_buckets: int = 16           # salt groups g for the triangle split of
-                                     # hot buckets (operators/pairs.py): a
-                                     # bucket of m docs spreads its m²/2 pairs
-                                     # over g(g+1)/2 join-key cells
-    salt_min: int = 256              # buckets larger than this get salted.
-                                     # bucket_pairs clamps it to
-                                     # max_bucket_docs, so at the default
-                                     # cap (64) the salted branch is empty
-                                     # BY DESIGN: a <= 64-doc bucket emits
-                                     # <= 2016 pairs in one key group —
-                                     # salting it was measured as pure
-                                     # replication overhead (16 copies of
-                                     # every mid-bucket row through the
-                                     # self-join) with zero skew benefit.
-                                     # The mechanism stays for large-cap
-                                     # configs where one bucket's m**2/2
-                                     # really can swamp a task.
-    max_bucket_docs: int = 64        # cap on docs per band bucket: larger
-                                     # buckets star-join to their min doc
-                                     # instead of all-pairs (measured at 100k
-                                     # docs: cap 512 let the band buckets emit
-                                     # 16.7M raw pairs of which prefilter +
-                                     # degree cap kept 43.6k — a 500 MB
-                                     # shuffle feeding a 99.7% discard, and
-                                     # the memory-bandwidth hog that made the
-                                     # three concurrent channels anti-scale at
-                                     # 32 threads; star edges are
+    max_bucket_docs: int = 64        # cap on docs per bucket, the skew
+                                     # bound (fused.bucket_pairs): <= 2016
+                                     # pairs per key group; larger buckets
+                                     # star-join to their min doc instead
+                                     # (measured at 100k docs: cap 512 let
+                                     # the band buckets emit 16.7M raw pairs
+                                     # of which prefilter + degree cap kept
+                                     # 43.6k — a 500 MB shuffle feeding a
+                                     # 99.7% discard; star edges are
                                      # exact-verified so cluster connectivity
                                      # is unaffected). Drops are logged,
                                      # never silent (A7 bounded index,
                                      # rabin/global/index.c:539-547 analog)
-    curation_gate: bool = False      # run the webtext keep/drop gate
-                                     # (analysis/webtext.quality_gate)
-                                     # ahead of signatures: rejected docs
-                                     # never spend sketch budget; drops
-                                     # logged by reason under the
-                                     # checkpoint dir. Off by default —
-                                     # dedup semantics (golden fixtures)
-                                     # are defined over the full corpus.
     verify_degree_cap: int = 64      # max verified candidate neighbors per doc
                                      # (top-D by minhash overlap). A clique of m
                                      # boilerplate docs yields O(m*D) verified

@@ -22,8 +22,6 @@ scaling efficiency more than any per-row math here.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 # edge sets at or below this row count (after canonicalization) are
@@ -34,7 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 # cores, BENCH_SCALING r3). 200k edges collect to a few MB. Above the
 # gate the distributed path runs unchanged, so the 100-TB plan shape is
 # untouched.
-DRIVER_CC_MAX_EDGES = int(os.environ.get("PCOMPRESS_CC_DRIVER_MAX", "200000"))
+DRIVER_CC_MAX_EDGES = 200_000
 
 
 def union_find_min_labels(edges) -> dict[int, int]:

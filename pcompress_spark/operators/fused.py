@@ -2,21 +2,21 @@
 
 The three LSH-family channels (minhash bands J3, simhash pigeonhole blocks
 J5, winnowing anchors F11) all reduce to the same shape: explode per-doc
-keys, self-join within buckets (operators/pairs.py). Round 2 ran them as
+keys, pair docs within buckets (`bucket_pairs`). Round 2 ran them as
 three concurrent jobs; each channel's bucket frame, stats groupBy, and
-salted self-join moved its own shuffle, and on a fixed-memory-bandwidth
+self-join moved its own shuffle, and on a fixed-memory-bandwidth
 box the three interleaved shuffles were the measured scaling bottleneck
 (candidates stage 2.3x of 4x at 2->8 cores, BENCH_SCALING r2). Fusing
 them into ONE narrow keyed frame
 
     (doc_id: long, ch: tinyint, key: long)
 
-gives one persist, one bucket-stats groupBy, one salted triangle
-self-join, and one per-pair aggregation carrying ALL channels — roughly a
-third of the shuffled bytes and stage count, with identical pair
-semantics: the bucket join key is the composite (ch, key), so channels
-never mix inside a bucket, and per-channel caps/salting behave exactly as
-the per-channel joins did.
+gives one persist, one bucket-stats groupBy, one bucket self-join, and
+one per-pair aggregation carrying ALL channels — roughly a third of the
+shuffled bytes and stage count, with identical pair semantics: the bucket
+join key is the composite (ch, key), so channels never mix inside a
+bucket, and the bucket cap applies per channel bucket exactly as the
+per-channel joins applied it.
 
 Round 4 shrank the post-aggregation fan-in (the remaining 2->8-core
 efficiency sink, BENCH_SCALING r3: candidates stage 0.68-0.79 on the
@@ -57,7 +57,6 @@ from pyspark.sql import DataFrame, functions as F
 from pcompress_spark.cache import tracked_persist
 from pcompress_spark.config import PipelineConfig
 from pcompress_spark.operators import lsh, simhash, substring
-from pcompress_spark.operators.pairs import bucket_pairs
 
 CH_MINHASH = 0
 CH_SIMHASH = 1
@@ -110,6 +109,98 @@ def _ch():
     return F.col("k2").bitwiseAND(F.lit(3))
 
 
+def bucket_pairs(
+    keyed: DataFrame, cap: int, probe_ids: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Packed keyed rows (doc_id, k2) -> (pairs(id_a, id_b, k2, is_star),
+    hot(k2, n_docs)): one row per (pair, shared bucket), id_a < id_b.
+
+    The shuffle on the bucket key is the distributed form of the
+    reference's serialized global index (pcompress.c:2617-2624,
+    rabin/global/index.c:485-558). Skew policy, in order: identical texts
+    are collapsed to one delegate before bucketing (operators/exact.py);
+    each bucket's width and min doc are counted ONCE over all rows — the
+    cap verdict; a bucket of <= cap docs pairs its members (<= 2016 pairs
+    in one key group at cap 64); a wider one is star-connected to its min
+    doc (`is_star`, logged in `hot`; A7 bounded index,
+    rabin/global/index.c:539-547); AQE skew-join splitting takes the rest.
+
+    Without `probe_ids` the in-cap pairs come from the a < b self-join
+    (batch). With a (doc_id) frame of probe docs only the batch rows with
+    >= 1 probe endpoint are emitted, at a cost ∝ probe keys x bucket width
+    (the incremental probe). An over-cap bucket emits no member-member
+    rows, so `candidates` adds each pair's shared over-cap keys back to
+    its co-occurrence count."""
+    # keyed and stats are each read by several branches of one action
+    # (the cap verdict, both join sides, the hot log, and the caller's
+    # hot-doc semi-join); Spark does not dedup identical subplans across
+    # branches, so persist: one bucket aggregation instead of up to five
+    keyed = tracked_persist(keyed)
+    stats = tracked_persist(
+        keyed.groupBy("k2").agg(
+            F.count(F.lit(1)).alias("_n"), F.min("doc_id").alias("_rep")
+        )
+    )
+    hot = stats.filter(F.col("_n") > cap).select(
+        "k2", F.col("_n").alias("n_docs")
+    )
+    joined = keyed.join(stats, "k2")
+    incap = joined.filter(F.col("_n") <= cap).select("k2", "doc_id")
+    star = joined.filter(
+        (F.col("_n") > cap) & (F.col("doc_id") != F.col("_rep"))
+    ).select(
+        F.col("_rep").alias("id_a"),
+        F.col("doc_id").alias("id_b"),
+        "k2",
+        F.lit(True).alias("is_star"),
+    )
+    if probe_ids is None:
+        a, b = incap.alias("a"), incap.alias("b")
+        pairs = a.join(
+            b,
+            (F.col("a.k2") == F.col("b.k2"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        ).select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("b.doc_id").alias("id_b"),
+            F.col("a.k2").alias("k2"),
+            F.lit(False).alias("is_star"),
+        )
+        return pairs.unionByName(star), hot
+
+    probe_ids = probe_ids.select("doc_id")
+    probe = incap.join(probe_ids, "doc_id", "left_semi").select(
+        "k2", F.col("doc_id").alias("_p")
+    )
+    pairs = (
+        probe.join(incap.select("k2", F.col("doc_id").alias("_m")), "k2")
+        .filter(F.col("_p") != F.col("_m"))
+        .select(
+            F.least("_p", "_m").alias("id_a"),
+            F.greatest("_p", "_m").alias("id_b"),
+            "k2",
+        )
+        .distinct()  # probe-probe pairs arrive once from each side
+        .withColumn("is_star", F.lit(False))
+    )
+    # metadata-scale gate (1-row agg over the persisted stats): a
+    # batch-scale probe usually has NO over-cap bucket; skipping the star
+    # joins then removes their shuffles from the per-batch floor, and the
+    # empty hot log folds the caller's hot-key correction away
+    if hot.count() == 0:
+        return pairs, hot.filter(F.lit(False))
+    star = (
+        star.join(probe_ids.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi")
+        .unionByName(
+            star.join(
+                probe_ids.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi"
+            )
+        )
+        .distinct()  # a star row with two probe endpoints passes both
+    )
+    return pairs.unionByName(star), hot
+
+
 def candidates(
     rows: DataFrame,
     sims: DataFrame,
@@ -122,12 +213,10 @@ def candidates(
     prefilter_drop_log(doc_id, n_dropped)).
 
     `sims` is a (doc_id, simhash) lookup covering every doc in `rows`.
-    Without `probe_ids` the pairs come from the `bucket_pairs` self-join
-    over all rows (batch pipeline). With a (doc_id) frame of probe docs
-    they come from a bucket join of those docs against every member of
-    the buckets they sit in — exactly the bucket_pairs pairs that have
-    >= 1 probe endpoint, at a cost ∝ probe keys x bucket width
-    (the incremental add_batch probe). Both shapes then run one
+    The pairs come from `bucket_pairs`: its self-join over all rows
+    without `probe_ids` (batch pipeline), or, with a (doc_id) frame of
+    probe docs, exactly the self-join's rows for pairs with >= 1 probe
+    endpoint (the incremental add_batch probe). Both shapes then run one
     tail, which recovers each channel's verdict from one per-pair groupBy:
 
       - minhash: band co-occurrence count. Exact under the star
@@ -166,19 +255,9 @@ def candidates(
         "doc_id",
         F.shiftleft("key", 2).bitwiseOR(F.col("ch").cast("long")).alias("k2"),
     )
-    if probe_ids is None:
-        pairs, hot = bucket_pairs(
-            keyed,
-            ["k2"],
-            cap=cfg.max_bucket_docs,
-            salt_min=cfg.salt_min,
-            salt_groups=cfg.salt_buckets,
-            carry=["k2"],
-        )
-    else:
-        pairs, hot = _probe_pairs(keyed, probe_ids, cfg.max_bucket_docs)
+    pairs, hot = bucket_pairs(keyed, cfg.max_bucket_docs, probe_ids)
 
-    # keyed was persisted by the pair shape (same plan -> cache hit)
+    # keyed was persisted by bucket_pairs (same plan -> cache hit)
     hot_docs = tracked_persist(
         keyed.filter(_ch() == CH_MINHASH)
         .join(hot.filter(_ch() == CH_MINHASH).select("k2"), "k2", "left_semi")
@@ -310,63 +389,3 @@ def candidates(
         "n_docs",
     )
     return out.filter(late), hot_log, dropped
-
-
-def _probe_pairs(
-    keyed: DataFrame, probe_ids: DataFrame, cap: int
-) -> tuple[DataFrame, DataFrame]:
-    """bucket_pairs restricted to pairs with >= 1 probe endpoint:
-    (pairs(id_a, id_b, k2, is_star), hot(k2, n_docs)).
-
-    In-cap buckets pair each probe doc with every other member, one row
-    per shared bucket; over-cap buckets keep the same star downgrade
-    (member <-> bucket min doc). Bucket widths are counted over ALL rows,
-    so a bucket's cap verdict matches the self-join's."""
-    probe_ids = probe_ids.select("doc_id")
-    keyed = tracked_persist(keyed)
-    stats = tracked_persist(
-        keyed.groupBy("k2").agg(
-            F.count(F.lit(1)).alias("_n"), F.min("doc_id").alias("_rep")
-        )
-    )
-    hot = stats.filter(F.col("_n") > cap).select(
-        "k2", F.col("_n").alias("n_docs")
-    )
-    joined = keyed.join(stats, "k2")
-    incap = joined.filter(F.col("_n") <= cap).select("k2", "doc_id")
-    probe = incap.join(probe_ids, "doc_id", "left_semi").select(
-        "k2", F.col("doc_id").alias("_p")
-    )
-    pairs = (
-        probe.join(incap.select("k2", F.col("doc_id").alias("_m")), "k2")
-        .filter(F.col("_p") != F.col("_m"))
-        .select(
-            F.least("_p", "_m").alias("id_a"),
-            F.greatest("_p", "_m").alias("id_b"),
-            "k2",
-        )
-        .distinct()  # probe-probe pairs arrive once from each side
-        .withColumn("is_star", F.lit(False))
-    )
-    # metadata-scale gate (1-row agg over the persisted stats): a
-    # batch-scale probe usually has NO over-cap bucket; skipping the star
-    # joins then removes their shuffles from the per-batch floor, and the
-    # empty hot log folds the caller's hot-key correction away
-    if hot.count() == 0:
-        return pairs, hot.filter(F.lit(False))
-    star_all = joined.filter(
-        (F.col("_n") > cap) & (F.col("doc_id") != F.col("_rep"))
-    ).select(F.col("_rep").alias("id_a"), F.col("doc_id").alias("id_b"), "k2")
-    star = (
-        star_all.join(
-            probe_ids.withColumnRenamed("doc_id", "id_a"), "id_a", "left_semi"
-        )
-        .unionByName(
-            star_all.join(
-                probe_ids.withColumnRenamed("doc_id", "id_b"), "id_b", "left_semi"
-            )
-        )
-        .distinct()
-        .withColumn("is_star", F.lit(True))
-    )
-    return pairs.unionByName(star), hot

@@ -136,9 +136,13 @@ class IncrementalDedupIndex:
 
     def _read(self, name: str) -> DataFrame | None:
         """Spark-side probe (works on s3a://hdfs://file:// alike — same
-        rationale as streaming.ingest._try_read_seen)."""
+        rationale as streaming.ingest._try_read_seen). `merges/` files
+        written before merge rows carried `ver` lack it: merging the small
+        table's footer schemas reads it there as null (version 0)."""
         try:
-            return self.spark.read.parquet(self._p(name))
+            return self.spark.read.option(
+                "mergeSchema", name == "merges"
+            ).parquet(self._p(name))
         except AnalysisException:
             return None
 

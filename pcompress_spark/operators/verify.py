@@ -35,6 +35,9 @@ from pcompress_spark.functions.shingling import make_lcs_udf
 # the byte-confirm it saves (see confirm_substring_pairs)
 SUBSTRING_SCREEN_MIN_LEN = 1024
 
+# degree-cap rank of a simhash/winnow-only pair (see cap_candidate_degree)
+NULL_OVERLAP_RANK = 3
+
 
 def attach_texts(
     candidates: DataFrame, reps_with_text: DataFrame
@@ -91,7 +94,7 @@ def prefilter_candidates(
 
 
 def cap_candidate_degree(
-    candidates: DataFrame, cap: int, null_rank: int = 3
+    candidates: DataFrame, cap: int
 ) -> tuple[DataFrame, DataFrame]:
     """Keep a pair when EITHER endpoint ranks it among its own top-`cap`
     candidates (by minhash overlap desc — the exact overlap at r == 1,
@@ -106,17 +109,13 @@ def cap_candidate_degree(
     channels, whose own gates (hamming ball / verbatim anchor match) are
     stronger evidence than a weak band count — ranking them at 0 would let
     junk minhash candidates evict a true simhash-proposed near-dup in
-    dense neighborhoods. They rank at `null_rank` (default == the
+    dense neighborhoods. They rank at NULL_OVERLAP_RANK (== the
     prefilter's min_matches floor): above every pair weak enough that the
     prefilter would have cut it, below well-supported minhash pairs.
     """
     from pyspark.sql import Window
 
-    ov = (
-        F.coalesce(F.col("mh_overlap"), F.lit(null_rank))
-        if "mh_overlap" in candidates.columns
-        else F.lit(0)
-    )
+    ov = F.coalesce(F.col("mh_overlap"), F.lit(NULL_OVERLAP_RANK))
     wa = Window.partitionBy("id_a").orderBy(ov.desc(), F.col("id_b").asc())
     wb = Window.partitionBy("id_b").orderBy(ov.desc(), F.col("id_a").asc())
     # persisted: both the kept set and the drop log read the ranked frame

@@ -10,9 +10,10 @@ scaling bottleneck):
                 │
                 ▼      ONE fused bucket shuffle carries all three channels
             [candidates]  (minhash bands + simhash blocks + winnow anchors
-                │          → fused keyed frame → salted self-join → per-pair
-                │          agg → hamming confirm → degree cap; the r=1
-                │          signature prefilter is folded into the agg)
+                │          → fused keyed frame → bucket self-join, over-cap
+                │          buckets starred → per-pair agg → hamming confirm
+                │          → degree cap; the r=1 signature prefilter is
+                │          folded into the agg)
                 ▼
              [edges]   exact ∪ verified fuzzy (jaccard / substring confirm)
                 │
@@ -84,19 +85,6 @@ class DedupPipeline:
         cfg, ckpt = self.cfg, self.ckpt
 
         with CacheScope():
-            if cfg.curation_gate:
-                from pcompress_spark.analysis.webtext import curation_gate_pages
-
-                t0 = time.time()
-                pages, drop_log = curation_gate_pages(pages)
-                pages = tracked_persist(pages)
-                n_kept = pages.count()
-                drop_log.coalesce(1).write.mode("overwrite").parquet(
-                    ckpt.path("_curation_drops")
-                )
-                ckpt.note(
-                    "curation_gate", int((time.time() - t0) * 1000), n_kept
-                )
             sigs = ckpt.materialize(
                 "sigs",
                 lambda: exact.build_sigs(pages, cfg),

@@ -205,23 +205,24 @@ def test_probe_shape_equals_batch_shape(spark):
     """The incremental probe shape (pairs with >= 1 probe endpoint, no
     member-member join) must yield exactly the batch self-join's rows for
     those pairs — channels, overlap, star flag — through both the in-cap
-    and the over-cap star branch, at r=1 (folded prefilter) and r>1."""
+    and the over-cap star branch, at r=1 (folded prefilter) and r>1.
+    With every doc a probe, that is the whole batch shape."""
     for cfg, reps in (
         (PipelineConfig(max_bucket_docs=4), _crafted_reps(spark)),
         (PipelineConfig(), _reps(spark, 400)),
         (PipelineConfig(lsh_bands=10, lsh_rows=2), _reps(spark, 800)),
     ):
         reps = reps.persist()
-        probe = reps.select("doc_id").filter(F.col("doc_id") % 3 == 0)
         for gate in (0, 3):  # unfiltered, then the folded r=1 prefilter
-            want = {
-                k: v
-                for k, v in _as_dict(_cands(reps, cfg, gate)[0]).items()
-                if k[0] % 3 == 0 or k[1] % 3 == 0
-            }
-            got = _as_dict(_cands(reps, cfg, gate, probe_ids=probe)[0])
-            assert got == want
-            assert len(want) > 0 or gate
+            batch = _as_dict(_cands(reps, cfg, gate)[0])
+            for m in (3, 1):  # every third doc a probe, then every doc
+                probe = reps.select("doc_id").filter(F.col("doc_id") % m == 0)
+                want = {
+                    k: v for k, v in batch.items() if k[0] % m == 0 or k[1] % m == 0
+                }
+                got = _as_dict(_cands(reps, cfg, gate, probe_ids=probe)[0])
+                assert got == want
+                assert len(want) > 0 or gate
         reps.unpersist()
 
 
@@ -301,6 +302,6 @@ def test_null_overlap_ranks_at_floor(spark):
         ],
         "id_a long, id_b long, channels array<string>, mh_overlap int",
     )
-    kept, _ = verify.cap_candidate_degree(cands, cap=1, null_rank=3)
+    kept, _ = verify.cap_candidate_degree(cands, cap=1)
     got = {(r.id_a, r.id_b) for r in kept.collect()}
     assert (1, 4) in got

@@ -30,37 +30,35 @@ def test_hot_band_completes_under_cap_with_connectivity(spark, tmp_path):
     assert cl.nunique() == 1
 
 
-def test_bucket_pairs_three_branches_exactly_once(spark):
-    """All three bucket_pairs regimes — small self-join, SALTED triangle
-    (the default config clamps salting off at cap=64, so this branch gets
-    no pipeline coverage), and over-cap star — must emit each pair
-    EXACTLY once (the fused channels count band co-occurrence from these
-    rows; a duplicate emission would corrupt signature overlap)."""
-    from pcompress_spark.operators.pairs import bucket_pairs
+def test_bucket_pairs_in_cap_and_star_exactly_once(spark):
+    """Both fused.bucket_pairs regimes — the in-cap self-join and the
+    over-cap star — must emit each (pair, bucket) EXACTLY once (the fused
+    channels count band co-occurrence from these rows; a duplicate
+    emission would corrupt signature overlap), and the hot log must list
+    exactly the over-cap buckets with their widths."""
+    from pcompress_spark.operators.fused import bucket_pairs
 
     rows = (
-        [("A", i) for i in range(4)]          # small: 4 <= salt_min
-        + [("B", 100 + i) for i in range(20)]  # salted: 4 < 20 <= cap
-        + [("C", 1000 + i) for i in range(70)]  # star: 70 > cap
+        [(i, 1) for i in range(4)]                # in-cap: 4 <= cap
+        + [(100 + i, 2) for i in range(64)]       # in-cap: 64 == cap
+        + [(1000 + i, 3) for i in range(70)]      # star: 70 > cap
+        + [(1000, 4), (1001, 4)]  # a star pair sharing an in-cap bucket too
     )
-    buckets = spark.createDataFrame(rows, "k string, doc_id long")
-    pairs, hot = bucket_pairs(
-        buckets, ["k"], cap=64, salt_min=4, salt_groups=4
-    )
-    got = [(r.id_a, r.id_b, bool(r.is_star)) for r in pairs.collect()]
+    keyed = spark.createDataFrame(rows, "doc_id long, k2 long")
+    pairs, hot = bucket_pairs(keyed, cap=64)
+    got = [(r.id_a, r.id_b, r.k2, bool(r.is_star)) for r in pairs.collect()]
     assert len(got) == len(set(got)), "duplicate pair emission"
-    small = {(a, b, s) for a, b, s in got if a < 100}
-    med = {(a, b, s) for a, b, s in got if 100 <= a < 1000}
-    star = {(a, b, s) for a, b, s in got if a >= 1000}
-    assert small == {
-        (i, j, False) for i in range(4) for j in range(i + 1, 4)
-    }
-    assert med == {
-        (100 + i, 100 + j, False)
-        for i in range(20)
-        for j in range(i + 1, 20)
-    }
-    # star bucket: only rep-member edges, flagged
-    assert star == {(1000, 1000 + j, True) for j in range(1, 70)}
-    hot_rows = hot.collect()
-    assert [(r.k, r.n_docs) for r in hot_rows] == [("C", 70)]
+
+    def clique(lo, n, k2):
+        return {
+            (lo + i, lo + j, k2, False) for i in range(n) for j in range(i + 1, n)
+        }
+
+    assert set(got) == (
+        clique(0, 4, 1)
+        | clique(100, 64, 2)
+        # star bucket: only rep-member edges, flagged
+        | {(1000, 1000 + j, 3, True) for j in range(1, 70)}
+        | {(1000, 1001, 4, False)}
+    )
+    assert [(r.k2, r.n_docs) for r in hot.collect()] == [(3, 70)]

@@ -324,3 +324,25 @@ def test_update_then_add_batch_keeps_working(spark, tmp_path):
     res = _as_map(idx.assignments())
     ida, idcopy = _did(spark, "u://a"), _did(spark, "u://copy")
     assert res[ida] == res[idcopy] == min(ida, idcopy)
+
+
+
+@pytest.mark.parametrize("old_name", ["part-0.parquet", "part-2.parquet"])
+def test_old_format_merges_read_as_version_0(spark, tmp_path, old_name):
+    """A `merges/` file written before merge rows carried `ver` reads as
+    version 0 beside a versioned file, whichever file name sorts first
+    (Spark otherwise takes the table schema from the first file alone):
+    the old-format row stays live and the uncommitted ver=1 row (no
+    tombstones yet) stays hidden."""
+    import pandas as pd
+
+    idx = IncrementalDedupIndex(spark, PipelineConfig(), str(tmp_path))
+    os.makedirs(idx._p("merges"))
+    pd.DataFrame({"old_cluster": [5], "new_cluster": [1]}).to_parquet(
+        os.path.join(idx._p("merges"), old_name)
+    )
+    pd.DataFrame(
+        {"old_cluster": [7], "new_cluster": [2], "ver": pd.Series([1], dtype="int32")}
+    ).to_parquet(os.path.join(idx._p("merges"), "part-1.parquet"))
+    got = {(r.old_cluster, r.new_cluster) for r in idx._live("merges").collect()}
+    assert got == {(5, 1)}

@@ -204,31 +204,6 @@ def test_curation_gate_dedups_same_url(spark):
     assert logd.get("dup_url") == 1 and logd.get("ok") == 2
 
 
-def test_pipeline_curation_gate(spark, tmp_path):
-    """cfg.curation_gate=True drops gated docs before signatures: they
-    never reach assignments, and the drop log lands by reason under the
-    checkpoint dir. Default-off behavior is pinned by the golden tests."""
-    from pcompress_spark.config import PipelineConfig
-    from pcompress_spark.pipeline import DedupPipeline
-
-    good = " ".join(f"tok{i} word{i*7%31}" for i in range(30))
-    bad = "spam spam spam spam spam spam spam spam spam spam spam spam " \
-          "spam spam spam spam ok1 ok2"          # repetitive
-    rows = [("u://g1", good, "en"), ("u://g2", good + " extra tail", "en"),
-            ("u://bad", bad, "en"), ("u://short", "tiny doc", "en")]
-    pages = spark.createDataFrame(rows, "url string, text string, lang string")
-    ckpt = str(tmp_path / "ck")
-    out = DedupPipeline(
-        spark, PipelineConfig(curation_gate=True), checkpoint_dir=ckpt
-    ).run(pages)
-    urls = {r["url"] for r in out.collect()}
-    assert urls == {"u://g1", "u://g2"}
-    log = {r["reason"]: r["n"]
-           for r in spark.read.parquet(f"{ckpt}/_curation_drops").collect()}
-    assert log.get("ok") == 2 and log.get("repetitive") == 1
-    assert log.get("too_short") == 1
-
-
 def test_url_host_extraction(spark):
     """Host extraction: scheme/userinfo/port/path stripped, lowercased;
     schemeless urls resolve their leading segment."""
