@@ -13,6 +13,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """Driver heap for `spark.driver.memory`: `SPARK_DRIVER_MEM` verbatim
+    when set, else half of physical memory in whole GiB, between 1g and 48g.
+
+    A heap cap above what the machine has lets the collector defer work
+    until the JVM's RSS outgrows physical memory: under a fixed 48g cap a
+    long-lived local JVM on a 16 GB box grew past 15 GB and was OOM-killed.
+    Boxes with >= 96 GB keep 48g.
+    """
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(48, phys // 2 // (1 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "pcompress_spark",
     master: str | None = None,
@@ -27,6 +43,9 @@ def get_spark(
     - Arrow enabled for pandas-UDF stages.
     - shuffle_partitions sized to cores in local mode; on a cluster set it
       to ~2-3x total executor cores via spark-submit conf.
+    - driver heap (`spark.driver.memory`) defaults to half of physical
+      memory, between 1g and 48g; `SPARK_DRIVER_MEM` overrides it verbatim
+      (see `driver_memory`).
     """
     under_submit = "PYSPARK_GATEWAY_PORT" in os.environ
     if master is None and not under_submit:
@@ -81,7 +100,7 @@ def get_spark(
         # give the scheduler enough tasks to pack without tiny-file
         # overhead; pure-columnar scans are unaffected in practice.
         .config("spark.sql.files.maxPartitionBytes", "32m")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -1,5 +1,5 @@
-"""Small-operator coverage: size parsing (F13), CRC32 (F5), sorted source
-(S5), fixed-block projection (P2)."""
+"""Small-operator coverage: size parsing (F13), driver heap default,
+CRC32 (F5), sorted source (S5), fixed-block projection (P2)."""
 
 import os
 import sys
@@ -13,6 +13,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from pcompress_spark.config import PipelineConfig, parse_size  # noqa: E402
 from pcompress_spark.operators.locality import sorted_source  # noqa: E402
+from pcompress_spark.session import driver_memory  # noqa: E402
 
 
 def test_parse_size_suffixes():
@@ -26,6 +27,17 @@ def test_parse_size_suffixes():
     for bad in ("", "k", "1.5m", "m1", "12x"):
         with pytest.raises(ValueError):
             parse_size(bad)
+
+
+def test_driver_memory_default_fits_machine(monkeypatch):
+    # a heap cap above physical memory lets the shared test JVM grow until
+    # it is OOM-killed; the default must fit the box, an override must win
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    heap = parse_size(driver_memory())
+    assert 1 << 30 <= heap <= max(1 << 30, phys // 2)
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "6g")
+    assert driver_memory() == "6g"
 
 
 def test_config_from_args_routes_size_fields():
