@@ -178,15 +178,7 @@ class CheckpointManager:
         200k docs and visibly dented the 2→8 scaling leg). The only
         Spark job here is the optional single-column countDistinct when
         dup_ratio is requested."""
-        sizes = self.fs.list_files(self.path(stage))
-        partitions = [
-            {
-                "file": name,
-                "rows": self._footer_rows(f"{self.path(stage)}/{name}"),
-                "bytes": nbytes,
-            }
-            for name, nbytes in sorted(sizes.items())
-        ]
+        partitions = self._partitions(stage)
         rows = sum(p["rows"] for p in partitions)
         rec = {
             "stage": stage,
@@ -194,7 +186,7 @@ class CheckpointManager:
             # data bytes from the listing already in hand — a second
             # recursive getContentSummary walk is one more object-store
             # LIST round-trip per stage for the same answer
-            "bytes": sum(sizes.values()),
+            "bytes": sum(p["bytes"] for p in partitions),
             "wall_ms": wall_ms,
             "n_partitions": len(partitions),
             "partitions": partitions,
@@ -207,6 +199,19 @@ class CheckpointManager:
             ]["_nd"]
             rec["dup_ratio"] = round(1.0 - nd / rows, 6) if rows else 0.0
         self._append_lineage(rec)
+
+    def rows(self, name: str) -> int:
+        """Row count of committed stage `name` from its parquet footers (no
+        Spark job; equally right for a stage a resumed run skipped)."""
+        return sum(p["rows"] for p in self._partitions(name))
+
+    def _partitions(self, name: str) -> list[dict]:
+        """{file, rows, bytes} per data file of stage `name`."""
+        d = self.path(name)
+        return [
+            {"file": f, "rows": self._footer_rows(f"{d}/{f}"), "bytes": n}
+            for f, n in sorted(self.fs.list_files(d).items())
+        ]
 
     def _footer_rows(self, file_uri: str) -> int:
         """Row count of one parquet file from its footer metadata

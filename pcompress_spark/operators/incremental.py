@@ -16,8 +16,8 @@ writes the same tables as Iceberg, giving atomic batch commits):
                   representatives() schema incl. text (needed to verify
                   probe hits exactly)
     keys/         fused (doc_id, ch, key) bucket keys of every delegate,
-                  partitioned by shard = pmod(key, N_SHARDS) so a probe
-                  join co-partitions and small batches prune shards
+                  one flat table (indexes written before it went flat
+                  hold it under shard=*/ directories; both layouts read)
     assignments/  (doc_id, cluster_id) for every doc ever ingested, labels
                   as-of that doc's batch; shard-partitioned by
                   pmod(xxhash64(doc_id), N_SHARDS) so redelivery checks
@@ -34,6 +34,10 @@ writes the same tables as Iceberg, giving atomic batch commits):
                   live iff its ver equals the doc's current version (see
                   the versioned-reads section below). Only created once
                   update_batch has run; plain ingest never pays for it
+
+`bootstrap` is one DedupPipeline run whose `reps` and `keys` checkpoint
+stages are adopted by rename as the first `sigs/` and `keys/` tables, so
+no delegate or bucket key is computed twice.
 
 Batch algorithm (`add_batch`):
  1. identity tier — batch texts whose sha already exists in `sigs` join
@@ -78,6 +82,7 @@ from pyspark.sql.utils import AnalysisException
 
 from pcompress_spark.cache import CacheScope, tracked_persist
 from pcompress_spark.config import DEFAULT_CONFIG, PipelineConfig
+from pcompress_spark.functions.shingling import SIG_SCHEMA
 from pcompress_spark.operators import exact, fused, verify
 from pcompress_spark.operators.components import cluster_labels
 
@@ -85,8 +90,21 @@ N_SHARDS = 64
 
 _ASSIGN_SCHEMA = "doc_id long, cluster_id long"
 _MERGE_SCHEMA = "old_cluster long, new_cluster long"
-_TOMB_SCHEMA = "tbl int, doc_id long, ver int"
-_LINK_SCHEMA = "doc_id long, parent_id long"
+# the read schema of every index table. Declared, not inferred: Spark
+# infers a parquet table's schema from one file's footer, and a footer
+# without `ver` (an adopted pipeline stage, a pre-versioning file) would
+# drop the column and make pending update rows visible
+_SCHEMAS = {
+    "sigs": "url string, doc_id long, text_sha string, lang string, text string, "
+    + "".join(f"{f.name} {f.dataType.simpleString()}, " for f in SIG_SCHEMA.fields)
+    + "ver int",
+    "keys": "doc_id long, ch tinyint, key long, ver int",
+    "assignments": f"{_ASSIGN_SCHEMA}, ver int, shard int",
+    "merges": f"{_MERGE_SCHEMA}, ver int",
+    "links": "doc_id long, parent_id long, ver int",
+    "tombstones": "tbl int, doc_id long, ver int",
+    "_update_inflight": "doc_id long",
+}
 
 # tombstone table codes (a doc's version is recorded per (table, doc))
 _TBL = {"sigs": 0, "keys": 1, "assignments": 2, "links": 3, "merges": 4}
@@ -136,13 +154,15 @@ class IncrementalDedupIndex:
 
     def _read(self, name: str) -> DataFrame | None:
         """Spark-side probe (works on s3a://hdfs://file:// alike — same
-        rationale as streaming.ingest._try_read_seen). `merges/` files
-        written before merge rows carried `ver` lack it: merging the small
-        table's footer schemas reads it there as null (version 0)."""
+        rationale as streaming.ingest._try_read_seen) with the table's
+        declared schema. `keys/` is read recursively so its old
+        shard=*/ layout reads beside flat files."""
         try:
-            return self.spark.read.option(
-                "mergeSchema", name == "merges"
-            ).parquet(self._p(name))
+            return (
+                self.spark.read.schema(_SCHEMAS[name])
+                .option("recursiveFileLookup", name == "keys")
+                .parquet(self._p(name))
+            )
         except AnalysisException:
             return None
 
@@ -196,11 +216,7 @@ class IncrementalDedupIndex:
         if df is None:
             return None
         key = _KEY.get(name, "doc_id")
-        ver = (
-            F.coalesce(F.col("ver"), F.lit(0))
-            if "ver" in df.columns
-            else F.lit(0)
-        )
+        ver = F.coalesce(F.col("ver"), F.lit(0))
         # no tombstones table: every committed row is version 0, and any
         # ver>0 row is an uncommitted update-in-flight append
         cur = F.lit(0)
@@ -254,29 +270,18 @@ class IncrementalDedupIndex:
         ).write.mode("append").parquet(self._p("links"))
 
     def _append_keys(self, keyed_rows: DataFrame) -> None:
-        """Append (doc_id, ch, key) rows shard-partitioned. Callers pass
-        an ALREADY-COMPUTED keyed frame (the probe builds one anyway) —
-        recomputing here would run the winnow-anchor UDF a second time
-        over every batch text.
-
-        Rows are repartitioned BY the shard column first so each task
-        writes into few shard directories: without it every one of the
-        job's partitions fans out into up to N_SHARDS dirs (partitions x
-        64 small files per append — measured as a material slice of the
-        fixed per-batch floor). At production scale the same line becomes
-        repartition(n, shard) with n > N_SHARDS."""
-        (
-            self._with_ver(keyed_rows.select("doc_id", "ch", "key"), "keys")
-            .withColumn("shard", F.pmod(F.col("key"), F.lit(N_SHARDS)).cast("int"))
-            .repartition(F.col("shard"))
-            .write.mode("append")
-            .partitionBy("shard")
-            .parquet(self._p("keys"))
-        )
+        """Append (doc_id, ch, key) rows. Callers pass an ALREADY-COMPUTED
+        keyed frame (the probe builds one anyway) — recomputing here would
+        run the winnow-anchor UDF a second time over every batch text."""
+        self._with_ver(
+            keyed_rows.select("doc_id", "ch", "key"), "keys"
+        ).write.mode("append").parquet(self._p("keys"))
 
     # ---------------------------------------------------------- bootstrap
     def bootstrap(self, pages: DataFrame) -> DataFrame:
-        """Initial full pipeline run; persists sigs/keys/assignments.
+        """Initial full pipeline run; its `reps` and `keys` stages become
+        the index's sigs/ and keys/ by rename, then links and assignments
+        are written and the rest of the run's checkpoint is deleted.
 
         Any pre-existing index state under index_dir is CLEARED first:
         keys/ appends and a surviving merges/ from an earlier life of the
@@ -286,41 +291,27 @@ class IncrementalDedupIndex:
         from pcompress_spark.pipeline import DedupPipeline
 
         fs = self._fs()
-        for name in (
-            "sigs",
-            "keys",
-            "assignments",
-            "merges",
-            "links",
-            "tombstones",
-            "_update_inflight",
-        ):
+        for name in (*_TBL, "tombstones", "_update_inflight", "_bootstrap_ckpt"):
             fs.delete(self._p(name))
+        ckpt_dir = self._p("_bootstrap_ckpt")
         pipe = DedupPipeline(
-            self.spark,
-            self.cfg,
-            checkpoint_dir=self._p("_bootstrap_ckpt"),
-            resume=False,
+            self.spark, self.cfg, checkpoint_dir=ckpt_dir, resume=False
         )
         assignments = pipe.run(pages)
-        # run() just materialized the sigs stage — read it back rather
-        # than recomputing the signature UDF pass
-        sigs = pipe.ckpt.load("sigs")
-        groups = exact.text_groups(sigs)
-        reps = exact.representatives(sigs, groups)
-        self._with_ver(reps, "sigs").write.mode("overwrite").parquet(
-            self._p("sigs")
-        )
-        self._append_keys(fused.fused_keyed_rows(reps, self.cfg))
+        for stage, name in (("reps", "sigs"), ("keys", "keys")):
+            if not fs.rename(pipe.ckpt.path(stage), self._p(name)):
+                raise IOError(f"bootstrap: rename of stage {stage} failed")
         # identity membership of the bootstrap corpus (update_batch
         # re-ingests identity children from it)
+        sigs = pipe.ckpt.load("sigs")
         self._append_links(
-            sigs.join(groups.select("text_sha", "rep_id"), "text_sha")
+            sigs.join(exact.text_groups(sigs), "text_sha")
             .filter(F.col("doc_id") != F.col("rep_id"))
             .select("doc_id", F.col("rep_id").alias("parent_id"))
         )
         # assignments commit LAST (same rationale as add_batch)
         self._write_assignments(assignments, mode="overwrite")
+        fs.delete(ckpt_dir)
         return self.assignments()
 
     def _write_assignments(self, df: DataFrame, mode: str) -> None:
@@ -333,7 +324,7 @@ class IncrementalDedupIndex:
             .withColumn(
                 "shard", F.pmod(F.xxhash64("doc_id"), F.lit(N_SHARDS)).cast("int")
             )
-            .repartition(F.col("shard"))  # few files/dir (see _append_keys)
+            .repartition(F.col("shard"))  # few files per shard directory
             .write.mode(mode)
             .partitionBy("shard")
             .parquet(self._p("assignments"))
@@ -1083,7 +1074,7 @@ class IncrementalDedupIndex:
             vers = self.spark.createDataFrame([], "doc_id long, ver int")
             for name in (*_TBL, "tombstones"):
                 df = self._read(name)
-                if df is not None and "ver" in df.columns:
+                if df is not None:
                     vers = vers.unionByName(
                         df.select(
                             F.col(_KEY.get(name, "doc_id")).alias("doc_id"),

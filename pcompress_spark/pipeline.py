@@ -1,24 +1,29 @@
 """End-to-end near-duplicate detection + clustering pipeline.
 
-Stage graph (4 durable checkpoints, resumable; everything between them is
+Stage graph (6 durable checkpoints, resumable; everything between them is
 lazy or session-cached — round 1's per-substage parquet barriers were the
 scaling bottleneck):
 
-    pages ──► [sigs]  (url, doc_id, text_sha, lang, text, minhash, simhash)
-                │
-                ├── text_groups / exact_edges / reps      (lazy, cheap)
-                │
+    pages ──► [sigs]  (url, doc_id, text_sha, lang, text, nshingles,
+                │      minhash, simhash); text_groups / exact_edges lazy
+                ▼
+             [reps]    one sigs row per distinct text (its delegate)
+                ▼
+             [keys]    (doc_id, ch, key) minhash bands + simhash blocks +
+                │      winnow anchors of every delegate
                 ▼      ONE fused bucket shuffle carries all three channels
-            [candidates]  (minhash bands + simhash blocks + winnow anchors
-                │          → fused keyed frame → bucket self-join, over-cap
-                │          buckets starred → per-pair agg → hamming confirm
-                │          → degree cap; the r=1 signature prefilter is
+            [candidates]  (bucket self-join over keys, over-cap buckets
+                │          starred → per-pair agg → hamming confirm →
+                │          degree cap; the r=1 signature prefilter is
                 │          folded into the agg)
                 ▼
              [edges]   exact ∪ verified fuzzy (jaccard / substring confirm)
                 │
                 ▼
           [assignments]  connected components → cluster labels
+
+`reps` and `keys` are an incremental index's first `sigs/` and `keys/`:
+IncrementalDedupIndex.bootstrap adopts them by rename.
 
 This is the Spark rewrite of `pcompress -G -D` (SURVEY §3.1): the one thing
 the reference serializes (the semaphore-guarded global index,
@@ -92,19 +97,6 @@ class DedupPipeline:
             )
 
             groups = exact.text_groups(sigs)
-            # delegates (one per distinct text, text included) feed all three
-            # channels plus verification — persist once, in-session.
-            # Materialized lazily and exactly ONCE (first builder that needs
-            # it), so a resumed run that skips a stage never pays for it.
-            reps = tracked_persist(exact.representatives(sigs, groups))
-            reps_ready = False
-
-            def need_reps() -> DataFrame:
-                nonlocal reps_ready
-                if not reps_ready:
-                    reps.count()
-                    reps_ready = True
-                return reps
 
             # channel bucket/candidate caches live only as long as the
             # candidates stage: scope them so verify gets the memory back
@@ -112,10 +104,16 @@ class DedupPipeline:
                 # band explode / bucket joins move ~n_docs * bands narrow
                 # rows (~20 B each): ~70 B x bands per doc -> ~1.4 KB/doc,
                 # so ~20k docs/partition ~= 30 MB serialized per task
-                prev = self._set_shuffle_partitions(sigs.count() // 20_000)
+                prev = self._set_shuffle_partitions(ckpt.rows("sigs") // 20_000)
                 try:
+                    reps = ckpt.materialize(
+                        "reps", lambda: exact.representatives(sigs, groups)
+                    )
+                    keys = ckpt.materialize(
+                        "keys", lambda: fused.fused_keyed_rows(reps, cfg)
+                    )
                     cands = ckpt.materialize(
-                        "candidates", lambda: self._candidates(need_reps())
+                        "candidates", lambda: self._candidates(reps, keys)
                     )
                 finally:
                     self.spark.conf.set(
@@ -125,12 +123,14 @@ class DedupPipeline:
             with CacheScope():
                 # the verify join carries the two utf-8 texts per candidate
                 # pair (~6 KB); ~4k pairs/partition ~= 25 MB serialized
-                prev = self._set_shuffle_partitions(cands.count() // 4000)
+                prev = self._set_shuffle_partitions(
+                    ckpt.rows("candidates") // 4000
+                )
                 try:
                     edges = ckpt.materialize(
                         "edges",
                         lambda: exact.exact_edges(sigs, groups).unionByName(
-                            self._fuzzy_edges(cands, need_reps())
+                            self._fuzzy_edges(cands, reps)
                         ),
                     )
                 finally:
@@ -163,17 +163,15 @@ class DedupPipeline:
         return edges_fuzzy.select("src", "dst", "jaccard", "kind")
 
     # ---------------------------------------------------------- candidates
-    def _candidates(self, reps: DataFrame) -> DataFrame:
-        """Candidate generation + degree cap: ONE fused bucket shuffle
-        carries all three channels (operators/fused.py — the same
-        generator the incremental index probes with), then every doc
-        keeps its top-`verify_degree_cap` partners."""
+    def _candidates(self, reps: DataFrame, keys: DataFrame) -> DataFrame:
+        """Candidate generation + degree cap: ONE fused bucket shuffle over
+        the `keys` stage carries all three channels (operators/fused.py —
+        the same generator the incremental index probes with), then every
+        doc keeps its top-`verify_degree_cap` partners."""
         cfg = self.cfg
         t0 = time.time()
         filtered, hot, pre_dropped = fused.candidates(
-            fused.fused_keyed_rows(reps, cfg),
-            reps.select("doc_id", "simhash"),
-            cfg,
+            keys, reps.select("doc_id", "simhash"), cfg
         )
         capped, cap_dropped = verify.cap_candidate_degree(
             filtered, cfg.verify_degree_cap

@@ -58,18 +58,15 @@ def assignments_run(spark, pages_df, tmp_path_factory):
 @pytest.fixture(scope="session")
 def assignments_run_r2(spark, pages_df, tmp_path_factory):
     """One b=10/r=2 pipeline run shared by the r>1 golden and incremental
-    tests: assignments as pandas."""
+    tests: (assignments as pandas, checkpoint dir)."""
     from pcompress_spark.config import PipelineConfig
     from pcompress_spark.pipeline import DedupPipeline
 
     ckpt = str(tmp_path_factory.mktemp("ckpt_r2"))
-    return (
-        DedupPipeline(
-            spark,
-            PipelineConfig(lsh_bands=10, lsh_rows=2),
-            checkpoint_dir=ckpt,
-            resume=False,
-        )
-        .run(pages_df)
-        .toPandas()
-    )
+    assignments = DedupPipeline(
+        spark,
+        PipelineConfig(lsh_bands=10, lsh_rows=2),
+        checkpoint_dir=ckpt,
+        resume=False,
+    ).run(pages_df)
+    return assignments.toPandas(), ckpt

@@ -283,7 +283,11 @@ def test_r_gt_1_degree_cap_ranks_by_band_floor(spark, tmp_path):
         " simhash long, nshingles int",
     ).persist()
     pipe = DedupPipeline(spark, cfg, checkpoint_dir=str(tmp_path / "ck"))
-    kept = {(r.id_a, r.id_b): r.mh_overlap for r in pipe._candidates(reps).collect()}
+    keys = fused.fused_keyed_rows(reps, cfg)
+    kept = {
+        (r.id_a, r.id_b): r.mh_overlap
+        for r in pipe._candidates(reps, keys).collect()
+    }
     assert kept[(100, 200)] == 10
     assert (100, 101) in kept and (50, 200) in kept  # junk kept by the junk side
     reps.unpersist()

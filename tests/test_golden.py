@@ -31,11 +31,13 @@ def test_representative_semantics(assignments_run, golden_clusters):
     assert (merged["representative_url"] == merged["representative_url_g"]).all()
 
 
-def test_edge_precision(assignments_run, golden_clusters, spark):
-    _, ckpt, _ = assignments_run
-    edges = pd.read_parquet(f"{ckpt}/edges")
-    prec = metrics.edge_precision(edges, golden_clusters)
-    assert prec >= 0.999, f"edge precision {prec:.4f}"
+def test_edge_precision(assignments_run, assignments_run_r2, golden_clusters):
+    """Verified edges are true duplicates at r=1 and at r>1, where band
+    co-occurrence is no signature overlap and no prefilter runs."""
+    for r, ckpt in ((1, assignments_run[1]), (2, assignments_run_r2[1])):
+        edges = pd.read_parquet(f"{ckpt}/edges")
+        prec = metrics.edge_precision(edges, golden_clusters)
+        assert prec >= 0.999, f"r={r} edge precision {prec:.4f}"
 
 
 def test_verified_jaccards_match_oracle(assignments_run, golden_pairs, golden_clusters):
@@ -63,7 +65,7 @@ def test_pair_recall_r_gt_1_banding(assignments_run_r2, golden_pairs):
     exact-Jaccard verified. Dup-pair recall must still clear the golden
     gate (simhash + winnow channels cover the LSH-curve recall dip at the
     tau boundary)."""
-    recall = metrics.pair_recall(assignments_run_r2, golden_pairs)
+    recall = metrics.pair_recall(assignments_run_r2[0], golden_pairs)
     assert recall >= 0.99, f"r>1 dup-pair recall {recall:.4f} < 0.99"
 
 

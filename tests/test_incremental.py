@@ -56,11 +56,41 @@ def test_incremental_matches_full_run_r_gt_1(
     idx = IncrementalDedupIndex(spark, cfg, str(tmp_path / "idx"))
     idx.bootstrap(pages_df.filter(half == 0))
     idx.add_batch(pages_df.filter(half == 1))
-    full = dict(zip(assignments_run_r2["doc_id"], assignments_run_r2["cluster_id"]))
+    full_pdf, _ckpt = assignments_run_r2
+    full = dict(zip(full_pdf["doc_id"], full_pdf["cluster_id"]))
     incr = _as_map(idx.assignments())
     assert len(incr) == len(full)
     diff = {d: (c, full[d]) for d, c in incr.items() if full[d] != c}
     assert not diff, f"{len(diff)} label mismatches, e.g. {list(diff.items())[:5]}"
+
+
+def test_bootstrap_adopts_pipeline_reps_and_keys(spark, pages_df, tmp_path):
+    """bootstrap's sigs/ and keys/ are the pipeline's own delegates and
+    keyed rows — live sigs equal representatives() as (doc_id, text_sha),
+    live keys equal fused_keyed_rows() as a multiset — and no checkpoint of
+    its pipeline run is left in the index directory."""
+    from collections import Counter
+
+    from pcompress_spark.operators import exact, fused
+
+    cfg = PipelineConfig()
+    pages = pages_df.filter(F.pmod(F.xxhash64("url"), F.lit(4)) == 0)
+    idx = IncrementalDedupIndex(spark, cfg, str(tmp_path))
+    idx.bootstrap(pages)
+    sigs = exact.build_sigs(pages, cfg)
+    reps = exact.representatives(sigs, exact.text_groups(sigs))
+
+    def rows(df, *cols):
+        return Counter(tuple(r) for r in df.select(*cols).collect())
+
+    assert set(rows(idx._live("sigs"), "doc_id", "text_sha")) == set(
+        rows(reps, "doc_id", "text_sha")
+    )
+    keyed = ("doc_id", "ch", "key")
+    assert rows(idx._live("keys"), *keyed) == rows(
+        fused.fused_keyed_rows(reps, cfg), *keyed
+    )
+    assert not os.path.exists(tmp_path / "_bootstrap_ckpt")
 
 
 def test_coalesced_queue_matches_full_run(

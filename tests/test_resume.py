@@ -16,15 +16,16 @@ def _norm(df: pd.DataFrame) -> pd.DataFrame:
 def test_resume_after_partial_run_identical(spark, pages_df, assignments_run, tmp_path):
     first, ckpt_dir, pipe = assignments_run
 
-    # simulate a crash after the candidate stage: wipe everything downstream
-    for stage in ("edges", "assignments"):
-        shutil.rmtree(f"{ckpt_dir}/{stage}", ignore_errors=True)
-
-    resumed = DedupPipeline(
-        spark, PipelineConfig(), checkpoint_dir=ckpt_dir, resume=True
-    ).run(pages_df)
-    second = resumed.toPandas()
-    pd.testing.assert_frame_equal(_norm(pd.DataFrame(first)), _norm(second))
+    # simulate a crash after the candidates stage, then one after the keys
+    # stage: wipe everything downstream, resume, compare
+    for wiped in (("edges", "assignments"), ("candidates", "edges", "assignments")):
+        for stage in wiped:
+            shutil.rmtree(f"{ckpt_dir}/{stage}", ignore_errors=True)
+        resumed = DedupPipeline(
+            spark, PipelineConfig(), checkpoint_dir=ckpt_dir, resume=True
+        ).run(pages_df)
+        second = resumed.toPandas()
+        pd.testing.assert_frame_equal(_norm(pd.DataFrame(first)), _norm(second))
 
 
 def test_resume_skips_completed_stages(spark, pages_df, assignments_run):
@@ -112,6 +113,7 @@ def test_checkpoint_probes_through_hadoop_fs_scheme(spark, tmp_path):
     assert "stage1" in stages
     rec = [r for r in ck2.lineage() if r["stage"] == "stage1"][0]
     assert rec["rows"] == 10 and rec["bytes"] > 0
+    assert ck.rows("stage1") == 10  # footer metadata, no Spark job
     # clear() removes through the scheme
     ck2.clear("stage1")
     assert not ck2.exists("stage1")

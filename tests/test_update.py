@@ -327,22 +327,56 @@ def test_update_then_add_batch_keeps_working(spark, tmp_path):
 
 
 
+def _old_format_rows(table, doc):
+    """One pandas row of index table `table`, as written before rows
+    carried `ver` (merges) or as the pipeline's adopted stages write it
+    (sigs, keys)."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "merges": {"old_cluster": [doc], "new_cluster": [1]},
+            "sigs": {
+                "url": [f"u://{doc}"],
+                "doc_id": [doc],
+                "text_sha": [f"sha{doc}"],
+                "lang": ["en"],
+                "text": ["text"],
+                "nshingles": pd.Series([1], dtype="int32"),
+                "minhash": [[doc, doc]],
+                "simhash": [doc],
+            },
+            "keys": {
+                "doc_id": [doc],
+                "ch": pd.Series([0], dtype="int8"),
+                "key": [doc],
+            },
+        }[table]
+    )
+
+
 @pytest.mark.parametrize("old_name", ["part-0.parquet", "part-2.parquet"])
-def test_old_format_merges_read_as_version_0(spark, tmp_path, old_name):
-    """A `merges/` file written before merge rows carried `ver` reads as
-    version 0 beside a versioned file, whichever file name sorts first
-    (Spark otherwise takes the table schema from the first file alone):
-    the old-format row stays live and the uncommitted ver=1 row (no
-    tombstones yet) stays hidden."""
+@pytest.mark.parametrize("table", ["merges", "sigs", "keys"])
+def test_old_format_rows_read_as_version_0(spark, tmp_path, table, old_name):
+    """A ver-less file reads as version 0 beside a versioned file, whichever
+    file name sorts first (Spark otherwise takes the table schema from one
+    footer): the ver-less row stays live and the uncommitted ver=1 row (no
+    tombstones yet) stays hidden. `keys/` of an index written before it
+    went flat also holds ver-less files under shard=*/ directories."""
     import pandas as pd
 
     idx = IncrementalDedupIndex(spark, PipelineConfig(), str(tmp_path))
-    os.makedirs(idx._p("merges"))
-    pd.DataFrame({"old_cluster": [5], "new_cluster": [1]}).to_parquet(
-        os.path.join(idx._p("merges"), old_name)
-    )
-    pd.DataFrame(
-        {"old_cluster": [7], "new_cluster": [2], "ver": pd.Series([1], dtype="int32")}
-    ).to_parquet(os.path.join(idx._p("merges"), "part-1.parquet"))
-    got = {(r.old_cluster, r.new_cluster) for r in idx._live("merges").collect()}
-    assert got == {(5, 1)}
+    os.makedirs(idx._p(table))
+    _old_format_rows(table, 5).to_parquet(os.path.join(idx._p(table), old_name))
+    _old_format_rows(table, 7).assign(
+        ver=pd.Series([1], dtype="int32")
+    ).to_parquet(os.path.join(idx._p(table), "part-1.parquet"))
+    want = {5}
+    if table == "keys":
+        os.makedirs(os.path.join(idx._p(table), "shard=3"))
+        _old_format_rows(table, 6).to_parquet(
+            os.path.join(idx._p(table), "shard=3", "part-0.parquet")
+        )
+        want = {5, 6}
+    col = "old_cluster" if table == "merges" else "doc_id"
+    assert {r[0] for r in idx._live(table).select(col).collect()} == want
