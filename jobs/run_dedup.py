@@ -21,7 +21,7 @@ the BASELINE input_hint shape. `--gen-docs N` synthesizes a deterministic
 corpus instead, for smoke runs on boxes without data.
 
 Output: assignments parquet (url, doc_id, cluster_id, representative_url,
-is_representative) + checkpoints and `_lineage.jsonl` under
+is_representative) + checkpoints and `_lineage.json` under
 --checkpoint-dir. Prints one JSON summary line prefixed `DEDUPRESULT `.
 
 Operating modes (--mode): `full` is the monolithic run above;

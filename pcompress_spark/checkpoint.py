@@ -22,6 +22,13 @@ partition lineage"). Records accumulate driver-side and the
 `_lineage.json` file is atomically rewritten through the filesystem on
 each append — append() is not supported on object stores, full rewrite of
 a small metadata file is.
+
+A stage costs exactly its write: rows and bytes come from parquet
+footers, the read-back carries the written schema (no inference job), and
+dup_ratio comes either from footers of a stage holding one row per
+distinct unit (`set_dup_ratio`) or from an aggregate observed on the
+write itself (`materialize(distinct=...)`) — never from a separate
+Spark job.
 """
 
 from __future__ import annotations
@@ -30,7 +37,22 @@ import json
 import threading
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+
+def _nullable(t: DataType) -> DataType:
+    """`t` with every field, element and value nullable — the schema a
+    parquet write stores and a read infers."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 class _HadoopFs:
@@ -131,25 +153,38 @@ class CheckpointManager:
         self,
         name: str,
         build,
-        distinct_col: str | None = None,
+        distinct: Column | None = None,
     ) -> DataFrame:
         """Run `build()` unless `name` is already checkpointed; always return
         the checkpointed DataFrame (read back from storage, so downstream
         stages re-plan from a scan — lineage is truncated at every stage).
 
-        distinct_col: when given, the lineage row also carries
-        dup_ratio = 1 - countDistinct(col)/rows for this stage (e.g.
-        text_sha for sigs, cluster_id for assignments).
+        The write is the stage's only Spark action. The read-back declares
+        the written schema (every field nullable, as parquet stores it),
+        so no schema-inference job follows the write; a resumed stage
+        still infers from its files.
+
+        distinct: an aggregate Column counting the stage's distinct units
+        (e.g. representatives among assignments). It is observed on the
+        write, and the lineage row then carries dup_ratio =
+        1 - distinct/rows.
         """
         if self.resume and self.exists(name):
             return self.load(name)
         t0 = time.time()
         df = build()
+        obs = None
+        if distinct is not None:
+            obs = Observation()
+            df = df.observe(obs, distinct.alias("n"))
         df.write.mode("overwrite").parquet(self.path(name))
         wall_ms = int((time.time() - t0) * 1000)
-        out = self.load(name)
-        self._record(name, out, wall_ms, distinct_col)
-        return out
+        self._record(name, wall_ms)
+        if obs is not None:
+            self.set_dup_ratio(name, obs.get["n"] or 0)
+        return self.spark.read.schema(_nullable(df.schema)).parquet(
+            self.path(name)
+        )
 
     def note(self, stage: str, wall_ms: int, rows: int = -1, **extra) -> None:
         """Record a sub-stage lineage row (no table of its own) — used for
@@ -159,25 +194,36 @@ class CheckpointManager:
             {"stage": stage, "rows": rows, "wall_ms": wall_ms, **extra}
         )
 
+    def set_dup_ratio(self, stage: str, n_distinct: int) -> None:
+        """Set dup_ratio = 1 - n_distinct/rows on committed stage `stage`'s
+        latest lineage row (no-op when it has none). The pipeline passes
+        rows("reps") for sigs: reps holds one row per distinct text."""
+        with self._lineage_lock:
+            rec = next(
+                (
+                    r
+                    for r in reversed(self._lineage_rows)
+                    if r["stage"] == stage and "n_partitions" in r
+                ),
+                None,
+            )
+            if rec is None:
+                return
+            rows = rec["rows"]
+            rec["dup_ratio"] = round(1.0 - n_distinct / rows, 6) if rows else 0.0
+            self._write_lineage()
+
     # -- lineage -----------------------------------------------------------
-    def _record(
-        self,
-        stage: str,
-        df: DataFrame,
-        wall_ms: int,
-        distinct_col: str | None = None,
-    ) -> None:
+    def _record(self, stage: str, wall_ms: int) -> None:
         """Stage lineage row with PER-PARTITION detail (north rule): one
         entry per written data file (file == output partition) with its
-        rows and bytes, plus stage totals and optional dup_ratio.
+        rows and bytes, plus stage totals.
 
         Cost discipline: per-file rows come from the parquet FOOTERS
         (driver-side metadata reads through the Hadoop FileSystem — the
         same bytes `df.count()` would consult, no Spark job, no data
         scan; an earlier rollup-scan variant cost ~10 s per pipeline at
-        200k docs and visibly dented the 2→8 scaling leg). The only
-        Spark job here is the optional single-column countDistinct when
-        dup_ratio is requested."""
+        200k docs and visibly dented the 2→8 scaling leg)."""
         partitions = self._partitions(stage)
         rows = sum(p["rows"] for p in partitions)
         rec = {
@@ -191,13 +237,6 @@ class CheckpointManager:
             "n_partitions": len(partitions),
             "partitions": partitions,
         }
-        if distinct_col is not None:
-            from pyspark.sql import functions as F
-
-            nd = df.agg(F.countDistinct(distinct_col).alias("_nd")).collect()[
-                0
-            ]["_nd"]
-            rec["dup_ratio"] = round(1.0 - nd / rows, 6) if rows else 0.0
         self._append_lineage(rec)
 
     def rows(self, name: str) -> int:
@@ -234,10 +273,13 @@ class CheckpointManager:
         # is unsupported on object stores, a small metadata rewrite is not)
         with self._lineage_lock:
             self._lineage_rows.append(rec)
-            self.fs.write_text(
-                self._lineage_path,
-                "\n".join(json.dumps(r) for r in self._lineage_rows) + "\n",
-            )
+            self._write_lineage()
+
+    def _write_lineage(self) -> None:
+        self.fs.write_text(
+            self._lineage_path,
+            "\n".join(json.dumps(r) for r in self._lineage_rows) + "\n",
+        )
 
     def _load_lineage(self) -> list[dict]:
         if not self.fs.exists(self._lineage_path):

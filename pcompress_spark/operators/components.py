@@ -165,6 +165,20 @@ def connected_components(
     )
 
 
+def long_pair_frame(spark, pairs, schema: str) -> DataFrame:
+    """A two-long-column frame (`schema`, e.g. "doc_id long, cluster_id
+    long") from driver-side pairs, built through pandas: with Arrow on
+    the rows become JVM-side local data, so reading them starts no Python
+    worker (a frame built from a list is a Python RDD, and every scan of
+    it does)."""
+    import pandas as pd
+
+    cols = [c.split()[0] for c in schema.split(",")]
+    return spark.createDataFrame(
+        pd.DataFrame(list(pairs), columns=cols, dtype="int64"), schema
+    )
+
+
 def cluster_labels(
     edges: DataFrame, driver_max_edges: int | None = None
 ) -> DataFrame:
@@ -175,20 +189,16 @@ def cluster_labels(
     are metadata-scale relative to the corpus (bounded by verified dup
     pairs, not docs), so even multi-100k-doc runs usually take the driver
     path; a 100-TB boilerplate-heavy run exceeds the gate and falls back
-    to the distributed loop unchanged."""
+    to the distributed loop unchanged.
+
+    One bounded collect (at most gate + 1 rows) both picks the path and
+    feeds the union-find."""
     gate = DRIVER_CC_MAX_EDGES if driver_max_edges is None else driver_max_edges
-    e = _canon(edges).persist()
-    n = e.count()
-    if n <= gate:
-        try:
-            rows = e.collect()
-        finally:
-            e.unpersist()
+    e = _canon(edges)
+    rows = e.limit(gate + 1).collect()
+    if len(rows) <= gate:
         lab = union_find_min_labels((r["src"], r["dst"]) for r in rows)
-        return e.sparkSession.createDataFrame(
-            list(lab.items()), "doc_id long, cluster_id long"
+        return long_pair_frame(
+            e.sparkSession, lab.items(), "doc_id long, cluster_id long"
         )
-    # distributed path: keep e persisted — connected_components' first
-    # round and fixpoint signature read it repeatedly; the caller's
-    # CacheScope (or session end) reclaims it
     return connected_components(e)

@@ -34,6 +34,9 @@ writes the same tables as Iceberg, giving atomic batch commits):
                   live iff its ver equals the doc's current version (see
                   the versioned-reads section below). Only created once
                   update_batch has run; plain ingest never pays for it
+    _lineage.json, _hot_buckets_*/, _prefilter/, _degree_cap/
+                  the bootstrap run's stage lineage and drop logs
+                  (DedupPipeline's own files, moved here)
 
 `bootstrap` is one DedupPipeline run whose `reps` and `keys` checkpoint
 stages are adopted by rename as the first `sigs/` and `keys/` tables, so
@@ -84,7 +87,7 @@ from pcompress_spark.cache import CacheScope, tracked_persist
 from pcompress_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pcompress_spark.functions.shingling import SIG_SCHEMA
 from pcompress_spark.operators import exact, fused, verify
-from pcompress_spark.operators.components import cluster_labels
+from pcompress_spark.operators.components import cluster_labels, long_pair_frame
 
 N_SHARDS = 64
 
@@ -147,6 +150,10 @@ class IncrementalDedupIndex:
         # (doc_id, _pv): the uncommitted next version of every doc an
         # update_batch re-ingests; None outside an update window
         self._pending_vers: DataFrame | None = None
+        # does tombstones/ exist? Probed here and once per public call
+        # (_probe_tombstones), set when update_batch commits, so an index
+        # update_batch never touched reads no tombstones at all
+        self._probe_tombstones()
 
     # ------------------------------------------------------------ storage
     def _p(self, name: str) -> str:
@@ -193,15 +200,21 @@ class IncrementalDedupIndex:
     # and refuses silent mismatches (pcompress.c) — here a changed doc is
     # explicitly re-versioned, never silently dropped.
 
+    def _probe_tombstones(self) -> None:
+        """One metadata probe for tombstones/ per public call, instead of
+        a failing Spark read (and its logged stack trace) per table read
+        of an index that update_batch never touched."""
+        self._tombstoned = self._fs().exists(self._p("tombstones"))
+
     def _kill_map(self, name: str) -> DataFrame | None:
         """Broadcastable (key, _kill = current version) for table `name`,
         keyed by the table's version column (_KEY), or None.
         Metadata-scale: one row per ever-updated doc."""
-        t = self._read("tombstones")
-        if t is None:
+        if not self._tombstoned:
             return None
         km = (
-            t.filter(F.col("tbl") == _TBL[name])
+            self._read("tombstones")
+            .filter(F.col("tbl") == _TBL[name])
             .groupBy(F.col("doc_id").alias(_KEY.get(name, "doc_id")))
             .agg(F.max("ver").alias("_kill"))
         )
@@ -259,6 +272,7 @@ class IncrementalDedupIndex:
         rows.select("tbl", "doc_id", "ver").coalesce(1).write.mode(
             "append"
         ).parquet(self._p("tombstones"))
+        self._tombstoned = True
 
     def _append_links(self, links: DataFrame) -> None:
         """(doc_id, parent_id): identity membership — every non-delegate
@@ -281,18 +295,23 @@ class IncrementalDedupIndex:
     def bootstrap(self, pages: DataFrame) -> DataFrame:
         """Initial full pipeline run; its `reps` and `keys` stages become
         the index's sigs/ and keys/ by rename, then links and assignments
-        are written and the rest of the run's checkpoint is deleted.
+        are written, the run's `_lineage.json` and drop logs move into
+        the index directory, and the rest of its checkpoint is deleted.
 
         Any pre-existing index state under index_dir is CLEARED first:
         keys/ appends and a surviving merges/ from an earlier life of the
         directory would otherwise double every bucket count and replay
         stale merges onto the fresh labels (cluster ids are deterministic
         hashes, so a stale map still matches)."""
-        from pcompress_spark.pipeline import DedupPipeline
+        from pcompress_spark.pipeline import DROP_LOGS, DedupPipeline
 
         fs = self._fs()
-        for name in (*_TBL, "tombstones", "_update_inflight", "_bootstrap_ckpt"):
+        run_files = ("_lineage.json", *DROP_LOGS)
+        for name in (
+            *_TBL, "tombstones", "_update_inflight", "_bootstrap_ckpt", *run_files
+        ):
             fs.delete(self._p(name))
+        self._tombstoned = False
         ckpt_dir = self._p("_bootstrap_ckpt")
         pipe = DedupPipeline(
             self.spark, self.cfg, checkpoint_dir=ckpt_dir, resume=False
@@ -311,6 +330,9 @@ class IncrementalDedupIndex:
         )
         # assignments commit LAST (same rationale as add_batch)
         self._write_assignments(assignments, mode="overwrite")
+        # the run's lineage and drop logs stay with the index it built
+        for name in run_files:
+            fs.rename(pipe.ckpt.path(name), self._p(name))
         fs.delete(ckpt_dir)
         return self.assignments()
 
@@ -354,7 +376,7 @@ class IncrementalDedupIndex:
             return c
 
         closed = [(k, final(k)) for k in chain]
-        return F.broadcast(self.spark.createDataFrame(closed, _MERGE_SCHEMA))
+        return F.broadcast(long_pair_frame(self.spark, closed, _MERGE_SCHEMA))
 
     @staticmethod
     def _apply_closure(a: DataFrame, mm: DataFrame | None) -> DataFrame:
@@ -374,6 +396,7 @@ class IncrementalDedupIndex:
         the reference's refusal to read a mismatched archive): re-running
         update_batch with the same pages heals the index."""
         self._check_inflight()
+        self._probe_tombstones()
         a = self._live("assignments")
         if a is None:
             return self.spark.createDataFrame([], _ASSIGN_SCHEMA)
@@ -588,6 +611,7 @@ class IncrementalDedupIndex:
         not this operator."""
         spark = self.spark
         self._check_inflight()
+        self._probe_tombstones()
         # size shuffles to the BATCH, not the session default: a 10k-doc
         # increment at the session's 128 partitions spends more wall in
         # task-scheduling latency than in work (measured: the candidate
@@ -892,7 +916,7 @@ class IncrementalDedupIndex:
             def _w_merges() -> None:
                 if merge_rows:
                     self._with_ver(
-                        spark.createDataFrame(merge_rows, _MERGE_SCHEMA),
+                        long_pair_frame(spark, merge_rows, _MERGE_SCHEMA),
                         "merges",
                     ).write.mode("append").parquet(self._p("merges"))
 
@@ -968,6 +992,7 @@ class IncrementalDedupIndex:
         docstring applies here identically)."""
         spark = self.spark
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        self._probe_tombstones()
         try:
             return self._update_batch_inner(pages)
         finally:

@@ -2,12 +2,16 @@
 
 Stage graph (6 durable checkpoints, resumable; everything between them is
 lazy or session-cached — round 1's per-substage parquet barriers were the
-scaling bottleneck):
+scaling bottleneck). Each checkpoint costs its one write action (lineage
+rows and dup_ratio come from parquet footers or an observation on that
+write, the read-back declares the written schema); the other actions are
+named per stage:
 
     pages ──► [sigs]  (url, doc_id, text_sha, lang, text, nshingles,
                 │      minhash, simhash); text_groups / exact_edges lazy
                 ▼
-             [reps]    one sigs row per distinct text (its delegate)
+             [reps]    one sigs row per distinct text (its delegate);
+                │      sigs' dup_ratio = 1 - rows(reps)/rows(sigs)
                 ▼
              [keys]    (doc_id, ch, key) minhash bands + simhash blocks +
                 │      winnow anchors of every delegate
@@ -15,12 +19,18 @@ scaling bottleneck):
             [candidates]  (bucket self-join over keys, over-cap buckets
                 │          starred → per-pair agg → hamming confirm →
                 │          degree cap; the r=1 signature prefilter is
-                │          folded into the agg)
+                │          folded into the agg). + the hot-doc gate
+                │          count; the write fills the caches the five
+                │          drop logs then read, concurrently
                 ▼
-             [edges]   exact ∪ verified fuzzy (jaccard / substring confirm)
-                │
+             [edges]   exact ∪ verified fuzzy (jaccard / substring
+                │      confirm). + one count that fills the pair-Jaccard
+                │      cache both branches read
                 ▼
-          [assignments]  connected components → cluster labels
+          [assignments]  connected components → cluster labels. + one
+                         bounded collect of the edge set (driver
+                         union-find below DRIVER_CC_MAX_EDGES); dup_ratio
+                         observed on the write
 
 `reps` and `keys` are an incremental index's first `sigs/` and `keys/`:
 IncrementalDedupIndex.bootstrap adopts them by rename.
@@ -37,11 +47,19 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pcompress_spark.cache import CacheScope, tracked_persist
+from pcompress_spark.cache import CacheScope
 from pcompress_spark.config import DEFAULT_CONFIG, PipelineConfig
 from pcompress_spark.checkpoint import CheckpointManager
 from pcompress_spark.operators import exact, fused, verify
 from pcompress_spark.operators.components import cluster_labels
+
+# the drop/hot logs a run writes beside its checkpoints: one hot-bucket
+# log per channel, then the prefilter and degree-cap drop logs
+DROP_LOGS = (
+    *(f"_hot_buckets_{name}" for name in fused.CHANNEL_NAMES.values()),
+    "_prefilter",
+    "_degree_cap",
+)
 
 
 class DedupPipeline:
@@ -90,11 +108,7 @@ class DedupPipeline:
         cfg, ckpt = self.cfg, self.ckpt
 
         with CacheScope():
-            sigs = ckpt.materialize(
-                "sigs",
-                lambda: exact.build_sigs(pages, cfg),
-                distinct_col="text_sha",   # lineage dup_ratio: exact dups
-            )
+            sigs = ckpt.materialize("sigs", lambda: exact.build_sigs(pages, cfg))
 
             groups = exact.text_groups(sigs)
 
@@ -109,12 +123,17 @@ class DedupPipeline:
                     reps = ckpt.materialize(
                         "reps", lambda: exact.representatives(sigs, groups)
                     )
+                    # lineage dup_ratio of sigs (exact dups): one reps row
+                    # per distinct text
+                    ckpt.set_dup_ratio("sigs", ckpt.rows("reps"))
                     keys = ckpt.materialize(
                         "keys", lambda: fused.fused_keyed_rows(reps, cfg)
                     )
+                    logs: list[tuple[str, DataFrame]] = []
                     cands = ckpt.materialize(
-                        "candidates", lambda: self._candidates(reps, keys)
+                        "candidates", lambda: self._candidates(reps, keys, logs)
                     )
+                    self._write_logs(logs)
                 finally:
                     self.spark.conf.set(
                         "spark.sql.shuffle.partitions", str(prev)
@@ -143,7 +162,9 @@ class DedupPipeline:
             assignments = ckpt.materialize(
                 "assignments",
                 lambda: self._assignments(sigs, edges),
-                distinct_col="cluster_id",  # lineage dup_ratio: all channels
+                # lineage dup_ratio over all channels: one representative
+                # per cluster
+                distinct=F.sum(F.col("is_representative").cast("long")),
             )
         return assignments
 
@@ -163,39 +184,33 @@ class DedupPipeline:
         return edges_fuzzy.select("src", "dst", "jaccard", "kind")
 
     # ---------------------------------------------------------- candidates
-    def _candidates(self, reps: DataFrame, keys: DataFrame) -> DataFrame:
+    def _candidates(
+        self,
+        reps: DataFrame,
+        keys: DataFrame,
+        logs: list[tuple[str, DataFrame]] | None = None,
+    ) -> DataFrame:
         """Candidate generation + degree cap: ONE fused bucket shuffle over
         the `keys` stage carries all three channels (operators/fused.py —
         the same generator the incremental index probes with), then every
-        doc keeps its top-`verify_degree_cap` partners."""
+        doc keeps its top-`verify_degree_cap` partners.
+
+        `logs` receives the (name, frame) drop logs. They read the frames
+        fused.candidates and the degree cap persist, so they are cheap
+        only once the candidates write has filled those caches — the
+        caller writes them after it."""
         cfg = self.cfg
-        t0 = time.time()
         filtered, hot, pre_dropped = fused.candidates(
             keys, reps.select("doc_id", "simhash"), cfg
         )
         capped, cap_dropped = verify.cap_candidate_degree(
             filtered, cfg.verify_degree_cap
         )
-        # one sequential pass materializes the capped set AND the persisted
-        # count/ranked frames it reads through; the drop logs, hot-bucket
-        # logs (and the checkpoint write that follows) then scan warm
-        # caches instead of re-running the candidate joins once per
-        # consumer
-        capped = tracked_persist(capped)
-        n = capped.count()
-        self.ckpt.note("candidates_gen", int((time.time() - t0) * 1000), n)
-        hot = tracked_persist(hot)
-        hot.count()  # materialize once before concurrent readers
-        logs = [
-            (name, hot.filter(F.col("ch") == ch_val).drop("ch"))
-            for ch_val, name in fused.CHANNEL_NAMES.items()
-        ]
-        logs += [("prefilter", pre_dropped), ("degree_cap", cap_dropped)]
-        # each log is a tiny independent job reading warm caches; run them
-        # concurrently (FAIR scheduler) — sequential submission was ~15s of
-        # near-idle wall per run, a flat cost that sinks scaling efficiency
-        with ThreadPoolExecutor(max_workers=len(logs)) as ex:
-            list(ex.map(lambda nf: self._log_hot(*nf), logs))
+        if logs is not None:
+            per_channel = [
+                hot.filter(F.col("ch") == ch).drop("ch") for ch in fused.CHANNEL_NAMES
+            ]
+            logs += zip(DROP_LOGS, [*per_channel, pre_dropped, cap_dropped])
         return capped
 
     # ---------------------------------------------------------- assignments
@@ -218,15 +233,23 @@ class DedupPipeline:
         )
 
     # -------------------------------------------------------------- helpers
-    def _log_hot(self, channel: str, hot: DataFrame) -> None:
-        """Persist the hot-bucket/drop log — drops are never silent.
-        Logs are tiny (bucket keys / per-doc counts): coalesce the write
-        so it is a handful of tasks, not one per shuffle partition.
+    def _write_logs(self, logs: list[tuple[str, DataFrame]]) -> None:
+        """Persist the hot-bucket/drop logs (DROP_LOGS) — drops are never
+        silent. Each is a tiny job over warm caches; they run
+        concurrently (FAIR scheduler) — sequential submission was ~15 s
+        of near-idle wall per run, a flat cost that sinks scaling
+        efficiency. Logs are small (bucket keys / per-doc counts):
+        coalesced, each write is a handful of tasks, not one per shuffle
+        partition.
 
         Schema note: a hot-bucket log's `key` column is an OPAQUE
         low-62-bit bucket id (see fused.candidates), not the channel's
         actual band/block key — do not join it against index or
         per-channel bucket keys."""
-        hot.coalesce(8).write.mode("overwrite").parquet(
-            self.ckpt.path(f"_hot_buckets_{channel}")
-        )
+
+        def write(name: str, df: DataFrame) -> None:
+            df.coalesce(8).write.mode("overwrite").parquet(self.ckpt.path(name))
+
+        if logs:
+            with ThreadPoolExecutor(max_workers=len(logs)) as ex:
+                list(ex.map(lambda nl: write(*nl), logs))

@@ -40,7 +40,14 @@ def get_spark(
 
     - AQE on (runtime coalesce, skew-join splitting) — replaces the
       reference's static index-mode selection (rabin/global/index.c:119-215).
-    - Arrow enabled for pandas-UDF stages.
+    - AQE may re-partition a persisted plan's output
+      (`canChangeCachedPlanOutputPartitioning`; Spark's default is false).
+      Off, every cached intermediate (bucket stats, ranked candidates,
+      pair Jaccard) runs at the full `spark.sql.shuffle.partitions`
+      however few rows it holds, and each of those tasks pays the
+      pandas-UDF / scheduler floor.
+    - Arrow enabled for pandas-UDF stages; driver-side frames built from
+      pandas then become JVM-side local data (no Python worker).
     - shuffle_partitions sized to cores in local mode; on a cluster set it
       to ~2-3x total executor cores via spark-submit conf.
     - driver heap (`spark.driver.memory`) defaults to half of physical
@@ -85,6 +92,14 @@ def get_spark(
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce inside persisted plans too: otherwise every
+        # tracked_persist'ed frame keeps the full shuffle-partition count,
+        # and a tiny cached stage pays one scheduler / Python-worker task
+        # per partition however few rows it holds (BASELINE.md, "the
+        # fixed per-run cost")
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         # serialized-size target per post-shuffle partition; array-heavy
         # rows decompress several-fold, so keep it well under the default
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32m")

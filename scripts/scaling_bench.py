@@ -5,7 +5,8 @@ by running the identical pipeline (same input, same config) at local[8]
 and local[32] in separate processes (fresh JVM each) and reporting
 throughput at both plus efficiency = (docs/sec@32 / docs/sec@8) / 4.
 
-Writes BENCH_SCALING.json at the repo root.
+Writes BENCH_SCALING.json at the repo root, unless the file there
+already holds more legs (see `write_artifact`).
 
 Usage: python scripts/scaling_bench.py [--docs N]
 """
@@ -195,10 +196,31 @@ def main() -> None:
         "so GC/JIT/IO threads and python workers pay for themselves as "
         "on a real N-core executor"
     )
-    line = json.dumps(result)
-    print(line)
-    with open(os.path.join(REPO, "BENCH_SCALING.json"), "w") as fh:
-        fh.write(line + "\n")
+    print(json.dumps(result))
+    write_artifact(os.path.join(REPO, "BENCH_SCALING.json"), result)
+
+
+def write_artifact(path: str, result: dict) -> bool:
+    """Write `result` to `path` unless the artifact already there holds
+    more legs: a shorter re-run (one leg, or none) must not replace a
+    fuller scaling record. Returns whether it wrote; a refused result
+    stays on stdout."""
+    try:
+        with open(path) as fh:
+            old = json.load(fh)
+    except (OSError, ValueError):
+        old = {}
+    have, new = len(old.get("legs", [])), len(result.get("legs", []))
+    if have > new:
+        print(
+            f"scaling_bench: {path} holds {have} legs, this run {new}; "
+            "not overwritten",
+            file=sys.stderr,
+        )
+        return False
+    with open(path, "w") as fh:
+        fh.write(json.dumps(result) + "\n")
+    return True
 
 
 if __name__ == "__main__":

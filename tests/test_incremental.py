@@ -91,6 +91,33 @@ def test_bootstrap_adopts_pipeline_reps_and_keys(spark, pages_df, tmp_path):
         fused.fused_keyed_rows(reps, cfg), *keyed
     )
     assert not os.path.exists(tmp_path / "_bootstrap_ckpt")
+    # the run's lineage and drop logs stay with the index it built
+    from pcompress_spark.pipeline import DROP_LOGS
+
+    for name in ("_lineage.json", *DROP_LOGS):
+        assert os.path.exists(tmp_path / name), name
+
+
+def test_add_batch_on_untombstoned_index_reads_no_tombstones(
+    spark, pages_df, tmp_path, monkeypatch
+):
+    """An index update_batch never touched has no tombstones/: add_batch
+    must answer that from one metadata probe, not from a failing Spark
+    read per table read."""
+    q = F.pmod(F.xxhash64("url"), F.lit(8))
+    idx = IncrementalDedupIndex(spark, PipelineConfig(), str(tmp_path))
+    idx.bootstrap(pages_df.filter(q == 0))
+    reads = []
+    orig = idx._read
+
+    def counted(name):
+        reads.append(name)
+        return orig(name)
+
+    monkeypatch.setattr(idx, "_read", counted)
+    batch = pages_df.filter(q == 1)
+    assert idx.add_batch(batch).count() == batch.count()
+    assert "sigs" in reads and "tombstones" not in reads
 
 
 def test_coalesced_queue_matches_full_run(

@@ -160,3 +160,25 @@ def test_fixed_blocks_groups_shared_blocks(spark):
     multi = [r for r in agg.collect() if r.n_docs > 1]
     assert len(multi) == 1
     assert multi[0].n_docs == 2 and multi[0].rep_doc == 1
+
+
+def test_scaling_bench_keeps_the_fuller_artifact(tmp_path):
+    """scripts/scaling_bench.py must not overwrite a scaling artifact that
+    holds more legs than the new result (a lost 2->8 record)."""
+    import importlib.util
+    import json
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "scaling_bench.py"
+    spec = importlib.util.spec_from_file_location("scaling_bench", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    art = tmp_path / "BENCH_SCALING.json"
+    two = {"docs": 200_000, "legs": [{"from": 2, "to": 8}, {"from": 8, "to": 32}]}
+    assert mod.write_artifact(str(art), two)  # no artifact yet
+    assert not mod.write_artifact(str(art), {"docs": 1, "legs": []})
+    assert not mod.write_artifact(str(art), {"docs": 2, "legs": two["legs"][:1]})
+    assert json.loads(art.read_text()) == two
+    three = {"docs": 3, "legs": two["legs"] + [{"from": 32, "to": 64}]}
+    assert mod.write_artifact(str(art), three)
+    assert json.loads(art.read_text()) == three

@@ -65,7 +65,7 @@ def test_lineage_per_partition_detail(assignments_run):
     """North rule: checkpoints carry PER-PARTITION lineage (one entry per
     written file with rows/bytes, summing to the stage totals) plus a
     dup-ratio metric at the stages where it is defined."""
-    _, _, pipe = assignments_run
+    _, ckpt_dir, pipe = assignments_run
     by_stage = {
         r["stage"]: r for r in pipe.ckpt.lineage() if "partitions" in r
     }
@@ -84,6 +84,41 @@ def test_lineage_per_partition_detail(assignments_run):
         < 1.0
     )
     assert "dup_ratio" not in by_stage["edges"]
+    # both ratios are derived without a distinct count (reps footers, an
+    # observed sum on the assignments write) and must equal it exactly
+    for stage, col in (("sigs", "text_sha"), ("assignments", "cluster_id")):
+        vals = pd.read_parquet(f"{ckpt_dir}/{stage}", columns=[col])[col]
+        assert by_stage[stage]["dup_ratio"] == round(
+            1.0 - vals.nunique() / len(vals), 6
+        ), stage
+
+
+def test_run_actions_are_the_gates_only(spark, pages_df, tmp_path, monkeypatch):
+    """Beyond its six checkpoint writes and the drop-log writes, a run
+    issues exactly three DataFrame actions: the hot-doc broadcast gate in
+    fused.candidates, the eager pair-Jaccard count in verify_edges and the
+    bounded edge collect in cluster_labels. Row counts, dup ratios and
+    cache warm-ups ride on the writes."""
+    import sys
+
+    cls = type(pages_df)
+    calls = []
+    for name in ("count", "collect", "toPandas"):
+
+        def wrapped(self, *a, _orig=getattr(cls, name), _name=name, **k):
+            calls.append((_name, sys._getframe(1).f_code.co_name))
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(cls, name, wrapped)
+    DedupPipeline(
+        spark, PipelineConfig(), checkpoint_dir=str(tmp_path / "ck"), resume=False
+    ).run(pages_df)
+    monkeypatch.undo()
+    assert sorted(calls) == [
+        ("collect", "cluster_labels"),
+        ("count", "candidates"),
+        ("count", "verify_edges"),
+    ]
 
 
 def test_checkpoint_probes_through_hadoop_fs_scheme(spark, tmp_path):
