@@ -11,8 +11,8 @@ Storage-agnostic: every probe/mutation goes through the Hadoop FileSystem
 API resolved from the checkpoint URI's scheme (file://, hdfs://, s3a://,
 ...), never os.path/shutil — a local-FS probe on an object-store
 deployment would silently degrade resume to never-resume and lose lineage
-(the exact bug class round 2 fixed in streaming via `_try_read_seen`,
-streaming/ingest.py). The reference's commit machinery is likewise
+(streaming/ingest.py's `merge_batch` and the incremental index probe
+their tables the same way). The reference's commit machinery is likewise
 storage-real (index.c:335-453, pcompress.c:2909-2917).
 
 Lineage (metadata stream analog, meta_stream.c): one row per stage with

@@ -32,8 +32,9 @@ writes the same tables as Iceberg, giving atomic batch commits):
                   identity children from these, with their parent's text)
     tombstones/   (tbl, doc_id, ver) — per-table row versions; a row is
                   live iff its ver equals the doc's current version (see
-                  the versioned-reads section below). Only created once
-                  update_batch has run; plain ingest never pays for it
+                  the versioned-reads section below). Only written once
+                  update_batch has run; absent, it reads as an empty
+                  table that folds out of every read plan
     _lineage.json, _hot_buckets_*/, _prefilter/, _degree_cap/
                   the bootstrap run's stage lineage and drop logs
                   (DedupPipeline's own files, moved here)
@@ -80,8 +81,10 @@ measure zero divergence at default caps.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.utils import AnalysisException
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from pcompress_spark.cache import CacheScope, tracked_persist
 from pcompress_spark.config import DEFAULT_CONFIG, PipelineConfig
@@ -93,6 +96,7 @@ N_SHARDS = 64
 
 _ASSIGN_SCHEMA = "doc_id long, cluster_id long"
 _MERGE_SCHEMA = "old_cluster long, new_cluster long"
+_PENDING_SCHEMA = "doc_id long, _pv int"
 # the read schema of every index table. Declared, not inferred: Spark
 # infers a parquet table's schema from one file's footer, and a footer
 # without `ver` (an adopted pipeline stage, a pre-versioning file) would
@@ -106,7 +110,6 @@ _SCHEMAS = {
     "merges": f"{_MERGE_SCHEMA}, ver int",
     "links": "doc_id long, parent_id long, ver int",
     "tombstones": "tbl int, doc_id long, ver int",
-    "_update_inflight": "doc_id long",
 }
 
 # tombstone table codes (a doc's version is recorded per (table, doc))
@@ -120,6 +123,29 @@ _KEY = {"merges": "old_cluster"}
 # a full re-crawl batch degrades to shuffle joins instead of an oversized
 # broadcast — same defense shape as fused.HOT_DOCS_BROADCAST_MAX.
 _UPDATE_BROADCAST_MAX = 1_000_000
+
+
+def _shard() -> Column:
+    """The assignments shard of a doc: pmod(xxhash64(doc_id), N_SHARDS)."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(N_SHARDS)).cast("int")
+
+
+def _empty(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty frame of `schema` that the optimizer folds: typed NULL
+    columns over one range row under a false filter become an empty
+    LocalRelation, so a join, anti join, semi join or union against it
+    drops out of the optimized plan (a createDataFrame frame is an RDD
+    leaf that no optimizer rule removes)."""
+    return (
+        spark.range(1)
+        .select(
+            *[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in StructType.fromDDL(schema)
+            ]
+        )
+        .filter(F.lit(False))
+    )
 
 
 def _id_frame(df: DataFrame) -> tuple[DataFrame, int]:
@@ -148,30 +174,26 @@ class IncrementalDedupIndex:
         self.cfg = cfg
         self.index_dir = index_dir.rstrip("/")
         # (doc_id, _pv): the uncommitted next version of every doc an
-        # update_batch re-ingests; None outside an update window
-        self._pending_vers: DataFrame | None = None
-        # does tombstones/ exist? Probed here and once per public call
-        # (_probe_tombstones), set when update_batch commits, so an index
-        # update_batch never touched reads no tombstones at all
-        self._probe_tombstones()
+        # update_batch re-ingests; empty outside an update window
+        self._pending_vers = _empty(spark, _PENDING_SCHEMA)
 
     # ------------------------------------------------------------ storage
     def _p(self, name: str) -> str:
         return f"{self.index_dir}/{name}"
 
-    def _read(self, name: str) -> DataFrame | None:
-        """Spark-side probe (works on s3a://hdfs://file:// alike — same
-        rationale as streaming.ingest._try_read_seen) with the table's
-        declared schema. `keys/` is read recursively so its old
-        shard=*/ layout reads beside flat files."""
-        try:
-            return (
-                self.spark.read.schema(_SCHEMAS[name])
-                .option("recursiveFileLookup", name == "keys")
-                .parquet(self._p(name))
-            )
-        except AnalysisException:
-            return None
+    def _read(self, name: str) -> DataFrame:
+        """Table `name` with its declared schema; an absent table reads as
+        an empty one (`_empty`). Existence is one Hadoop FileSystem call
+        (s3a://, hdfs://, file:// alike), never a failing Spark read.
+        `keys/` is read recursively so its old shard=*/ layout reads
+        beside flat files."""
+        if not self._fs().exists(self._p(name)):
+            return _empty(self.spark, _SCHEMAS[name])
+        return (
+            self.spark.read.schema(_SCHEMAS[name])
+            .option("recursiveFileLookup", name == "keys")
+            .parquet(self._p(name))
+        )
 
     def _fs(self):
         from pcompress_spark.checkpoint import _HadoopFs
@@ -192,26 +214,21 @@ class IncrementalDedupIndex:
     # activating the new ones in the same commit. While that update runs,
     # reads hide every row of its pending docs, so the index reads as the
     # corpus minus the clusters being re-ingested. Readers go through
-    # _live(), which filters dead rows and hides `ver` from consumers;
-    # indexes never touched by update_batch have no tombstones table and
-    # pay nothing. On the production table format this mechanism is the
+    # _live(), which filters dead rows and hides `ver` from consumers.
+    # An index update_batch never touched has no tombstones table, and
+    # outside an update there are no pending docs: both read as empty
+    # frames, so the kill-map join and the pending anti join fold out of
+    # the optimized plan and such reads cost a plain filtered scan. On
+    # the production table format this mechanism is the
     # engine's row-level upsert/snapshot commit. Reference analog:
     # pcompress verifies archive-update consistency via metadata checks
     # and refuses silent mismatches (pcompress.c) — here a changed doc is
     # explicitly re-versioned, never silently dropped.
 
-    def _probe_tombstones(self) -> None:
-        """One metadata probe for tombstones/ per public call, instead of
-        a failing Spark read (and its logged stack trace) per table read
-        of an index that update_batch never touched."""
-        self._tombstoned = self._fs().exists(self._p("tombstones"))
-
-    def _kill_map(self, name: str) -> DataFrame | None:
+    def _kill_map(self, name: str) -> DataFrame:
         """Broadcastable (key, _kill = current version) for table `name`,
-        keyed by the table's version column (_KEY), or None.
-        Metadata-scale: one row per ever-updated doc."""
-        if not self._tombstoned:
-            return None
+        keyed by the table's version column (_KEY). Metadata-scale: one
+        row per ever-updated doc."""
         km = (
             self._read("tombstones")
             .filter(F.col("tbl") == _TBL[name])
@@ -220,31 +237,25 @@ class IncrementalDedupIndex:
         )
         return F.broadcast(km)
 
-    def _live(self, name: str) -> DataFrame | None:
+    def _live(self, name: str) -> DataFrame:
         """Table `name` with dead/uncommitted rows filtered (ver == the
         doc's current version) and the `ver` bookkeeping column hidden —
         what every consumer should read. Inside an update_batch window
         every row of a pending doc is hidden as well."""
-        df = self._read(name)
-        if df is None:
-            return None
         key = _KEY.get(name, "doc_id")
-        ver = F.coalesce(F.col("ver"), F.lit(0))
-        # no tombstones table: every committed row is version 0, and any
-        # ver>0 row is an uncommitted update-in-flight append
-        cur = F.lit(0)
-        km = self._kill_map(name)
-        if km is not None:
-            df = df.join(km, key, "left")
-            cur = F.coalesce(F.col("_kill"), cur)
-        df = df.filter(ver == cur)
-        if self._pending_vers is not None:
-            df = df.join(
+        # a doc without a tombstone record is at version 0, so any ver>0
+        # row of it is an uncommitted update-in-flight append
+        return (
+            self._read(name)
+            .join(self._kill_map(name), key, "left")
+            .filter(F.coalesce("ver", F.lit(0)) == F.coalesce("_kill", F.lit(0)))
+            .join(
                 self._pending_vers.withColumnRenamed("doc_id", key),
                 key,
                 "left_anti",
             )
-        return df.drop("_kill", "ver")
+            .drop("_kill", "ver")
+        )
 
     def _with_ver(self, df: DataFrame, name: str) -> DataFrame:
         """Attach the `ver` column for an append to table `name`: a doc's
@@ -254,25 +265,21 @@ class IncrementalDedupIndex:
         NOT-YET-COMMITTED next version, making those rows invisible until
         the closing tombstone append flips the version."""
         key = _KEY.get(name, "doc_id")
-        ver = F.lit(0)
-        km = self._kill_map(name)
-        if km is not None:
-            df = df.join(km, key, "left")
-            ver = F.coalesce(F.col("_kill"), ver)
-        if self._pending_vers is not None:
-            df = df.join(
+        return (
+            df.join(self._kill_map(name), key, "left")
+            .join(
                 self._pending_vers.withColumnRenamed("doc_id", key),
                 key,
                 "left",
             )
-            ver = F.coalesce(F.col("_pv"), ver)
-        return df.withColumn("ver", ver.cast("int")).drop("_kill", "_pv")
+            .withColumn("ver", F.coalesce("_pv", "_kill", F.lit(0)).cast("int"))
+            .drop("_kill", "_pv")
+        )
 
     def _append_tombstones(self, rows: DataFrame) -> None:
         rows.select("tbl", "doc_id", "ver").coalesce(1).write.mode(
             "append"
         ).parquet(self._p("tombstones"))
-        self._tombstoned = True
 
     def _append_links(self, links: DataFrame) -> None:
         """(doc_id, parent_id): identity membership — every non-delegate
@@ -311,7 +318,6 @@ class IncrementalDedupIndex:
             *_TBL, "tombstones", "_update_inflight", "_bootstrap_ckpt", *run_files
         ):
             fs.delete(self._p(name))
-        self._tombstoned = False
         ckpt_dir = self._p("_bootstrap_ckpt")
         pipe = DedupPipeline(
             self.spark, self.cfg, checkpoint_dir=ckpt_dir, resume=False
@@ -336,37 +342,39 @@ class IncrementalDedupIndex:
         fs.delete(ckpt_dir)
         return self.assignments()
 
-    def _write_assignments(self, df: DataFrame, mode: str) -> None:
-        """Assignments land shard-partitioned (pmod(xxhash64(doc_id), N))
-        like the streaming `seen` index: point lookups and the
-        redelivery anti-join then read only the shard partitions a batch
-        hashes into, not the whole ingest history."""
+    def _write_assignments(
+        self, df: DataFrame, mode: str, name: str = "assignments"
+    ) -> None:
+        """Assignments land shard-partitioned (`_shard`) like the
+        streaming `seen` index: point lookups and the redelivery
+        anti-join then read only the shard partitions a batch hashes
+        into, not the whole ingest history."""
         (
             self._with_ver(df.select("doc_id", "cluster_id"), "assignments")
-            .withColumn(
-                "shard", F.pmod(F.xxhash64("doc_id"), F.lit(N_SHARDS)).cast("int")
-            )
+            .withColumn("shard", _shard())
             .repartition(F.col("shard"))  # few files per shard directory
             .write.mode(mode)
             .partitionBy("shard")
-            .parquet(self._p("assignments"))
+            .parquet(self._p(name))
         )
 
     # -------------------------------------------------------- assignments
-    def _merge_closure(self) -> DataFrame | None:
+    def _merge_closure(self) -> DataFrame:
         """Path-compressed merge map as a broadcastable (old_cluster,
-        new_cluster) frame, or None when there are no merges.
+        new_cluster) frame, empty when there are no merges.
 
         Merges are metadata-scale (bounded by clusters bridged per batch,
         not by rows): close the chains driver-side and apply as one
         broadcast map — an iterative join loop would run a Spark job per
-        chain hop for a table of a few hundred rows."""
-        m = self._live("merges")
-        if m is None:
-            return None
-        chain = {r["old_cluster"]: r["new_cluster"] for r in m.collect()}
+        chain hop for a table of a few hundred rows. An absent merges/
+        collects without a Spark job (its plan is an empty local
+        relation)."""
+        chain = {
+            r["old_cluster"]: r["new_cluster"]
+            for r in self._live("merges").collect()
+        }
         if not chain:
-            return None
+            return _empty(self.spark, _MERGE_SCHEMA)
 
         def final(c: int) -> int:
             seen = set()
@@ -379,9 +387,7 @@ class IncrementalDedupIndex:
         return F.broadcast(long_pair_frame(self.spark, closed, _MERGE_SCHEMA))
 
     @staticmethod
-    def _apply_closure(a: DataFrame, mm: DataFrame | None) -> DataFrame:
-        if mm is None:
-            return a.select("doc_id", "cluster_id")
+    def _apply_closure(a: DataFrame, mm: DataFrame) -> DataFrame:
         return (
             a.join(mm, a["cluster_id"] == mm["old_cluster"], "left")
             .withColumn("cluster_id", F.coalesce("new_cluster", "cluster_id"))
@@ -396,16 +402,12 @@ class IncrementalDedupIndex:
         the reference's refusal to read a mismatched archive): re-running
         update_batch with the same pages heals the index."""
         self._check_inflight()
-        self._probe_tombstones()
-        a = self._live("assignments")
-        if a is None:
-            return self.spark.createDataFrame([], _ASSIGN_SCHEMA)
         return self._apply_closure(
-            a.select("doc_id", "cluster_id"), self._merge_closure()
+            self._live("assignments"), self._merge_closure()
         )
 
     def _check_inflight(self) -> None:
-        if self._read("_update_inflight") is not None:
+        if self._fs().exists(self._p("_update_inflight")):
             raise RuntimeError(
                 "index has an interrupted update_batch (marker "
                 f"{self._p('_update_inflight')} exists): affected docs "
@@ -414,29 +416,18 @@ class IncrementalDedupIndex:
                 "partial state."
             )
 
-    def _resolved_for(
-        self, ids: DataFrame, mm: DataFrame | None
-    ) -> DataFrame:
+    def _resolved_for(self, ids: DataFrame, mm: DataFrame) -> DataFrame:
         """Merge-resolved (doc_id, cluster_id) for the given doc_ids ONLY,
         reading just the assignments shard partitions those ids hash into
         (partition filter pushed to the scan) — batch operations never
         scan the full ingest history (the merge_batch pruning pattern,
         streaming/ingest.py)."""
-        a = self._live("assignments")
-        if a is None:
-            return self.spark.createDataFrame([], _ASSIGN_SCHEMA)
         shards = [
-            r["s"]
-            for r in ids.select(
-                F.pmod(F.xxhash64("doc_id"), F.lit(N_SHARDS))
-                .cast("int")
-                .alias("s")
-            )
-            .distinct()
-            .collect()
+            r["s"] for r in ids.select(_shard().alias("s")).distinct().collect()
         ]
         a = (
-            a.filter(F.col("shard").isin(shards))
+            self._live("assignments")
+            .filter(F.col("shard").isin(shards))
             .select("doc_id", "cluster_id")
             .join(ids.select("doc_id").distinct(), "doc_id", "left_semi")
         )
@@ -446,10 +437,11 @@ class IncrementalDedupIndex:
         """doc_ids already assigned, read from the given shard partitions
         only — the redelivery guard needs membership, not labels, so no
         merge closure is applied."""
-        a = self._live("assignments")
-        if a is None:
-            return self.spark.createDataFrame([], "doc_id long")
-        return a.filter(F.col("shard").isin(shards)).select("doc_id")
+        return (
+            self._live("assignments")
+            .filter(F.col("shard").isin(shards))
+            .select("doc_id")
+        )
 
     def compact(self) -> int:
         """Fold the merge closure into the assignments table and clear
@@ -463,10 +455,9 @@ class IncrementalDedupIndex:
         swapped in by rename, so the rewrite never reads the files it is
         replacing; on the production table format this whole op is one
         atomic snapshot commit."""
-        m = self._read("merges")
-        if m is None:
+        n = self._read("merges").count()
+        if n == 0:
             return 0
-        n = m.count()
         # durable staging write + rename swap: an in-place overwrite
         # deletes the old files before the new ones commit, so an
         # executor/driver loss mid-write would destroy the only copy of
@@ -475,14 +466,8 @@ class IncrementalDedupIndex:
         # commit replaces this whole dance.
         fs = self._fs()
         fs.delete(self._p("_assignments_staged"))
-        (
-            self._with_ver(self.assignments(), "assignments")
-            .withColumn(
-                "shard", F.pmod(F.xxhash64("doc_id"), F.lit(N_SHARDS)).cast("int")
-            )
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(self._p("_assignments_staged"))
+        self._write_assignments(
+            self.assignments(), "overwrite", "_assignments_staged"
         )
         fs.delete(self._p("assignments"))
         if not fs.rename(self._p("_assignments_staged"), self._p("assignments")):
@@ -508,8 +493,8 @@ class IncrementalDedupIndex:
         self,
         bkeys: DataFrame,
         fresh: DataFrame,
-        old_keys: DataFrame | None,
-        old_sigs: DataFrame | None,
+        old_keys: DataFrame,
+        old_sigs: DataFrame,
     ) -> DataFrame:
         """candidates(id_a, id_b, channels, mh_overlap, is_star) for every
         pair with >= 1 fresh endpoint: fused.candidates in its probe shape
@@ -518,33 +503,29 @@ class IncrementalDedupIndex:
         docs' signatures and winnow anchors are read from the index, never
         recomputed; cost ∝ |fresh keys| x bucket width, independent of
         corpus size."""
-        rows = bkeys
-        if old_keys is not None:
-            probe = bkeys.select("ch", "key").distinct()
-            matched_old = old_keys.join(probe, ["ch", "key"], "left_semi").select(
-                "doc_id", "ch", "key"
-            )
-            # crash-recovery docs are in BOTH sides (they stay in `fresh`,
-            # so bkeys recomputes their keys, AND their stored keys sit in
-            # old_keys) — drop the stored copy or per-bucket counts see
-            # them twice, which can flip an in-cap bucket over
-            # max_bucket_docs and alter pair generation vs a clean run
-            matched_old = matched_old.join(
-                bkeys.select("doc_id").distinct(), "doc_id", "left_anti"
-            )
-            # stored keys SHOULD be unique per (doc_id, ch, key); dedup
-            # anyway so a crash between concurrent sigs/keys appends that
-            # replays a doc's keys can never inflate bucket counts
-            matched_old = matched_old.dropDuplicates(["doc_id", "ch", "key"])
-            rows = bkeys.unionByName(matched_old)
-        rows = tracked_persist(rows)
+        probe = bkeys.select("ch", "key").distinct()
+        matched_old = old_keys.join(probe, ["ch", "key"], "left_semi").select(
+            "doc_id", "ch", "key"
+        )
+        # crash-recovery docs are in BOTH sides (they stay in `fresh`, so
+        # bkeys recomputes their keys, AND their stored keys sit in
+        # old_keys) — drop the stored copy or per-bucket counts see them
+        # twice, which can flip an in-cap bucket over max_bucket_docs and
+        # alter pair generation vs a clean run
+        matched_old = matched_old.join(
+            bkeys.select("doc_id").distinct(), "doc_id", "left_anti"
+        )
+        # stored keys SHOULD be unique per (doc_id, ch, key); dedup anyway
+        # so a crash between concurrent sigs/keys appends that replays a
+        # doc's keys can never inflate bucket counts
+        matched_old = matched_old.dropDuplicates(["doc_id", "ch", "key"])
+        rows = tracked_persist(bkeys.unionByName(matched_old))
         # stored simhashes pulled for probed docs only — never a
         # full-corpus shuffle
-        sims = fresh.select("doc_id", "simhash")
-        if old_sigs is not None:
-            sims = sims.unionByName(old_sigs.select("doc_id", "simhash"))
-        sims = sims.join(
-            rows.select("doc_id").distinct(), "doc_id", "left_semi"
+        sims = (
+            fresh.select("doc_id", "simhash")
+            .unionByName(old_sigs.select("doc_id", "simhash"))
+            .join(rows.select("doc_id").distinct(), "doc_id", "left_semi")
         )
         cands, _hot, _pre = fused.candidates(
             rows, sims, self.cfg, probe_ids=fresh.select("doc_id")
@@ -552,7 +533,7 @@ class IncrementalDedupIndex:
         return cands
 
     def _endpoint_reps(
-        self, pairs: DataFrame, fresh: DataFrame, old_sigs: DataFrame | None
+        self, pairs: DataFrame, fresh: DataFrame, old_sigs: DataFrame
     ) -> DataFrame:
         """Delegate rows (incl. text) for exactly the docs appearing as
         pair endpoints — the only corpus rows the verify join ships.
@@ -562,18 +543,13 @@ class IncrementalDedupIndex:
             .unionByName(pairs.select(F.col("id_b").alias("doc_id")))
             .distinct()
         )
-        reps = fresh
-        if old_sigs is not None:
-            reps = reps.unionByName(
-                old_sigs.join(ids, "doc_id", "left_semi")
-            )
-        return reps
+        return fresh.unionByName(old_sigs.join(ids, "doc_id", "left_semi"))
 
     def _verified_fuzzy(
         self,
         cands: DataFrame,
         fresh: DataFrame,
-        old_sigs: DataFrame | None,
+        old_sigs: DataFrame,
     ) -> DataFrame:
         """degree cap -> exact verification of the probe candidates.
         Returns verified (src, dst) edges.
@@ -611,7 +587,6 @@ class IncrementalDedupIndex:
         not this operator."""
         spark = self.spark
         self._check_inflight()
-        self._probe_tombstones()
         # size shuffles to the BATCH, not the session default: a 10k-doc
         # increment at the session's 128 partitions spends more wall in
         # task-scheduling latency than in work (measured: the candidate
@@ -651,7 +626,7 @@ class IncrementalDedupIndex:
         segment accumulation)."""
         batches = [b for b in batches if b is not None]
         if not batches:
-            return self.spark.createDataFrame([], _ASSIGN_SCHEMA)
+            return _empty(self.spark, _ASSIGN_SCHEMA)
         u = batches[0]
         for b in batches[1:]:
             u = u.unionByName(b)
@@ -702,18 +677,10 @@ class IncrementalDedupIndex:
             from pyspark.sql import Window
 
             self._phase("incr:identity")
-            shard_counts = (
-                base.groupBy(
-                    F.pmod(F.xxhash64("doc_id"), F.lit(N_SHARDS))
-                    .cast("int")
-                    .alias("s")
-                )
-                .count()
-                .collect()
-            )
+            shard_counts = base.groupBy(_shard().alias("s")).count().collect()
             n_raw = sum(r["count"] for r in shard_counts)
             if n_raw == 0:
-                return spark.createDataFrame([], _ASSIGN_SCHEMA)
+                return _empty(spark, _ASSIGN_SCHEMA)
             spark.conf.set(
                 "spark.sql.shuffle.partitions",
                 str(max(16, min(1024, n_raw // 400))),
@@ -729,7 +696,7 @@ class IncrementalDedupIndex:
             ).localCheckpoint(eager=True)
             n_batch = sigs.count()
             if n_batch == 0:  # fully re-delivered batch: nothing to do
-                return spark.createDataFrame([], _ASSIGN_SCHEMA)
+                return _empty(spark, _ASSIGN_SCHEMA)
             groups = exact.text_groups(sigs)
             breps = exact.representatives(sigs, groups)
 
@@ -744,17 +711,11 @@ class IncrementalDedupIndex:
             # ONE barrier materializes delegate-with-match `classified`;
             # recovery_ids / ident / fresh are cheap filters over it.
             self._phase("incr:classify")
-            if old_sigs is not None:
-                old_ident = old_sigs.select(
-                    "text_sha", F.col("doc_id").alias("old_id")
-                )
-                classified = breps.join(
-                    old_ident, "text_sha", "left"
-                ).localCheckpoint(eager=True)
-            else:
-                classified = breps.withColumn(
-                    "old_id", F.lit(None).cast("long")
-                ).localCheckpoint(eager=True)
+            classified = breps.join(
+                old_sigs.select("text_sha", F.col("doc_id").alias("old_id")),
+                "text_sha",
+                "left",
+            ).localCheckpoint(eager=True)
             recovery_ids = classified.filter(
                 F.col("old_id") == F.col("doc_id")
             ).select("doc_id")
@@ -992,21 +953,20 @@ class IncrementalDedupIndex:
         docstring applies here identically)."""
         spark = self.spark
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        self._probe_tombstones()
         try:
             return self._update_batch_inner(pages)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            self._pending_vers = None
+            self._pending_vers = _empty(spark, _PENDING_SCHEMA)
 
     def _update_batch_inner(self, pages: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
         fs = self._fs()
+        if not fs.exists(self._p("sigs")):
+            return self.add_batch(pages)
         with CacheScope():
             live_sigs = self._live("sigs")
-            if live_sigs is None:
-                return self.add_batch(pages)
             # ---- detect: batch identity vs CURRENT content per doc.
             # Delegates carry their own text; identity children carry
             # their parent delegate's (texts equal by construction).
@@ -1018,30 +978,30 @@ class IncrementalDedupIndex:
                 .drop("_rn")
                 .localCheckpoint(eager=True)
             )
-            current = live_sigs.select("url", "doc_id", "text_sha", "lang", "text")
-            live_links = self._live("links")
-            if live_links is not None:
-                # crash-window duplicate link rows are expected; one row
-                # per doc is the contract
-                current = current.unionByName(
-                    live_links.dropDuplicates(["doc_id"])
-                    .join(
-                        live_sigs.select(
-                            F.col("doc_id").alias("parent_id"),
-                            "text_sha",
-                            "lang",
-                            "text",
-                        ),
-                        "parent_id",
-                    )
-                    .select(
-                        F.lit(None).cast("string").alias("url"),
-                        "doc_id",
+            # crash-window duplicate link rows are expected; one row per
+            # doc is the contract
+            current = live_sigs.select(
+                "url", "doc_id", "text_sha", "lang", "text"
+            ).unionByName(
+                self._live("links")
+                .dropDuplicates(["doc_id"])
+                .join(
+                    live_sigs.select(
+                        F.col("doc_id").alias("parent_id"),
                         "text_sha",
                         "lang",
                         "text",
-                    )
+                    ),
+                    "parent_id",
                 )
+                .select(
+                    F.lit(None).cast("string").alias("url"),
+                    "doc_id",
+                    "text_sha",
+                    "lang",
+                    "text",
+                )
+            )
             cls = base.join(
                 current.select("doc_id", F.col("text_sha").alias("_cur")),
                 "doc_id",
@@ -1096,16 +1056,15 @@ class IncrementalDedupIndex:
             # ---- pending versions: (per-doc raw max over every table)
             # + 1, above both committed state and any crashed attempt's
             # orphans
-            vers = self.spark.createDataFrame([], "doc_id long, ver int")
-            for name in (*_TBL, "tombstones"):
-                df = self._read(name)
-                if df is not None:
-                    vers = vers.unionByName(
-                        df.select(
-                            F.col(_KEY.get(name, "doc_id")).alias("doc_id"),
-                            "ver",
-                        )
+            vers = reduce(
+                DataFrame.unionByName,
+                [
+                    self._read(name).select(
+                        F.col(_KEY.get(name, "doc_id")).alias("doc_id"), "ver"
                     )
+                    for name in (*_TBL, "tombstones")
+                ],
+            )
             mv = (
                 vers.join(touched, "doc_id", "left_semi")
                 .groupBy("doc_id")

@@ -33,8 +33,8 @@ pipe chunk).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql.utils import AnalysisException
 
+from pcompress_spark.checkpoint import _HadoopFs
 from pcompress_spark.datagen import PAGES_SCHEMA
 
 N_SHARDS = 64
@@ -84,15 +84,6 @@ def dedup_stream_global(pages: DataFrame) -> DataFrame:
     )
 
 
-def _try_read_seen(spark: SparkSession, seen_dir: str) -> DataFrame | None:
-    """Probe the seen table THROUGH Spark (works on s3a://, hdfs://, file://
-    alike — an os.path probe silently fails off the local filesystem)."""
-    try:
-        return spark.read.parquet(seen_dir)
-    except AnalysisException:
-        return None
-
-
 def merge_batch(
     batch: DataFrame, seen_dir: str, n_shards: int = N_SHARDS
 ) -> tuple[int, int]:
@@ -116,9 +107,13 @@ def merge_batch(
         .persist()
     )
     total = batch.count()
-    seen = _try_read_seen(spark, seen_dir)
-    if seen is not None:
+    # existence through the Hadoop FileSystem of seen_dir's scheme (an
+    # os.path probe silently fails off the local filesystem); the read
+    # declares the two columns it needs, so a table holding no data file
+    # yet reads as empty instead of failing schema inference
+    if _HadoopFs(spark, seen_dir).exists(seen_dir):
         shards = [r["shard"] for r in batch.select("shard").distinct().collect()]
+        seen = spark.read.schema("text_sha string, shard int").parquet(seen_dir)
         fresh = batch.join(
             seen.filter(F.col("shard").isin(shards)).select("text_sha"),
             "text_sha",

@@ -18,16 +18,16 @@ shuffle-heavy stages (sigs/assignments, whose working sets are small and
 quickly resident, were unaffected; candidates/verify/edges tripled their
 machine-CPU seconds).
 
-Remedy, in order: (a) unbind the virtio-balloon driver so freed pages
-STAY in the guest free list (reuse then runs at guest speed with no host
-involvement), (b) fault in most of the VM's memory once, paying the slow
-cost a single time outside every measured window. This is environment
+Remedy: fault in most of the VM's memory once, paying the slow cost a
+single time outside every measured window. This is environment
 preparation, not benchmark staging: the measured jobs still allocate,
 shuffle, and spill exactly as before — their pages just come off the
-guest free list like they would on any healthy host.
+guest free list like they would on any healthy host. It changes no
+machine setting, so pages a finished process frees can still re-cool
+through mechanism 2.
 
-All steps are best-effort and no-ops on healthy machines (the probe gates
-them), so bench harnesses call `ensure_warm()` unconditionally.
+The warm-up is best-effort and a no-op on healthy machines (the probe
+gates it), so bench harnesses call `ensure_warm()` unconditionally.
 """
 
 from __future__ import annotations
@@ -35,8 +35,6 @@ from __future__ import annotations
 import os
 import sys
 import time
-
-_BALLOON_DRIVER_DIR = "/sys/bus/virtio/drivers/virtio_balloon"
 
 # pages already faulted by this process's probes/warmups stay warm; track
 # so repeated ensure_warm() calls in one process are cheap
@@ -58,46 +56,6 @@ def cold_fault_rate_gbps(sample_mb: int = 256) -> float:
     return (n / 1e9) / dt
 
 
-def _balloon_devices() -> list[str]:
-    """Device names currently bound to the virtio_balloon driver — read
-    from the driver's own sysfs dir rather than assuming virtio0 (the
-    balloon can enumerate as virtio1+ when net/blk devices come first)."""
-    try:
-        return sorted(
-            name
-            for name in os.listdir(_BALLOON_DRIVER_DIR)
-            if name.startswith("virtio")
-        )
-    except OSError:
-        return []
-
-
-def _try_unbind_balloon(log=None) -> bool:
-    """Stop virtio-balloon free-page reporting (best-effort, needs root).
-
-    Without this, pages freed when a bench subprocess exits are reported
-    back to the host and the next leg re-faults them through the slow
-    path — the warmup would only help the first consumer. Returns True
-    only when no balloon device remains bound AFTERWARD (so the report
-    never claims success while reporting stays active). This is a
-    persistent machine-wide change; callers must gate it on a measured
-    pathology (ensure_warm does) and log it prominently."""
-    devs = _balloon_devices()
-    if not devs:
-        return True  # nothing bound (already unbound or no balloon)
-    for dev in devs:
-        try:
-            with open(os.path.join(_BALLOON_DRIVER_DIR, "unbind"), "w") as fh:
-                fh.write(dev)
-            if log:
-                log(f"[warmup] UNBOUND virtio-balloon device {dev} "
-                    "(persistent: host-side free-page reporting disabled "
-                    "for this VM; set PCOMPRESS_WARM_UNBIND=0 to forbid)")
-        except OSError:
-            pass
-    return not _balloon_devices()
-
-
 def _available_gb() -> float:
     with open("/proc/meminfo") as fh:
         for line in fh:
@@ -112,8 +70,8 @@ def ensure_warm(
     budget_s: float | None = None,
     log=None,
 ) -> dict:
-    """Probe the cold-fault rate; when degraded, unbind the balloon and
-    fault in (MemAvailable - reserve_gb) once. Returns a report dict.
+    """Probe the cold-fault rate; when degraded, fault in
+    (MemAvailable - reserve_gb) once. Returns a report dict.
 
     budget_s caps the warmup wall time (default 900 s, override with
     $PCOMPRESS_WARM_BUDGET_S): on a host degraded to ~0.01 GB/s a full
@@ -128,19 +86,10 @@ def ensure_warm(
     log = log or (lambda msg: print(msg, file=sys.stderr, flush=True))
     if budget_s is None:
         budget_s = float(os.environ.get("PCOMPRESS_WARM_BUDGET_S", "900"))
-    rep = {"balloon_unbound": False, "warmed_gb": 0}
+    rep = {"warmed_gb": 0}
     rate = cold_fault_rate_gbps()
     rep["cold_fault_gbps_before"] = round(rate, 2)
-    # the balloon unbind is a persistent machine-wide change (the host
-    # loses memory reclaim for this VM), so it is PROBE-GATED: only taken
-    # when the cold-fault probe shows the pathology it fixes, and only
-    # unless PCOMPRESS_WARM_UNBIND=0 forbids it (=1 forces it, e.g. for a
-    # machine known to re-cool mid-bench despite a warm first probe).
-    unbind_env = os.environ.get("PCOMPRESS_WARM_UNBIND", "")
-    degraded = rate < min_rate_gbps
-    if unbind_env != "0" and (degraded or unbind_env == "1"):
-        rep["balloon_unbound"] = _try_unbind_balloon(log)
-    if not degraded or _warmed:
+    if rate >= min_rate_gbps or _warmed:
         return rep
     target = max(0.0, _available_gb() - reserve_gb)
     log(

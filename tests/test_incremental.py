@@ -101,23 +101,35 @@ def test_bootstrap_adopts_pipeline_reps_and_keys(spark, pages_df, tmp_path):
 def test_add_batch_on_untombstoned_index_reads_no_tombstones(
     spark, pages_df, tmp_path, monkeypatch
 ):
-    """An index update_batch never touched has no tombstones/: add_batch
-    must answer that from one metadata probe, not from a failing Spark
-    read per table read."""
+    """An index update_batch never touched has no tombstones/, merges/ or
+    _update_inflight/: add_batch and assignments() issue no Spark read of
+    an absent table (each such read fails and logs a stack trace), and a
+    live read of such an index plans no join — the empty tombstone and
+    pending-version frames fold out of the optimized plan."""
+    from pyspark.sql.readwriter import DataFrameReader
+
     q = F.pmod(F.xxhash64("url"), F.lit(8))
     idx = IncrementalDedupIndex(spark, PipelineConfig(), str(tmp_path))
     idx.bootstrap(pages_df.filter(q == 0))
-    reads = []
-    orig = idx._read
+    absent = ("tombstones", "merges", "_update_inflight")
+    assert not any(os.path.exists(idx._p(n)) for n in absent)
+    plan = idx._live("sigs")._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan, plan
 
-    def counted(name):
-        reads.append(name)
-        return orig(name)
+    reads, missing = [], []
+    orig = DataFrameReader.parquet
 
-    monkeypatch.setattr(idx, "_read", counted)
+    def counted(self, *paths, **kw):
+        reads.extend(os.path.basename(p.rstrip("/")) for p in paths)
+        missing.extend(p for p in paths if not os.path.exists(p))
+        return orig(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counted)
     batch = pages_df.filter(q == 1)
     assert idx.add_batch(batch).count() == batch.count()
-    assert "sigs" in reads and "tombstones" not in reads
+    assert "sigs" in reads and not set(reads) & set(absent), reads
+    idx.assignments().count()
+    assert not missing, missing
 
 
 def test_coalesced_queue_matches_full_run(
@@ -272,7 +284,7 @@ def test_compact_folds_merges(spark, tmp_path):
 
     folded = idx.compact()
     assert folded >= 1
-    assert idx._read("merges") is None            # cleared
+    assert not os.path.exists(idx._p("merges"))   # cleared
     after = _as_map(idx.assignments())
     assert after == before                        # same resolution, no closure
     # raw table already carries the folded labels

@@ -254,7 +254,7 @@ def test_update_mixed_batch_matches_monolithic(
         half = F.pmod(F.xxhash64("url"), F.lit(2))
         idx.bootstrap(pages_df.filter(half == 0))
         idx.add_batch(pages_df.filter(half == 1))
-        assert idx._read("merges") is not None, "precondition: merges"
+        assert os.path.exists(idx._p("merges")), "precondition: merges"
 
     out = idx.update_batch(batch)
     # changed + new rows are classified; unchanged are no-ops
@@ -310,7 +310,7 @@ def test_update_unchanged_batch_is_noop(spark, tmp_path):
     before = _as_map(idx.assignments())
     idx.update_batch(_pages(spark, [("u://a", a), ("u://c", c)]))
     assert _as_map(idx.assignments()) == before
-    assert idx._read("tombstones") is None  # nothing was versioned
+    assert not os.path.exists(idx._p("tombstones"))  # nothing was versioned
 
 
 def test_update_then_add_batch_keeps_working(spark, tmp_path):
