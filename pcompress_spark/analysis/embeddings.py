@@ -155,12 +155,6 @@ def brute_force_topk(
     )
 
 
-def hyperplanes(dim: int, bits: int, seed: int = 42) -> np.ndarray:
-    """Deterministic (bits, dim) Gaussian hyperplane matrix."""
-    rng = np.random.Generator(np.random.PCG64(seed))
-    return rng.standard_normal((bits, dim))
-
-
 def make_bucket_udf(planes: np.ndarray):
     """pandas UDF: embedding -> array of per-table bucket ids.
 

@@ -29,7 +29,6 @@ from datetime import datetime, timedelta, timezone
 import numpy as np
 import pandas as pd
 
-from pcompress_spark.xxh64 import xxh64_signed
 
 SEED = 42
 BLOCK = 1000
@@ -297,8 +296,3 @@ def gen_pages_spark(spark, n: int, partitions: int = 32):
         spark.range(0, n, 1, partitions)
         .mapInPandas(_gen, schema=PAGES_SCHEMA)
     )
-
-
-def doc_id_of(url: str) -> int:
-    """Stable doc id — matches the pipeline's `F.xxhash64(url)`."""
-    return xxh64_signed(url)

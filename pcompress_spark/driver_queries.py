@@ -67,7 +67,7 @@ from pcompress_spark.analysis import embeddings as E
 from pcompress_spark.analysis import multimodal as M
 from pcompress_spark.config import DEFAULT_CONFIG
 from pcompress_spark.functions import text as TX
-from pcompress_spark.functions.shingling import make_sig_udf
+from pcompress_spark.functions.shingling import make_sig_udf_lang
 from pcompress_spark.operators import fused
 from pcompress_spark.operators.components import cluster_labels
 
@@ -259,8 +259,10 @@ def _channel_pairs(docs: DataFrame, ch: int) -> DataFrame:
     The channel is selected by filtering the fused keyed rows (input data,
     the generator itself is unchanged). min_matches=0 keeps every proposed
     pair, so the sketch's recall is what the oracle certifies."""
-    sig_udf = make_sig_udf(DOC_CFG)
-    reps = docs.select("doc_id", "text").withColumn("_s", sig_udf("text")).select(
+    sig_udf = make_sig_udf_lang(DOC_CFG)
+    reps = docs.select("doc_id", "text").withColumn(
+        "_s", sig_udf("text", F.lit(""))
+    ).select(
         "doc_id",
         "text",
         F.col("_s.nshingles").alias("nshingles"),

@@ -226,7 +226,3 @@ def jaccard(a: np.ndarray, b: np.ndarray) -> float:
 def to_signed(arr: np.ndarray) -> np.ndarray:
     """uint64 → int64 bit-cast (Spark LongType carries the same 64 bits)."""
     return arr.view(np.int64) if arr.dtype == np.uint64 else arr.astype(np.int64)
-
-
-def to_unsigned(arr: np.ndarray) -> np.ndarray:
-    return arr.view(np.uint64) if arr.dtype == np.int64 else arr.astype(np.uint64)

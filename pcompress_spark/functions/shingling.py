@@ -34,33 +34,6 @@ SIG_SCHEMA = T.StructType(
 )
 
 
-def make_sig_udf(cfg: PipelineConfig):
-    """pandas UDF: text -> struct(nshingles, minhash[K], simhash).
-
-    One shingling pass feeds both sketches (the reference likewise derives
-    the KMV sketch and similarity_hash from one chunking pass).
-    """
-    width = cfg.shingle_width
-    a_params, b_params = H.minhash_params(cfg.minhash_k, cfg.seed)
-
-    @F.pandas_udf(SIG_SCHEMA)
-    def sig_udf(texts: pd.Series) -> pd.DataFrame:
-        n = len(texts)
-        nsh = np.zeros(n, dtype=np.int32)
-        mh = [None] * n
-        sh = np.zeros(n, dtype=np.int64)
-        for i, t in enumerate(texts):
-            shingles = H.shingle_hashes(t or "", width)
-            nsh[i] = shingles.size
-            mh[i] = H.to_signed(H.minhash_from_shingles(shingles, a_params, b_params))
-            sh[i] = np.int64(
-                np.uint64(H.simhash_from_shingles(shingles)).view(np.int64)
-            )
-        return pd.DataFrame({"nshingles": nsh, "minhash": mh, "simhash": sh})
-
-    return sig_udf
-
-
 def make_sig_udf_lang(cfg: PipelineConfig):
     """Lang-aware sig UDF: (text, lang) -> struct(nshingles, minhash,
     simhash), with per-lang shingle dispatch (P6 adaptive config) — CJK

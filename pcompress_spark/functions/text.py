@@ -41,16 +41,6 @@ def token_count(text: Column) -> Column:
     )
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """BPE-ish subword proxy: words + digits + punctuation runs.
-
-    regexp-based (JVM): counts alnum runs and single punctuation marks,
-    approximating a byte-pair-encoding token budget for training-data
-    accounting.
-    """
-    return F.regexp_count(text, F.lit(r"[A-Za-zÀ-ɏ]+|[0-9]|[^\sA-Za-z0-9À-ɏ]"))
-
-
 def punct_ratio(text: Column) -> Column:
     n = F.length(text)
     p = F.regexp_count(text, F.lit(r"[\.,;:!\?]"))

@@ -593,6 +593,7 @@ class IncrementalDedupIndex:
         # phase alone 43.9s at 128 partitions vs 14.9s at 32 on the same
         # batch); restored on exit so co-resident jobs keep their sizing
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        prev_desc = spark.sparkContext.getLocalProperty("spark.job.description")
         # NOTE (measured, r4): disabling AQE for the batch window was
         # tried to cut the ~170-small-job driver overhead and made the
         # batch 2.6x SLOWER (labels phase 13.5s -> 333s job-wall): AQE's
@@ -602,13 +603,14 @@ class IncrementalDedupIndex:
             return self._add_batch_inner(exact.base_ids(pages))
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            spark.sparkContext.setJobDescription(prev_desc)
 
     def add_batches(self, batches: list[DataFrame]) -> DataFrame:
         """Drain a QUEUE of pending batches in ONE classification action.
 
         The per-batch cost is dominated by a fixed floor of small jobs
         and plan barriers (measured: ~40-55 s regardless of batch size at
-        10k-doc scale — scripts/incr_profile.py), so when ingest falls
+        10k-doc scale — scripts/update_bench.py), so when ingest falls
         behind and k batches are queued, classifying their union costs
         ~1 floor instead of k floors. Semantically free: add_batch label
         parity with the monolithic run holds for ANY batch partitioning
@@ -633,9 +635,11 @@ class IncrementalDedupIndex:
         return self.add_batch(u)
 
     def _phase(self, name: str) -> None:
-        """Tag subsequent jobs (thread-inheritable) so the Spark UI / REST
-        API attributes per-phase wall to the batch sections — the floor
-        profile `scripts/incr_profile.py` reads these. Costless."""
+        """Name the batch phase that starts here: the calling thread's
+        next jobs carry it as their job description. add_batch and
+        update_batch put the caller's description back on exit;
+        `scripts/update_bench.py` attributes the Spark event log to these
+        phases. Costless."""
         try:
             self.spark.sparkContext.setJobDescription(name)
         except Exception:
@@ -953,15 +957,18 @@ class IncrementalDedupIndex:
         docstring applies here identically)."""
         spark = self.spark
         prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        prev_desc = spark.sparkContext.getLocalProperty("spark.job.description")
         try:
             return self._update_batch_inner(pages)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            spark.sparkContext.setJobDescription(prev_desc)
             self._pending_vers = _empty(spark, _PENDING_SCHEMA)
 
     def _update_batch_inner(self, pages: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
+        self._phase("incr:detect")
         fs = self._fs()
         if not fs.exists(self._p("sigs")):
             return self.add_batch(pages)
@@ -1083,6 +1090,7 @@ class IncrementalDedupIndex:
 
             # ---- COMMIT: one tombstone append flips every table's
             # version of every re-ingested doc
+            self._phase("incr:commit")
             self._append_tombstones(
                 self._pending_vers.select(
                     F.explode(

@@ -191,7 +191,6 @@ def verify_edges(
     candidates: DataFrame,
     reps_with_text: DataFrame,
     cfg: PipelineConfig,
-    eager_jaccard: bool = False,
 ) -> DataFrame:
     """candidates(id_a, id_b, channels) -> edges(src, dst, jaccard, kind).
 
@@ -208,11 +207,10 @@ def verify_edges(
                 pair directly.
     """
     # persist: jac feeds both the near branch and the substring pre-filter.
-    # eager_jaccard forces it NOW so a multi-branch downstream action reads
-    # a warm cache rather than computing the verify join once per branch.
+    # The count forces it NOW so a multi-branch downstream action reads a
+    # warm cache rather than computing the verify join once per branch.
     jac = tracked_persist(pair_jaccard(candidates, reps_with_text, cfg))
-    if eager_jaccard:
-        jac.count()
+    jac.count()
     near = jac.filter(F.col("jaccard") >= cfg.tau_extra).select(
         F.col("id_a").alias("src"),
         F.col("id_b").alias("dst"),

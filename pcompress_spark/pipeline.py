@@ -92,14 +92,13 @@ class DedupPipeline:
         the count is not free — a 100k-doc run at 100 partitions spends
         ~35 ms/task of pure scheduler latency across dozens of small
         stages, measured as the main 2->8-core efficiency sink (stages at
-        12-20%% utilization in the event log). Returns the previous
-        setting."""
+        12-20%% utilization in the event log). Never sets fewer
+        partitions than the session's current setting, which it
+        returns."""
         spark = self.spark
         prev = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        base = int(spark.conf.get("spark.pcompress.baseShufflePartitions", str(prev)))
-        spark.conf.set("spark.pcompress.baseShufflePartitions", str(base))
         spark.conf.set(
-            "spark.sql.shuffle.partitions", str(max(base, min(n, 4096)))
+            "spark.sql.shuffle.partitions", str(max(prev, min(n, 4096)))
         )
         return prev
 
@@ -177,9 +176,7 @@ class DedupPipeline:
         action hits a warm cache instead of concurrently (re)computing the
         verify join once per branch."""
         t0 = time.time()
-        edges_fuzzy = verify.verify_edges(
-            cands, reps, self.cfg, eager_jaccard=True
-        )
+        edges_fuzzy = verify.verify_edges(cands, reps, self.cfg)
         self.ckpt.note("verify_jaccard", int((time.time() - t0) * 1000))
         return edges_fuzzy.select("src", "dst", "jaccard", "kind")
 

@@ -1,14 +1,18 @@
 """Measured crossover curve: add_batch vs monolithic rerun by corpus:batch.
 
 The r3 gate asked add_batch to beat a full rerun 2x at a 5:1
-corpus:batch ratio; profiling (scripts/incr_profile.py) showed the
-per-batch cost is a fixed floor of small jobs, so the honest framing is
-a CROSSOVER CURVE: the same 10k-doc batch classified against nested
-corpora of 50k/100k/200k/400k docs, each compared with a monolithic
+corpus:batch ratio; profiling (now the per-phase trace of
+scripts/update_bench.py) showed the per-batch cost is a fixed floor of
+small jobs, so the honest framing is a CROSSOVER CURVE: the same
+10k-doc batch classified against nested corpora of
+50k/100k/200k/400k docs, each compared with a monolithic
 rerun over corpus+batch. add_batch stays ~flat (corpus-independence),
 the rerun scales with the corpus, and the curve reports the interpolated
 ratio where the increment path wins (speedup crosses 1.0) plus the
 speedup at each measured ratio.
+
+`--corpora 50000,100000` gives the two-point corpus-doubling check
+recorded in BENCH_INCR.json (32 cores).
 
 Writes BENCH_INCR_CURVE.json at the repo root.
 

@@ -218,7 +218,14 @@ def test_merge_bridges_existing_clusters(spark, tmp_path):
     boot = _as_map(idx.bootstrap(pages([("u://a", a), ("u://c", c)])))
     assert len(set(boot.values())) == 2, "bootstrap must make 2 clusters"
 
-    idx.add_batch(pages([("u://b", bridge)]))
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        idx.add_batch(pages([("u://b", bridge)]))
+        # the batch's phase names must not label the caller's later jobs
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
     res = _as_map(idx.assignments())
     assert len(res) == 3
     assert len(set(res.values())) == 1, f"expected one merged cluster: {res}"

@@ -1,5 +1,5 @@
 """Small-operator coverage: size parsing (F13), driver heap default,
-CRC32 (F5), sorted source (S5), fixed-block projection (P2)."""
+shuffle floor, CRC32 (F5), sorted source (S5), fixed-block projection (P2)."""
 
 import os
 import sys
@@ -80,22 +80,21 @@ def test_every_config_field_is_read():
     assert not unread, f"PipelineConfig fields nothing reads: {unread}"
 
 
-def test_rest_timestamps_parse_to_naive_utc():
-    """scripts/incr_profile.py: an offset-carrying ISO timestamp must come
-    back naive UTC, so it subtracts from the UI's GMT form instead of
-    raising TypeError (aware minus naive)."""
-    import importlib.util
-    import pathlib
-    from datetime import datetime
+def test_shuffle_floor_follows_session_setting(spark, tmp_path):
+    """The data-sized shuffle count is floored at the session's CURRENT
+    setting: one raised after a run holds for the next run."""
+    from pcompress_spark.pipeline import DedupPipeline
 
-    path = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "incr_profile.py"
-    spec = importlib.util.spec_from_file_location("incr_profile", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    aware = mod._parse_rest_ts("2026-01-01T02:00:00.500+02:00")
-    gmt = mod._parse_rest_ts("2026-01-01T00:00:01.500GMT")
-    assert aware == datetime(2026, 1, 1, 0, 0, 0, 500_000)
-    assert (gmt - aware).total_seconds() == 1.0
+    key = "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(key)
+    pipe = DedupPipeline(spark, PipelineConfig(), checkpoint_dir=str(tmp_path))
+    try:
+        pipe._set_shuffle_partitions(0)
+        spark.conf.set(key, "20")
+        pipe._set_shuffle_partitions(0)
+        assert spark.conf.get(key) == "20"
+    finally:
+        spark.conf.set(key, orig)
 
 
 def test_crc32_matches_zlib(spark):
@@ -160,6 +159,47 @@ def test_fixed_blocks_groups_shared_blocks(spark):
     multi = [r for r in agg.collect() if r.n_docs > 1]
     assert len(multi) == 1
     assert multi[0].n_docs == 2 and multi[0].rep_doc == 1
+
+
+def test_update_bench_attributes_jobs_to_phase_marks():
+    """scripts/update_bench.py: a job belongs to the phase whose mark
+    precedes its submission, time after the phases is `other`, marks
+    outside the window are ignored, and self times add up to the wall."""
+    import importlib.util
+    import json
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "update_bench.py"
+    spec = importlib.util.spec_from_file_location("update_bench", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def ev(d):
+        return json.dumps(d, separators=(",", ":"))  # the event log's form
+
+    def job(jid, start, end):
+        return [
+            ev({"Event": "SparkListenerJobStart", "Job ID": jid,
+                "Submission Time": start, "Stage IDs": [jid], "Properties": {}}),
+            ev({"Event": "SparkListenerJobEnd", "Job ID": jid,
+                "Completion Time": end}),
+        ]
+
+    log = job(1, 1100, 2000) + job(2, 3500, 5000) + job(3, 6500, 7500) + [
+        ev({"Event": "SparkListenerTaskEnd", "Stage ID": 2,
+            "Task Metrics": {"Executor Run Time": 1000}}),
+    ]
+    marks = [("incr:a", 1000), ("incr:b", 3000), ("other", 6000), ("incr:a", 9000)]
+    out = mod.trace_leg(log, marks, {"t0": 1000, "t1": 8000, "wall_s": 7.0})
+    ph = out["phases"]
+    assert {k: (v["jobs"], v["self_s"]) for k, v in ph.items()} == {
+        "incr:a": (1, 2.0),
+        "incr:b": (1, 3.0),
+        "other": (1, 2.0),
+    }
+    assert ph["incr:b"]["task_s"] == 1.0
+    assert out["driver"] == {"gap_s": 3.6, "jobs": 3}
+    assert out["residual_s"] == 0.0
 
 
 def test_scaling_bench_keeps_the_fuller_artifact(tmp_path):

@@ -108,7 +108,14 @@ def test_update_splits_cluster_built_by_merge(spark, tmp_path):
     before = _as_map(idx.assignments())
     assert len(set(before.values())) == 1, "precondition: one merged cluster"
 
-    idx.update_batch(_pages(spark, [("u://b", GARBAGE)]))
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        idx.update_batch(_pages(spark, [("u://b", GARBAGE)]))
+        # the batch's phase names must not label the caller's later jobs
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
     res = _as_map(idx.assignments())
     ida, idc, idb = (_did(spark, u) for u in ("u://a", "u://c", "u://b"))
     assert res == {ida: ida, idc: idc, idb: idb}, res
